@@ -3323,9 +3323,18 @@ final class Collection private (
     * EVERY row group provably contains none of the values. The skip
     * layer zone maps can't provide when a high-cardinality column's
     * values are uniformly spread across every file's [min,max].
-    * Footer + bloom-page reads only (no data pages); fanned out as one
-    * Spark job past 64 candidates. Conservative: a missing bloom, an
-    * unhashable literal, or a filter that pins nothing keeps the file. */
+    *
+    * Each pinned value is hashed once per query. The first probe of a
+    * file reads its footer and bloom pages (no data pages) and keeps
+    * the file's per-row-group bitsets in a JVM-wide cache; later probes
+    * of that file — from any handle, query face or thread — run in
+    * memory. The cache needs no invalidation because data files are
+    * immutable (a rewrite writes new names), and it is bounded by a
+    * share of the heap, cleared when full. Files not yet cached are
+    * read on the driver when 64 or fewer, else as one Spark job.
+    * Conservative: a missing bloom, an absent column, an unhashable
+    * literal, an IO failure or a filter that pins nothing keeps the
+    * file. */
   private def pruneByBloom(files: Seq[String], ast: FilterExpr.Ast,
                            man: Manifest): Seq[String] = {
     if (bloomColumns.isEmpty || files.isEmpty) return files
@@ -3342,15 +3351,19 @@ final class Collection private (
     }
     if (checks.isEmpty) return files
     val rootStr = root
-    if (files.size <= 64) {
-      val conf = spark.sessionState.newHadoopConf()
-      files.filter(f => bloomMayContain(rootStr, f, checks, conf))
-    } else {
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val uncached = files.filterNot(f => bloomsCached(rootStr, f, checks))
+    if (uncached.size <= 64) files.filter(f => bloomMayContain(rootStr, f, checks, conf))
+    else {
       val bc = spark.sparkContext.broadcast(
         new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-      spark.sparkContext.parallelize(files, math.min(files.size, 256))
+      val keptUncached = spark.sparkContext
+        .parallelize(uncached, math.min(uncached.size, 256))
         .filter(f => bloomMayContain(rootStr, f, checks, bc.value.value))
-        .collect().toSeq
+        .collect().toSet
+      val probedByJob = uncached.toSet
+      files.filter(f =>
+        if (probedByJob(f)) keptUncached(f) else bloomMayContain(rootStr, f, checks, conf))
     }
   }
 

@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   *  - shard/manifest JSON serialization and the content-addressed
   *    shard store;
   *  - zone-map/bloom skip-layer primitives ([[Collection.AxisDomain]],
-  *    footer stats decode, the JVM-wide bloom verdict memo);
+  *    footer stats decode, the JVM-wide bloom bitset cache);
   *  - the exclusive-publish commit arbitration
   *    ([[Collection.CommitArbiter]], built-in arbiters, scheme
   *    registry, [[graft.core.ConditionalPutArbiter]] plugging in via
@@ -311,135 +311,197 @@ private[graft] trait CollectionManifestLayer extends Serializable {
     * (domain-canonical `Long | Double | String`); a file whose blooms
     * prove every value absent from every row group cannot match. */
   private[core] final case class BloomCheck(
-      col: String, expectTsAdjusted: Option[Boolean], values: Seq[Any])
+      col: String, expectTsAdjusted: Option[Boolean], values: Seq[Any]) {
+    /** The values' bloom hashes in each physical form a chunk may store
+      * them in, computed once per check (a query builds its checks
+      * once); `None` for a form some value has no unambiguous encoding
+      * in. Hashed through a private filter instance: parquet's
+      * `BloomFilter.hash` writes a per-instance buffer, so shared
+      * cached filters never hash. */
+    @transient private[core] lazy val hashes: Map[BloomRepr, Option[Array[Long]]] = {
+      val h = new org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter(
+        org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter.LOWER_BOUND_BYTES)
+      BloomRepr.all.map { r =>
+        val hs = values.map(r.hash(h, _))
+        r -> (if (hs.forall(_.isDefined)) Some(hs.flatten.toArray) else None)
+      }.toMap
+    }
+  }
+
+  /** The physical form in which a bloom column's chunks store a value —
+    * what a pinned literal is hashed as. */
+  private[core] sealed abstract class BloomRepr {
+    def hash(h: org.apache.parquet.column.values.bloomfilter.BloomFilter, v: Any): Option[Long]
+  }
+  private[core] object BloomRepr {
+    import org.apache.parquet.column.values.bloomfilter.BloomFilter
+    case object Int64 extends BloomRepr {
+      def hash(h: BloomFilter, v: Any): Option[Long] =
+        v match { case l: Long => Some(h.hash(l)); case _ => None }
+    }
+    case object Int32 extends BloomRepr {
+      def hash(h: BloomFilter, v: Any): Option[Long] =
+        v match { case l: Long if l.isValidInt => Some(h.hash(l.toInt)); case _ => None }
+    }
+    case object Utf8 extends BloomRepr {
+      def hash(h: BloomFilter, v: Any): Option[Long] = v match {
+        case s: String => Some(h.hash(org.apache.parquet.io.api.Binary.fromString(s)))
+        case _         => None
+      }
+    }
+    case object Float64 extends BloomRepr {
+      def hash(h: BloomFilter, v: Any): Option[Long] =
+        v match { case d: Double => Some(h.hash(d)); case _ => None }
+    }
+    case object Float32 extends BloomRepr {
+      def hash(h: BloomFilter, v: Any): Option[Long] =
+        v match { case d: Double => Some(h.hash(d.toFloat)); case _ => None }
+    }
+    val all: Seq[BloomRepr] = Seq(Int64, Int32, Utf8, Float64, Float32)
+
+    /** The form a chunk of physical type `pt` stores a check's values in,
+      * or None when the type can't represent them unambiguously (then
+      * the file is never pruned on the check). */
+    def of(pt: org.apache.parquet.schema.PrimitiveType,
+           expectTs: Option[Boolean]): Option[BloomRepr] = {
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      import org.apache.parquet.schema.LogicalTypeAnnotation
+      pt.getPrimitiveTypeName match {
+        case INT64 => pt.getLogicalTypeAnnotation match {
+          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            // same domain discipline as the zone maps: only trust
+            // micros in the declared adjustment, the unit we write
+            if (expectTs.contains(t.isAdjustedToUTC) &&
+                t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS) Some(Int64)
+            else None
+          case _: LogicalTypeAnnotation.TimeLogicalTypeAnnotation => None
+          case _ => if (expectTs.isDefined) None else Some(Int64)
+        }
+        case INT32 if expectTs.isEmpty => Some(Int32)
+        case BINARY => pt.getLogicalTypeAnnotation match {
+          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => Some(Utf8)
+          case _ => None
+        }
+        case DOUBLE => Some(Float64)
+        case FLOAT  => Some(Float32)
+        case _      => None
+      }
+    }
+  }
+
+  /** One data file's bloom filters for one column, one per row group,
+    * with the chunks' physical type the probe hashes into. */
+  private[core] final class FileBlooms(
+      ptype: org.apache.parquet.schema.PrimitiveType,
+      filters: Array[org.apache.parquet.column.values.bloomfilter.BloomFilter]) {
+    val bytes: Long = filters.iterator.map(_.getBitsetSize.toLong).sum
+
+    /** Do the blooms prove every value of `chk` absent from every row
+      * group? Each filter is probed under its own lock: parquet 1.16's
+      * `findHash` writes a per-instance mask, and cached filters are
+      * shared by concurrent queries. */
+    def provesAbsent(chk: BloomCheck): Boolean =
+      BloomRepr.of(ptype, chk.expectTsAdjusted).flatMap(chk.hashes) match {
+        case Some(hs) => !filters.exists(f => f.synchronized(hs.exists(f.findHash)))
+        case None     => false
+      }
+  }
+
+  /** JVM-wide cache of each data file's per-row-group bloom filters for
+    * a column, keyed by (absolute file, physical column); `None` when
+    * the file can never be pruned on the column (some row group lacks
+    * the column or its bloom, no row groups, a foreign hash strategy).
+    * Sound without invalidation because data files are immutable:
+    * rewrites produce NEW names, so an entry never goes stale. Filled
+    * wherever a probe reads a footer — on a cluster each executor
+    * holds its own. Bounded by [[BloomCacheCapBytes]] of bitsets and
+    * cleared when a put would exceed it — a cache, not a store. */
+  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), Option[FileBlooms]]()
+  private var bloomCacheBytes = 0L // guarded by bloomCache
+  private val BloomCacheCapBytes = Runtime.getRuntime.maxMemory / 32
+  /** Per-entry overhead charged beside the bitsets (key, arrays). */
+  private val BloomEntryBytes = 256L
+
+  /** Footer opens performed by bloom checks in this JVM — the spec's
+    * observable for cache hits. */
+  private[core] val bloomFooterOpens = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private def bloomCachePut(k: (String, String), v: Option[FileBlooms]): Unit =
+    bloomCache.synchronized {
+      val bytes = BloomEntryBytes + v.fold(0L)(_.bytes)
+      if (bloomCacheBytes + bytes > BloomCacheCapBytes) {
+        bloomCache.clear()
+        bloomCacheBytes = 0L
+      }
+      if (bloomCache.putIfAbsent(k, v) == null) bloomCacheBytes += bytes
+    }
+
+  /** Are the blooms of every column of `checks` cached for this file? */
+  private[core] def bloomsCached(rootStr: String, rel: String,
+                                 checks: Seq[BloomCheck]): Boolean = {
+    val abs = absOf(rootStr, rel)
+    checks.forall(chk => bloomCache.containsKey((abs, chk.col)))
+  }
 
   /** Could this file contain a row satisfying every [[BloomCheck]]?
     * False ONLY on proof: for some check, every row group has a bloom
     * filter for the column, every value hashes unambiguously into the
     * column's physical type, and no hash hits. Anything less — missing
-    * bloom, unhashable literal, foreign physical type, IO failure —
-    * keeps the file. Runs on executors for large candidate sets. */
-  /** JVM-wide memo of bloom point-lookup verdicts, keyed by (absolute
-    * file, column, value) -> may-contain. Sound because data files are
-    * immutable (rewrites produce NEW names): a verdict never goes stale.
-    * Interactive workloads re-issuing point lookups skip the footer +
-    * bloom-page reads entirely; on a cluster each executor accumulates
-    * its own memo. Bounded: the map is cleared when it would exceed
-    * [[BloomVerdictCap]] entries (~tens of MB) — a memo, not a store. */
-  private val bloomVerdicts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Any), java.lang.Boolean]()
-  private val BloomVerdictCap = 1 << 20
-
-  /** Footer opens performed by bloom checks in this JVM — the spec's
-    * observable for verdict-cache hits. */
-  private[core] val bloomFooterOpens = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def bloomVerdictPut(k: (String, String, Any), v: Boolean): Unit = {
-    if (bloomVerdicts.size >= BloomVerdictCap) bloomVerdicts.clear()
-    bloomVerdicts.put(k, java.lang.Boolean.valueOf(v))
-  }
-
+    * bloom, absent column, unhashable literal, foreign physical type,
+    * IO failure — keeps the file. The file's blooms come from the
+    * cache; only a miss reads its footer and bloom pages (one open for
+    * every checked column). Runs on executors for large candidate sets. */
   private[core] def bloomMayContain(rootStr: String, rel: String,
                                     checks: Seq[BloomCheck],
-                                    conf: org.apache.hadoop.conf.Configuration): Boolean = {
+                                    conf: => org.apache.hadoop.conf.Configuration): Boolean = {
     val abs = absOf(rootStr, rel)
-    // memo fast path: a check passes once ANY value is known may-contain,
-    // prunes once EVERY value is known absent; only unresolved (col,
-    // value) pairs force the footer read below
-    val fromCache: Seq[Option[Boolean]] = checks.map { chk =>
-      val states = chk.values.map(v => Option(bloomVerdicts.get((abs, chk.col, v))))
-      if (states.exists(_.exists(_.booleanValue))) Some(true)
-      else if (states.forall(_.exists(b => !b.booleanValue))) Some(false)
-      else None
-    }
-    if (fromCache.contains(Some(false))) return false
-    if (fromCache.forall(_.contains(true))) return true
-    bloomMayContainUncached(rootStr, rel, checks, conf)
+    val cached = checks.map(chk => chk.col -> bloomCache.get((abs, chk.col)))
+    val blooms =
+      if (cached.forall(_._2 != null)) cached.toMap
+      else loadBlooms(abs, checks.map(_.col).distinct, conf) match {
+        case Some(loaded) => loaded
+        case None         => return true // IO failure: no proof, nothing cached
+      }
+    !checks.exists(chk => blooms(chk.col).exists(_.provesAbsent(chk)))
   }
 
-  private def bloomMayContainUncached(rootStr: String, rel: String,
-                                      checks: Seq[BloomCheck],
-                                      conf: org.apache.hadoop.conf.Configuration): Boolean =
+  /** Read one file's bloom filters for `cols` from its footer and bloom
+    * pages, and cache them. None on an IO failure (not cached: it may
+    * be transient). */
+  private def loadBlooms(abs: String, cols: Seq[String],
+                         conf: org.apache.hadoop.conf.Configuration)
+      : Option[Map[String, Option[FileBlooms]]] =
     try {
       bloomFooterOpens.incrementAndGet()
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(absOf(rootStr, rel)), conf)
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(abs), conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        if (blocks.isEmpty) return true
-        // canonical value -> bloom hash, or None when the physical type
-        // can't represent the literal unambiguously (then: never prune)
-        def hashOf(bloom: org.apache.parquet.column.values.bloomfilter.BloomFilter,
-                   cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
-                   expectTs: Option[Boolean], v: Any): Option[Long] = {
-          val pt = cc.getPrimitiveType
-          pt.getPrimitiveTypeName match {
-            case INT64 => pt.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                // same domain discipline as the zone maps: only trust
-                // micros in the declared adjustment, the unit we write
-                if (expectTs.contains(t.isAdjustedToUTC) &&
-                    t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS)
-                  v match { case l: Long => Some(bloom.hash(l)); case _ => None }
-                else None
-              case _: LogicalTypeAnnotation.TimeLogicalTypeAnnotation => None
-              case _ =>
-                if (expectTs.isDefined) None
-                else v match { case l: Long => Some(bloom.hash(l)); case _ => None }
-            }
-            case INT32 if expectTs.isEmpty =>
-              v match {
-                case l: Long if l.isValidInt => Some(bloom.hash(l.toInt))
-                case _                       => None
+      val loaded = try {
+        val blocks = reader.getFooter.getBlocks.asScala.toSeq
+        cols.map { c =>
+          val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString == c))
+          val entry =
+            if (blocks.isEmpty || chunks.size < blocks.size) None
+            else {
+              val filters = blocks.zip(chunks).map { case (b, cc) =>
+                reader.getBloomFilterDataReader(b).readBloomFilter(cc)
               }
-            case BINARY => pt.getLogicalTypeAnnotation match {
-              case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-                v match {
-                  case s: String =>
-                    Some(bloom.hash(org.apache.parquet.io.api.Binary.fromString(s)))
-                  case _ => None
-                }
-              case _ => None
+              val ptypes = chunks.map(_.getPrimitiveType).distinct
+              if (ptypes.size != 1 || filters.exists(f => f == null ||
+                  f.getHashStrategy !=
+                    org.apache.parquet.column.values.bloomfilter.BloomFilter.HashStrategy.XXH64))
+                None
+              else Some(new FileBlooms(ptypes.head, filters.toArray))
             }
-            case DOUBLE =>
-              v match { case d: Double => Some(bloom.hash(d)); case _ => None }
-            case FLOAT =>
-              v match { case d: Double => Some(bloom.hash(d.toFloat)); case _ => None }
-            case _ => None
-          }
-        }
-        // per-(column, value) verdicts across ALL row groups — the prune
-        // predicate re-associated value-wise (forall commutes) so every
-        // pair lands in the verdict memo for later queries
-        val abs = absOf(rootStr, rel)
-        val may = scala.collection.mutable.LinkedHashMap.empty[(String, Any), Boolean]
-        checks.foreach(chk => chk.values.foreach(v => may((chk.col, v)) = false))
-        blocks.foreach { b =>
-          checks.foreach { chk =>
-            b.getColumns.asScala.find(_.getPath.toDotString == chk.col) match {
-              case None => chk.values.foreach(v => may((chk.col, v)) = true)
-              case Some(cc) =>
-                val bloom = reader.getBloomFilterDataReader(b).readBloomFilter(cc)
-                chk.values.foreach { v =>
-                  val m = bloom == null || (hashOf(bloom, cc, chk.expectTsAdjusted, v) match {
-                    case Some(h) => bloom.findHash(h)
-                    case None    => true // unhashable: no proof of absence
-                  })
-                  if (m) may((chk.col, v)) = true
-                }
-            }
-          }
-        }
-        may.foreach { case ((c, v), m) => bloomVerdictPut((abs, c, v), m) }
-        !checks.exists(chk => chk.values.forall(v => !may((chk.col, v))))
+          c -> entry
+        }.toMap
       } finally reader.close()
+      loaded.foreach { case (c, e) => bloomCachePut((abs, c), e) }
+      Some(loaded)
     } catch {
       case e: Exception =>
-        statsLog.warn(s"bloom skip check unavailable for $rootStr/$rel: $e")
-        true
+        statsLog.warn(s"bloom skip check unavailable for $abs: $e")
+        None
     }
 
   private[core] lazy val statsLog =

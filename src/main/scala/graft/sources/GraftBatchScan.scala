@@ -96,9 +96,9 @@ final class PermutingReaderFactory(delegate: PartitionReaderFactory,
   * sections (`8 + 8*count` bytes, sorted rowids, binary-searched per
   * row), masked rows drop, and the row id projects back out — the
   * engine above sees exactly the live rows under the original schema.
-  * DV-free partitions keep the COLUMNAR (vectorized) reader untouched;
-  * only partitions that actually carry deletions fall back to the
-  * row-based reader (a columnar batch has no deletion mask).
+  * Built only when the plan carries deletion vectors, and then every
+  * partition reads row-based: Spark requires one columnar answer for
+  * the whole scan, and a columnar batch has no deletion mask.
   *
   * `rowIdOrdinal` is the widened read schema's row-id position (last
   * data column, before the partition columns); `outOrdinals` projects
@@ -120,26 +120,7 @@ final class DvFilteringReaderFactory(
   private def partitionDvs(p: InputPartition): Seq[graft.core.Collection.DvRef] =
     ParquetReadBridge.filePaths(p).map(norm).distinct.flatMap(dvNormed.get)
 
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    partitionDvs(p).isEmpty && delegate.supportColumnarReads(p)
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    require(partitionDvs(p).isEmpty, "columnar read planned over a DV'd partition")
-    // DV-free partition: zero-copy drop of the widened row-id vector so
-    // every path honors the scan's reported (original) schema
-    val inner = delegate.createColumnarReader(p)
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      override def next(): Boolean = inner.next()
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
-        val b = inner.get()
-        val cols = (0 until b.numCols()).filter(_ != rowIdOrdinal)
-          .map(b.column).toArray
-        new org.apache.spark.sql.vectorized.ColumnarBatch(cols, b.numRows())
-      }
-      override def close(): Unit = inner.close()
-    }
-  }
+  override def supportColumnarReads(p: InputPartition): Boolean = false
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val inner = delegate.createReader(p)
@@ -380,8 +361,8 @@ final class GraftBatchScan(spark: SparkSession,
     else {
       // DELETION VECTORS in the plan (r11): widen the read with the
       // persisted row-id column and mask per partition — see
-      // [[DvFilteringReaderFactory]]. Only this snapshot's DV'd files
-      // lose the columnar reader; everything else reads unchanged.
+      // [[DvFilteringReaderFactory]]. The whole scan reads row-based;
+      // a DV-free plan keeps the columnar reader.
       val rowIdField = org.apache.spark.sql.types.StructField(
         Collection.RowIdCol, org.apache.spark.sql.types.LongType)
       val fileWide = StructType(fileDataSchema.fields :+ rowIdField)

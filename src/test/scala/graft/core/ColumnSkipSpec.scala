@@ -157,22 +157,127 @@ class ColumnSkipSpec extends AnyFunSuite {
     val qn = c.query("user_id == 300 or v >= 3")
     assert(qn.count() == 1 + 200)
 
-    // verdict memo: an identical repeated point lookup answers every
-    // bloom check from the (file, column, value) cache — ZERO new footer
-    // opens — and still scans the same files with the same result
+    // bitset cache: a repeated point lookup answers every bloom check
+    // from the per-file bitsets cached by the lookups above — ZERO new
+    // footer opens — and still scans the same files with the same result
+    def ids(q: org.apache.spark.sql.DataFrame) =
+      q.select("id").collect().map(_.getLong(0)).sorted.toSeq
     val before = Collection.bloomFooterOpens.get()
     val qr = c.query("user_id == 300")
-    assert(qr.select("id").collect().map(_.getLong(0)).toSeq == Seq(300L))
+    assert(ids(qr) == Seq(300L))
     assert(qr.inputFiles.sorted.toSeq == q.inputFiles.sorted.toSeq)
     assert(Collection.bloomFooterOpens.get() == before,
       s"repeated lookup re-opened ${Collection.bloomFooterOpens.get() - before} footers")
-    // a NEW value over the same files pays its footer reads exactly once
-    assert(c.query("user_id == 303").count() == 1)
-    val afterNew = Collection.bloomFooterOpens.get()
-    assert(afterNew > before, "an uncached value must read footers")
-    assert(c.query("user_id == 303").count() == 1)
-    assert(Collection.bloomFooterOpens.get() == afterNew,
-      "second lookup of the new value must be memoized")
+    // a NEW value over files already probed hashes against the cached
+    // bitsets: still zero opens
+    assert(ids(c.query("user_id == 303")) == Seq(303L))
+    assert(ids(c.query("user_id in (304, 602)")) == Seq(304L))
+    assert(Collection.bloomFooterOpens.get() == before,
+      "a new value over probed files must not re-read their footers")
+    // the cache is per file, not per handle: a fresh open opens zero too
+    val fresh = Collection.open(spark, root)
+    assert(ids(fresh.query("user_id == 305")) == Seq(305L))
+    assert(Collection.bloomFooterOpens.get() == before,
+      "a fresh handle over probed files must not re-read their footers")
+    // compaction writes NEW files: the next lookup opens exactly those
+    val filesBefore = c.currentManifest().files.toSet
+    c.compact()
+    val rewritten = c.currentManifest().files.toSet -- filesBefore
+    assert(rewritten.nonEmpty, "compaction must rewrite the fragmented day")
+    val beforeCompacted = Collection.bloomFooterOpens.get()
+    assert(ids(c.query("user_id == 306")) == Seq(306L))
+    assert(Collection.bloomFooterOpens.get() - beforeCompacted == rewritten.size,
+      s"want ${rewritten.size} opens (the rewritten files), got " +
+        s"${Collection.bloomFooterOpens.get() - beforeCompacted}")
+
+    // soundness inputs, each of which must KEEP the file:
+    //  (1) a bloom column absent from some files' row groups: `tag` is
+    //      dropped, a day is written without it, and addVariable brings
+    //      it back — that day's files hold no chunk to prove anything;
+    //  (2) a literal that does not hash into the physical type:
+    //      3000000000 fits no INT32, so no `bucket` bloom can refute it.
+    val sroot = SparkTestSession.tmp("graft-bloom-sound")
+    def tagged(day: Int, lo: Long) = (lo until lo + 30L)
+      .map(i => (i, f"2024-01-$day%02d 08:00:00", i.toInt, s"t$i"))
+      .toDF("id", "ts", "bucket", "tag").withColumn("ts", col("ts").cast("timestamp"))
+    val t = Collection.create(spark, sroot, tagged(1, 0L).schema, "ts",
+      DatePartitioning("ts", "D"), bloomColumns = Seq("bucket", "tag"),
+      bloomNdv = Map("bucket" -> 100L, "tag" -> 100L))
+    t.insert(tagged(1, 0L), MergeStrategy.Concat)
+    t.dropVariable("tag")
+    val day1 = t.currentManifest().files.toSet
+    t.insert(tagged(2, 100L).drop("tag"), MergeStrategy.Concat)
+    val untagged = t.currentManifest().files.toSet -- day1
+    t.addVariable("tag", org.apache.spark.sql.types.StringType)
+    t.insert(tagged(3, 200L), MergeStrategy.Concat)
+    val all = t.currentManifest().files.toSet
+    def scanned(q: org.apache.spark.sql.DataFrame) =
+      q.inputFiles.map(f => all.find(rel => f.endsWith(rel)).get).toSet
+    val qt = t.query("tag == 't205'")
+    assert(ids(qt) == Seq(205L))
+    assert(untagged.subsetOf(scanned(qt)),
+      s"files without the column must be kept: ${untagged -- scanned(qt)}")
+    assert((day1 -- scanned(qt)).nonEmpty, "day 1's tag blooms must still prune")
+    // `bucket` is the INT32 id (distinct values, so parquet writes
+    // plain pages and a bloom): 50 is refuted everywhere, 3000000000
+    // nowhere. The bloom layer's verdict is read from explainPruning:
+    // Spark itself folds an out-of-range INT comparison to false, so
+    // the scan's own file list would hide it.
+    def afterBloom(f: String) = t.explainPruning(f).filesAfterBloom
+    assert(afterBloom("bucket == 50") == 0 && ids(t.query("bucket == 50")).isEmpty)
+    for (f <- Seq("bucket == 3000000000", "bucket in (50, 3000000000)")) {
+      assert(afterBloom(f) == all.size, f)
+      assert(ids(t.query(f)).isEmpty, f)
+    }
+    assert(afterBloom("bucket in (3, 3000000000)") == all.size)
+    assert(ids(t.query("bucket in (3, 3000000000)")) == Seq(3L))
+  }
+
+  test("concurrent bloom lookups match plain Spark on the driver and the Spark-job paths") {
+    // 8 threads, distinct values, half present and half absent, against
+    // one shared handle; the blooms are uncached when the threads start
+    def check(days: Int, label: String): Unit = {
+      val rows = (0 until days * 10).map { i =>
+        val ts = java.time.LocalDate.of(2024, 1, 1).plusDays(i / 10) + " 08:00:00"
+        (i.toLong, ts, i * 7L, 1.0)
+      }
+      val src = mkUsers(rows)
+      val root = SparkTestSession.tmp(s"graft-bloom-conc-$label")
+      val c = Collection.create(spark, root, src.schema, "ts",
+        DatePartitioning("ts", "D"), bloomColumns = Seq("user_id"),
+        bloomNdv = Map("user_id" -> 100L))
+      c.insert(src, MergeStrategy.Concat)
+      val files = c.currentManifest().files.size
+      assert(if (days > 64) files > 64 else files <= 64, s"$label: $files files")
+      // thread t: present p (some row's user_id), absent p + 3
+      val lookups = (0 until 8).map { t =>
+        val p = ((t * 37 + 5) % (days * 10)) * 7L
+        if (t % 2 == 0) Seq(s"user_id == $p", s"user_id == ${p + 3}")
+        else Seq(s"user_id in ($p, ${p + 3})", s"user_id in (${p + 3}, ${p + 10 * days * 7})")
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      try {
+        val futures = lookups.map(fs => pool.submit(new java.util.concurrent.Callable[Seq[Seq[Long]]] {
+          def call(): Seq[Seq[Long]] = {
+            start.await()
+            fs.map(f => c.query(f).select("id").collect().map(_.getLong(0)).sorted.toSeq)
+          }
+        }))
+        start.countDown()
+        lookups.zip(futures).foreach { case (fs, fut) =>
+          val got = fut.get(300, java.util.concurrent.TimeUnit.SECONDS)
+          fs.zip(got).foreach { case (f, g) =>
+            val want = src.where(f).select("id").collect().map(_.getLong(0)).sorted.toSeq
+            assert(g == want, s"$label: $f gave $g, plain Spark $want")
+          }
+        }
+      } finally pool.shutdownNow()
+      // every absent value is refuted by the blooms
+      assert(c.query(lookups.head(1)).inputFiles.length < files)
+    }
+    check(days = 12, "driver")
+    check(days = 70, "job")
   }
 
   test("is null / is not null: zero-null files prune for IS NULL; negations stay sound") {

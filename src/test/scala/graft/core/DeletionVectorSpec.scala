@@ -88,6 +88,32 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(c.generation == genBefore)
   }
 
+  test("native scans over files with and without a DV: format(\"graft\") and catalog SQL") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft.warehouse", graft.CatalogSpec.warehouse)
+    val root = s"${graft.CatalogSpec.warehouse}/dvmix/events"
+    val c = dvColl(root)
+    assert(c.deleteWhere("user_id >= 10 and user_id < 15").size == 1)
+    val man = c.currentManifest()
+    assert(man.files.size == 3 && man.allDvs.size == 1,
+      s"one of three files carries the DV: ${man.allDvs}")
+    // every row has v = 1.0; no filter, so every scan mixes the DV'd
+    // file with the two DV-free ones
+    val live = ((0L until 50L) ++ (100L until 150L) ++ (200L until 250L))
+      .filterNot(i => i >= 10 && i < 15)
+    val want = Seq(live.size.toLong, live.sum, live.size.toDouble)
+    val viaFormat = spark.read.format("graft").load(root)
+      .agg(count(lit(1)), sum("user_id"), sum("v")).head()
+    assert(viaFormat.toSeq == want)
+    val viaSql = spark.sql(
+      "SELECT count(*), sum(user_id), sum(v) FROM graft.dvmix.events").head()
+    assert(viaSql.toSeq == want)
+    val perDay = spark.sql(
+      "SELECT day(ts) AS d, sum(v) FROM graft.dvmix.events GROUP BY day(ts) ORDER BY d")
+      .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
+    assert(perDay == Seq((1, 95.0), (2, 50.0)))
+  }
+
   test("per-file adaptive: heavy file rewrites, light file keeps a DV, one commit") {
     val root = SparkTestSession.tmp("graft-dv-adaptive")
     val c = dvColl(root)
