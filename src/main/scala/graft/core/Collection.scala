@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ManifestRead
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType,
   LongType, ShortType, StringType, StructField, StructType}
 
@@ -1354,68 +1355,43 @@ final class Collection private (
     // COLUMN RENAMES (r11): request the files' PHYSICAL names, alias
     // back to the declared logical names — physical names are pinned at
     // add time, so one mapping serves every file of every generation
-    def parquetByBase(fs: Seq[String], flds: Seq[StructField]): DataFrame =
-      parquetByBaseRenamed(fs, flds, man.renames)
-    var df =
-      if (dvs.isEmpty) parquetByBase(files, fields)
-      else {
-        // Split the scan: only DV'd files pay the rowid anti-join —
-        // clean files (the overwhelming majority at any scale) plan
-        // exactly the old read. The DV side stays broadcastable by
-        // construction (the delete path caps DV cardinality and falls
-        // back to rewrite beyond it); if accumulated counts ever exceed
-        // the cap the join degrades to a shuffle, never to wrong rows.
-        val withDv = files.filter(dvs.contains)
-        val clean = files.filterNot(dvs.contains)
-        val dvRows = DeletionVectors.rowsDf(spark, dvs.values.toSeq,
-          p => Collection.absOf(root, p))
-        val right =
-          if (dvs.values.map(_.count).sum <= Collection.DvBroadcastMaxRows)
-            broadcast(dvRows)
-          else dvRows
-        val masked = parquetByBase(withDv, fields)
-          .join(right, col(Collection.RowIdCol) === col("_zc_dv_row"), "left_anti")
-        if (clean.isEmpty) masked
-        else parquetByBase(clean, fields).union(masked)
+    val renames = man.renames
+    val physical = StructType(fields.map(f =>
+      renames.get(f.name).fold(f)(p => f.copy(name = p))))
+    // One scan over every reference base, its files and sizes served by
+    // the manifest (no listing, no existence checks): local refs sit
+    // under `root`, clone-external refs under their source root, and
+    // partition columns derive identically from either tree. Deletion
+    // vectors mask inside the scan, each task reading its own files'
+    // sections.
+    val sizeOf = fileSizes(man, files)
+    val trees = files.groupBy(Collection.baseOf).toSeq
+      .sortBy(_._1.getOrElse("")) // deterministic plan across runs
+      .map { case (base, group) =>
+        base.getOrElse(root) -> group.map(f => Collection.absOf(root, f) -> sizeOf(f))
       }
+    val scan = ManifestRead.dataFrame(spark, trees, physical,
+      dvs.map { case (f, r) =>
+        Collection.absOf(root, f) -> r.copy(path = Collection.absOf(root, r.path))
+      })
+    var df =
+      if (fields.forall(f => !renames.contains(f.name))) scan
+      else scan.select(fields.map(f =>
+        col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
     for ((c, fillSql) <- man.fills if dataSchema.fieldNames.contains(c))
       df = df.withColumn(c, coalesce(col(c), expr(fillSql).cast(dataSchema(c).dataType)))
     df.select(fields.map(f => col(f.name)): _*)
   }
 
-  /** One parquet scan per reference base (the clone-aware read shape):
-    * local refs scan under `root`, external refs under their source
-    * root — each group with ITS root as `basePath`, so Hive partition
-    * columns derive identically from either tree, then a by-position
-    * union (every group declares the same read schema). A collection
-    * with no external refs — the overwhelmingly common case — is
-    * exactly the old single scan. */
-  private def parquetByBase(files: Seq[String],
-                            fields: Seq[StructField]): DataFrame =
-    parquetByBaseRenamed(files, fields, Map.empty)
-
-  /** [[parquetByBase]] under a column-rename mapping (r11): the scan
-    * requests each field's PHYSICAL name and the result aliases back to
-    * the logical one. Identity mapping = the plain scan (no extra
-    * Project planned: the select collapses). */
-  private def parquetByBaseRenamed(files: Seq[String], fields: Seq[StructField],
-                                   renames: Map[String, String]): DataFrame = {
-    val physFields = fields.map(f =>
-      renames.get(f.name).fold(f)(p => f.copy(name = p)))
-    val schema = StructType(physFields)
-    val scan = files.groupBy(Collection.baseOf).toSeq
-      .sortBy(_._1.getOrElse("")) // deterministic plan across runs
-      .map { case (base, group) =>
-        val b = base.getOrElse(root)
-        spark.read
-          .option("basePath", b)
-          .schema(schema)
-          .parquet(group.map(f => Collection.absOf(root, f)): _*)
-      }
-      .reduce(_ union _)
-    if (renames.isEmpty || fields.forall(f => !renames.contains(f.name))) scan
-    else scan.select(fields.map(f =>
-      col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
+  /** Byte length of each of `files` (manifest refs): the size the
+    * manifest recorded, or one `getFileStatus` for an entry written
+    * before sizes were recorded. */
+  private def fileSizes(man: Manifest, files: Seq[String]): String => Long = {
+    val recorded = man.bytesForFiles(files)
+    f => recorded.getOrElse(f, {
+      val p = new Path(Collection.absOf(root, f))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+    })
   }
 
   /** The committed manifest at `gen` (cached; manifests are immutable). */
@@ -2964,7 +2940,7 @@ final class Collection private (
       : Option[Seq[Collection.NativeFile]] = {
     val keyTypes = partCols.map(c => partitioning.colType(c, schema))
     if (!keyTypes.forall(Collection.nativeKeyType)) return None
-    val bytes = man.bytesForFiles(selected)
+    val sizeOf = fileSizes(man, selected)
     val dvs = man.dvsForFiles(selected)
     val keyCache = scala.collection.mutable.Map.empty[String, Option[Seq[Any]]]
     val out = Seq.newBuilder[Collection.NativeFile]
@@ -2979,13 +2955,7 @@ final class Collection private (
         }) match {
         case None => return None
         case Some(key) =>
-          val abs = Collection.absOf(root, f)
-          val len = bytes.getOrElse(f, {
-            val p = new Path(abs)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .getFileStatus(p).getLen
-          })
-          out += Collection.NativeFile(abs, len, key,
+          out += Collection.NativeFile(Collection.absOf(root, f), sizeOf(f), key,
             dvs.get(f).map(r => r.copy(path = Collection.absOf(root, r.path))))
       }
     }
@@ -3712,15 +3682,16 @@ final class Collection private (
   def map[A](fn: DataFrame => A, filters: String = null,
              variables: Seq[String] = null,
              maxPartitions: Int = 1024): Seq[(String, A)] = {
-    val fields = readSchemaFields(schema)
-    val parts = partitions(filters)
+    val man = currentManifest()
+    val parts = partitionsFrom(man, FilterExpr.parse(filters))
     // loads only the matching partitions' shards
-    val byPart = currentManifest().filesForPartitions(parts.toSet).groupBy(parentRel)
+    val byPart = man.filesForPartitions(parts.toSet).groupBy(parentRel)
     require(parts.size <= maxPartitions,
       s"map() would run ${parts.size} sequential driver-side jobs (> $maxPartitions); " +
       "use transformPartitions for distributed per-partition work, or raise maxPartitions")
     parts.map { p =>
-      val df = parquetByBase(byPart(p), fields)
+      // the snapshot read: deletion vectors, renames and fills apply
+      val df = readManifestFiles(man, byPart(p))
         .select(schema.fieldNames.toSeq.map(col): _*)
       // variables whitelist (reference map(..., variables=)): projection
       // after the immutable merge, so immutable columns are selectable;
@@ -3935,7 +3906,11 @@ final class Collection private (
                              augment: DataFrame => DataFrame = identity)
       : Option[Map[String, Array[Long]]] = {
     val byAbs = affected
-      .map(f => new Path(absOf(root, f)).toUri.getPath -> f).toMap
+      .map(f => DeletionVectors.pathKey(new Path(absOf(root, f))) -> f).toMap
+    // input_file_name() is URL-encoded: decode before the lookup, or a
+    // partition path holding a space, ':' or '%' never matches
+    def fileOf(r: org.apache.spark.sql.Row): String =
+      byAbs(new java.net.URI(r.getString(0)).getPath)
     // file provenance is stamped BEFORE `augment`: input_file_name()
     // refuses plans with a second source (the subquery flag join), and
     // stamping in the scan-stage projection is also what keeps it exact
@@ -3948,7 +3923,7 @@ final class Collection private (
     // rewrite path rather than guessing provenance
     def provenanceLost(rows: Array[org.apache.spark.sql.Row]): Boolean =
       rows.exists(r => r.isNullAt(0) || r.getString(0).isEmpty ||
-        !byAbs.contains(new Path(r.getString(0)).toUri.getPath))
+        !byAbs.contains(new java.net.URI(r.getString(0)).getPath))
     lastVictimPassMismatch = false
     // r15 (the r14 advice): pass 1 also folds a constant-state XOR
     // checksum of the matched rowids per file, so pass 2 can detect an
@@ -3963,10 +3938,8 @@ final class Collection private (
     victimPassBarrier()
     if (counts.iterator.map(_.getLong(1)).sum > Collection.DvMaxTotalRows) return None
     if (provenanceLost(counts)) return None
-    val byFile = counts.map(r =>
-      byAbs(new Path(r.getString(0)).toUri.getPath) -> r.getLong(1)).toMap
-    val xorByFile = counts.map(r =>
-      byAbs(new Path(r.getString(0)).toUri.getPath) -> r.getLong(2)).toMap
+    val byFile = counts.map(r => fileOf(r) -> r.getLong(1)).toMap
+    val xorByFile = counts.map(r => fileOf(r) -> r.getLong(2)).toMap
     val lightFiles = byFile.collect {
       case (f, n) if n <= Collection.DvMaxPerFile => f
     }.toSeq.sorted
@@ -3984,9 +3957,7 @@ final class Collection private (
           .agg(sort_array(collect_list(col(Collection.RowIdCol))).as("_zc_ids"))
           .collect()
         if (provenanceLost(rows)) return None
-        val got = rows.map { r =>
-          byAbs(new Path(r.getString(0)).toUri.getPath) -> r.getSeq[Long](1).toArray
-        }.toMap
+        val got = rows.map(r => fileOf(r) -> r.getSeq[Long](1).toArray).toMap
         // r14 (r13 advice): the two passes are separate jobs — an
         // `augment` over mutable external state (a swapped temp view, a
         // rewritten upstream table) can answer differently in each. A

@@ -543,7 +543,7 @@ private[graft] trait CollectionManifestLayer extends Serializable {
     * manifest so metadata row counts stay exact with zero DV IO. A file
     * has at most ONE ref — a second delete merges (unions) into a fresh
     * section, copy-on-write, so manifests stay immutable snapshots. */
-  private[graft] final case class DvRef(path: String, offset: Long, count: Long) {
+  final case class DvRef(path: String, offset: Long, count: Long) {
     /** Section byte length: magic(4) + count(4) + 8*count. */
     def length: Long = 8L + 8L * count
   }

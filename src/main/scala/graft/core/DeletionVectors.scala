@@ -27,19 +27,19 @@ import Collection.DvRef
   * and falls back to the classic file rewrite beyond the caps, exactly
   * the regime where a rewrite is the cheaper plan anyway. Readers are
   * fully distributed: each executor task reads only its own files'
-  * sections ([[DeletionVectors.rowsDf]] fans the section reads out as a
-  * Spark job; the native scan reads sections inside the partition
-  * reader). */
-private[graft] object DeletionVectors {
+  * sections inside the scan — the native scan's partition reader and
+  * the DataFrame read's file format both mask through [[mask]]. Public
+  * only for that file format, which lives in Spark's package. */
+object DeletionVectors {
 
-  val DvDir = "_dv"
-  val Magic = 0x5a445631 // "ZDV1"
+  private[graft] val DvDir = "_dv"
+  private[graft] val Magic = 0x5a445631 // "ZDV1"
 
   /** Write one DV file with a section per data file; returns each data
     * file's ref (path root-relative). Sections are written in sorted
     * data-file order for determinism. */
-  def write(fs: FileSystem, root: String,
-            sections: Seq[(String, Array[Long])]): Map[String, DvRef] = {
+  private[graft] def write(fs: FileSystem, root: String,
+                           sections: Seq[(String, Array[Long])]): Map[String, DvRef] = {
     require(sections.nonEmpty, "no DV sections to write")
     val rel = s"$DvDir/dv-${java.util.UUID.randomUUID().toString}.bin"
     val p = new Path(s"$root/$rel")
@@ -67,7 +67,7 @@ private[graft] object DeletionVectors {
     * DV file path — callers resolve clone-external refs via
     * [[Collection.absOf]] first. Magic/count mismatches fail loudly:
     * a damaged DV silently read short would RESURRECT deleted rows. */
-  def readSection(conf: Configuration, abs: String, ref: DvRef): Array[Long] = {
+  private[graft] def readSection(conf: Configuration, abs: String, ref: DvRef): Array[Long] = {
     val p = new Path(abs)
     val in = p.getFileSystem(conf).open(p)
     try {
@@ -86,13 +86,29 @@ private[graft] object DeletionVectors {
     } finally in.close()
   }
 
+  /** The deleted rowids of `refs` merged into one mask. `refs` carry
+    * ABSOLUTE DV paths; a scan task passes its own files' refs (rowids
+    * are globally unique, so several files' sections merge into one
+    * sorted array, probed by binary search per row). */
+  def mask(conf: Configuration, refs: Seq[DvRef]): DvMask = {
+    val all = refs.flatMap(r => readSection(conf, r.path, r)).toArray
+    java.util.Arrays.sort(all)
+    new DvMask(all)
+  }
+
+  /** The key a data file's deletion vector is found under: the decoded
+    * path without scheme or authority. Manifest paths and a scan's
+    * `PartitionedFile` paths (URL-encoded) agree on it only after
+    * decoding. */
+  def pathKey(p: Path): String = p.toUri.getPath
+
   /** The deleted rowids of `refs` as a one-column DataFrame `(row)` —
-    * the anti-join side of the DataFrame read path. Distributed: one
-    * task per section batch reads its own bytes; nothing accumulates on
-    * the driver. `resolve` maps each ref's root-relative path to the
+    * the change feed's DV delta joins against it. Distributed: one task
+    * per section batch reads its own bytes; nothing accumulates on the
+    * driver. `resolve` maps each ref's root-relative path to the
     * absolute one (clone-aware). */
-  def rowsDf(spark: SparkSession, refs: Seq[DvRef],
-             resolve: String => String): DataFrame = {
+  private[graft] def rowsDf(spark: SparkSession, refs: Seq[DvRef],
+                            resolve: String => String): DataFrame = {
     val conf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     // distinct sections only (several data files can share a path but
@@ -111,4 +127,10 @@ private[graft] object DeletionVectors {
       org.apache.spark.sql.types.StructField("_zc_dv_row",
         org.apache.spark.sql.types.LongType, nullable = false))))
   }
+}
+
+/** A sorted set of deleted rowids ([[DeletionVectors.mask]]). */
+final class DvMask private[graft] (sorted: Array[Long]) {
+  def deleted(rowId: Long): Boolean =
+    java.util.Arrays.binarySearch(sorted, rowId) >= 0
 }

@@ -101,8 +101,8 @@ final class PermutingReaderFactory(delegate: PartitionReaderFactory,
   * the whole scan, and a columnar batch has no deletion mask.
   *
   * `rowIdOrdinal` is the widened read schema's row-id position (last
-  * data column, before the partition columns); `outOrdinals` projects
-  * the original output. */
+  * data column, before the partition columns); `outTypes` are the
+  * original output's column types. */
 final class DvFilteringReaderFactory(
     delegate: PartitionReaderFactory,
     dvByPath: Map[String, graft.core.Collection.DvRef],
@@ -111,56 +111,35 @@ final class DvFilteringReaderFactory(
     outTypes: Array[org.apache.spark.sql.types.DataType])
     extends PartitionReaderFactory {
 
-  private def norm(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
-  private val dvNormed: Map[String, graft.core.Collection.DvRef] =
-    dvByPath.map { case (p, r) => norm(p) -> r }
+  private val dvByKey: Map[String, graft.core.Collection.DvRef] =
+    dvByPath.map { case (p, r) =>
+      graft.core.DeletionVectors.pathKey(new org.apache.hadoop.fs.Path(p)) -> r
+    }
 
   private def partitionDvs(p: InputPartition): Seq[graft.core.Collection.DvRef] =
-    ParquetReadBridge.filePaths(p).map(norm).distinct.flatMap(dvNormed.get)
+    ParquetReadBridge.filePaths(p).map(graft.core.DeletionVectors.pathKey)
+      .distinct.flatMap(dvByKey.get)
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val inner = delegate.createReader(p)
-    val refs = partitionDvs(p)
-    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(outTypes.zipWithIndex.map { case (dt, i) =>
-        val from = if (i < rowIdOrdinal) i else i + 1
-        org.apache.spark.sql.catalyst.expressions.BoundReference(from, dt, true)
-          : org.apache.spark.sql.catalyst.expressions.Expression
-      }.toSeq)
-    if (refs.isEmpty)
-      new PartitionReader[InternalRow] {
-        override def next(): Boolean = inner.next()
-        override def get(): InternalRow = proj(inner.get())
-        override def close(): Unit = inner.close()
-      }
-    else {
-      // one sorted rowid array per partition (rowids are globally
-      // unique, so the per-file sections merge into one mask)
-      val mask: Array[Long] = {
-        val all = refs.flatMap(r =>
-          graft.core.DeletionVectors.readSection(conf.value, r.path, r)).toArray
-        java.util.Arrays.sort(all)
-        all
-      }
-      new PartitionReader[InternalRow] {
-        private var current: InternalRow = _
-        override def next(): Boolean = {
-          while (inner.next()) {
-            val r = inner.get()
-            if (java.util.Arrays.binarySearch(mask, r.getLong(rowIdOrdinal)) < 0) {
-              current = proj(r)
-              return true
-            }
+    val mask = graft.core.DeletionVectors.mask(conf.value, partitionDvs(p))
+    val proj = ParquetReadBridge.withoutColumn(outTypes.toSeq, rowIdOrdinal)
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (inner.next()) {
+          val r = inner.get()
+          if (!mask.deleted(r.getLong(rowIdOrdinal))) {
+            current = proj(r)
+            return true
           }
-          false
         }
-        override def get(): InternalRow = current
-        override def close(): Unit = inner.close()
+        false
       }
+      override def get(): InternalRow = current
+      override def close(): Unit = inner.close()
     }
   }
 }

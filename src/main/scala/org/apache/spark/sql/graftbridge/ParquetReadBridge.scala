@@ -102,13 +102,25 @@ object ParquetReadBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.filesOpenCostInBytes
 
-  /** The file paths inside an executable partition built by
+  /** The file paths (decoded) inside an executable partition built by
     * [[filePartition]] — the deletion-vector reader wrapper keys its
     * per-partition rowid mask on them (r11). */
-  def filePaths(p: InputPartition): Seq[String] = p match {
-    case fp: FilePartition => fp.files.toSeq.map(_.filePath.toString)
+  def filePaths(p: InputPartition): Seq[org.apache.hadoop.fs.Path] = p match {
+    case fp: FilePartition => fp.files.toSeq.map(_.toPath)
     case _                 => Nil
   }
+
+  /** Projects rows holding one extra column at `ordinal` back to
+    * `types` — how the deletion-vector readers drop the row id they
+    * widened the read with. */
+  def withoutColumn(types: Seq[org.apache.spark.sql.types.DataType], ordinal: Int)
+      : org.apache.spark.sql.catalyst.expressions.UnsafeProjection =
+    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(types.zipWithIndex.map { case (dt, i) =>
+        org.apache.spark.sql.catalyst.expressions.BoundReference(
+          if (i < ordinal) i else i + 1, dt, nullable = true)
+          : org.apache.spark.sql.catalyst.expressions.Expression
+      })
 
   /** A serializable Hadoop configuration capsule for executor-side
     * section reads (the same shape [[readerFactory]] broadcasts). */

@@ -114,6 +114,93 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(perDay == Seq((1, 95.0), (2, 50.0)))
   }
 
+  test("a DV'd read over 33+ files plans from the manifest: no job, no anti-join, no broadcast") {
+    val root = SparkTestSession.tmp("graft-dv-manifest-read")
+    val days = 36
+    // one file per day, ten users a day
+    val data = (0L until days * 10L)
+      .map(i => (i, java.time.LocalDate.of(2024, 1, 1).plusDays(i / 10).toString + " 08:00:00",
+        i % 10, i.toDouble))
+      .toDF("id", "ts", "user_id", "v")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val c = Collection.create(spark, root, data.schema, "ts",
+      DatePartitioning("ts", "D"), statsColumns = Seq("user_id"),
+      attrs = Map(Collection.DvEnabledAttr -> "true"))
+    c.insert(data, MergeStrategy.Concat)
+    c.deleteWhere("user_id < 2")
+    val man = c.currentManifest()
+    assert(man.files.size == days && man.allDvs.keySet == man.files.toSet,
+      s"every one of $days files carries a DV: ${man.files.size} files, ${man.allDvs.size} DVs")
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val q =
+      try {
+        org.apache.spark.TestListenerBus.drain(sc)
+        jobs.set(0)
+        val built = c.query("user_id >= 1")
+        org.apache.spark.TestListenerBus.drain(sc)
+        assert(jobs.get == 0, s"building the read ran ${jobs.get} Spark job(s)")
+        built
+      } finally sc.removeSparkListener(listener)
+    assert(q.inputFiles.length == days)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("LeftAnti") && !plan.contains("BroadcastExchange"), plan)
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "ts", "user_id", "v").collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(rows(q) == rows(data.where("user_id >= 2")))
+    // projections without the row id still mask
+    assert(q.select("v").collect().map(_.getDouble(0)).sorted.toSeq ==
+      data.where("user_id >= 2").select("v").collect().map(_.getDouble(0)).sorted.toSeq)
+
+    // a data file removed behind the manifest's back fails the read
+    // with its path; it is never skipped
+    val gone = new org.apache.hadoop.fs.Path(Collection.absOf(root, man.files.head))
+    gone.getFileSystem(sc.hadoopConfiguration).delete(gone, false)
+    val e = intercept[Exception](c.query().count())
+    val messages = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains(gone.getName), messages)
+  }
+
+  test("DVs mask files whose partition paths need escaping, on every read face") {
+    val root = SparkTestSession.tmp("graft-dv-escaped")
+    val data = Seq("a b", "x:y", "p%q").zipWithIndex
+      .flatMap { case (s, k) => (0L until 10L).map(i => (s, k * 10L + i)) }
+      .toDF("s", "id")
+    val c = Collection.create(spark, root, data.schema, "s",
+      SequencePartitioning(Seq("s"), "s"), statsColumns = Seq("id"),
+      attrs = Map(Collection.DvEnabledAttr -> "true"))
+    c.insert(data, MergeStrategy.Concat)
+    c.deleteWhere("id < 2 or (id >= 10 and id < 12) or (id >= 20 and id < 22)")
+    assert(c.currentManifest().allDvs.size == 3, "each file keeps a DV, none is rewritten")
+    val want = data.where("id % 10 >= 2").collect().map(_.toSeq).sortBy(_(1).toString).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("s", "id").collect().map(_.toSeq).sortBy(_(1).toString).toSeq
+    assert(rows(c.query()) == want)
+    assert(rows(spark.read.format("graft").load(root)) == want)
+  }
+
+  test("map reads the snapshot: deletion vectors, renames and fills apply") {
+    val root = SparkTestSession.tmp("graft-dv-map")
+    val c = dvColl(root)
+    c.deleteWhere("user_id >= 10 and user_id < 20")
+    c.renameVariable("v", "w")
+    c.addVariable("note", org.apache.spark.sql.types.StringType, Some("'none'"))
+    val viaQuery = c.query().select("id", "w", "note").collect().map(_.toSeq).toSeq
+    val viaMap = c.map(_.select("id", "w", "note").collect().map(_.toSeq).toSeq)
+      .flatMap(_._2)
+    assert(viaQuery.size == 140)
+    assert(viaMap.sortBy(_.head.toString) == viaQuery.sortBy(_.head.toString))
+    assert(viaMap.forall(r => r(1) == 1.0 && r(2) == "none"), viaMap.take(3))
+  }
+
   test("per-file adaptive: heavy file rewrites, light file keeps a DV, one commit") {
     val root = SparkTestSession.tmp("graft-dv-adaptive")
     val c = dvColl(root)
@@ -193,6 +280,42 @@ class DeletionVectorSpec extends AnyFunSuite {
     // restore to the pre-delete snapshot resurrects (by commit, not damage)
     c.restore(g0)
     assert(c.query().count() == 150)
+
+    // one read over local and external refs, with DVs on both sides, a
+    // renamed column, a fill-bearing column, and a Sequence-partitioned
+    // key that is also a data column
+    def gen(k: Long, lo: Long, hi: Long) =
+      (lo until hi).map(i => (k, i, i * 0.5)).toDF("k", "id", "v")
+    val base = (0L until 4L).map(k => gen(k, k * 100, k * 100 + 20)).reduce(_ union _)
+    val src = Collection.create(spark, SparkTestSession.tmp("graft-dv-seq-src"),
+      base.schema, "k", SequencePartitioning(Seq("k"), "k"), statsColumns = Seq("id"),
+      attrs = Map(Collection.DvEnabledAttr -> "true"))
+    src.insert(base, MergeStrategy.Concat)
+    src.deleteWhere("id >= 100 and id < 105")
+    val dst = src.cloneTo(SparkTestSession.tmp("graft-dv-seq-clone"))
+    val local = gen(3L, 400, 420).union(gen(4L, 500, 520))
+    dst.insert(local, MergeStrategy.Concat)
+    // DVs on an external file (k=3 from the source) and a local one
+    dst.deleteWhere("(id >= 300 and id < 303) or (id >= 410 and id < 412)")
+    dst.renameVariable("v", "w")
+    dst.addVariable("note", org.apache.spark.sql.types.StringType, Some("'old'"))
+    val late = gen(5L, 600, 610).withColumnRenamed("v", "w").withColumn("note", lit("new"))
+    dst.insert(late, MergeStrategy.Concat)
+    val dvFiles = dst.currentManifest().allDvs.keySet
+    assert(dvFiles.exists(Collection.baseOf(_).isDefined) &&
+      dvFiles.exists(Collection.baseOf(_).isEmpty), s"DVs on both sides: $dvFiles")
+    val deleted = (col("id") >= 100 && col("id") < 105) ||
+      (col("id") >= 300 && col("id") < 303) || (col("id") >= 410 && col("id") < 412)
+    val want = base.union(local).where(!deleted)
+      .withColumnRenamed("v", "w").withColumn("note", lit("old"))
+      .union(late)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "id", "w", "note").collect().map(_.toSeq).sortBy(_(1).toString).toSeq
+    assert(rows(dst.query()) == rows(want))
+    // partition filters prune inside the index: the scan does not
+    // re-apply them
+    assert(rows(dst.query().where("k = 3")) == rows(want.where("k = 3")))
+    assert(rows(dst.query("k >= 4")) == rows(want.where("k >= 4")))
   }
 
   test("compaction materializes DVs; repairCatalog refuses while they exist") {
