@@ -18,15 +18,7 @@ import org.apache.spark.sql.SparkSession
   *    the full plan; nothing is cached between them (build entries build
   *    fresh throwaway roots on the repeat passes). The host's 1-minute
   *    load average is recorded at start and end (`loadavg_start/_end`)
-  *    so a contended run is visible in the JSON itself;
-  *  - the staged-write profile (`insert_stage_sec` / `insert_rename_sec`,
-  *    from [[graft.core.WriteMetrics]]) splits the best insert pass into
-  *    its Spark-job and rename-into-place phases, and `insert_direct`
-  *    runs the same insert under the zero-rename direct protocol with its
-  *    own job split (`insert_direct_job_sec`). Staged and direct passes
-  *    INTERLEAVE (S,D,S,D,...) into fresh roots so ordering and
-  *    filesystem-state effects cancel — the numbers attribute insert
-  *    cost to a named code path, not to which protocol ran first.
+  *    so a contended run is visible in the JSON itself.
   */
 object Bench {
 
@@ -515,55 +507,23 @@ object Bench {
     val tmpBase = java.nio.file.Files.createTempDirectory("graft-refbench").toString
     val fs = Collection.fileSystem(spark, tmpBase)
 
-    // insert_full_dataset / insert_direct: staged and direct passes run
-    // INTERLEAVED (S,D,S,D,...) so host drift and filesystem state hit
-    // both protocols equally — the r8 driver run showed a 4.7x
-    // staged-vs-direct split inside one process that a fixed
-    // staged-then-direct ordering could not arbitrate. Both protocols
-    // write each pass into a FRESH root (the previous pass's root is
-    // deleted untimed), and both report their WriteMetrics phase split:
-    // staged = Spark job + rename fan-out, direct = Spark job (rest is
-    // create + footer stats + manifest commit, identical in both modes).
+    // insert_full_dataset: one pass per repetition, each into a FRESH
+    // root (the previous pass's root is deleted untimed, keeping disk
+    // bounded); the last root serves the read entries below
     var root: String = null
     var bestInsert = Double.MaxValue
-    var bestStage = 0.0
-    var bestRename = 0.0
-    var bestDirect = Double.MaxValue
-    var bestDirectJob = 0.0
-    def dropRoot(r: String): Unit =
-      try fs.delete(new org.apache.hadoop.fs.Path(r), true)
-      catch { case _: Exception => () }
-    def insertPass(r: String, mode: Option[String]): (Double, Map[String, Long]) = {
-      mode.foreach(m => spark.conf.set(Collection.DirectWriteModeKey, m))
-      val m0 = WriteMetrics.snapshot()
-      val sec =
-        try time {
-          val c = Collection.create(spark, r, schema, "time",
-            DatePartitioning("time", "M"), catalogEnabled = true,
-            profile = "cloud-balanced")
-          c.insert(ds)
-        } finally mode.foreach(_ => spark.conf.unset(Collection.DirectWriteModeKey))
-      val m1 = WriteMetrics.snapshot()
-      (sec, m1.map { case (k, v) => k -> (v - m0(k)) })
-    }
     for (i <- 1 to reps) {
       root = s"$tmpBase/c$i"
-      val (sSec, sM) = insertPass(root, None)
-      if (sSec < bestInsert) {
-        bestInsert = sSec
-        bestStage = sM("stageJobNanos") / 1e9
-        bestRename = sM("renameNanos") / 1e9
-      }
-      if (i > 1) dropRoot(s"$tmpBase/c${i - 1}") // keep disk bounded
-      val (dSec, dM) = insertPass(s"$tmpBase/d$i", Some("direct"))
-      if (dSec < bestDirect) {
-        bestDirect = dSec
-        bestDirectJob = dM("directJobNanos") / 1e9
-      }
-      dropRoot(s"$tmpBase/d$i")
+      bestInsert = math.min(bestInsert, time {
+        val c = Collection.create(spark, root, schema, "time",
+          DatePartitioning("time", "M"), catalogEnabled = true,
+          profile = "cloud-balanced")
+        c.insert(ds)
+      })
+      if (i > 1)
+        try fs.delete(new org.apache.hadoop.fs.Path(s"$tmpBase/c${i - 1}"), true)
+        catch { case _: Exception => () }
     }
-    val insertSec = bestInsert
-    val directSec = bestDirect
     ds.unpersist()
 
     val openSec = minOf(reps)(time { Collection.open(spark, root, readOnly = true) })
@@ -576,7 +536,7 @@ object Bench {
     // PLAN-vs-EXEC phase split — the r9 driver bench showed the filtered
     // axis read at 9.6x its r8 value while its SUPERSET read query_full
     // improved, a shape min-of-3 host noise cannot explain; this is the
-    // same arbitration protocol that cleared insert_direct in r9. The
+    // same interleaved arbitration the r9 insert A/B used. The
     // plan phase is `Collection.query(...)` construction (manifest access
     // + partition/zone-map/bloom pruning, all driver-side); the exec
     // phase is the noop write of the pre-built frame (Spark planning +
@@ -599,11 +559,7 @@ object Bench {
       if (aPlan + aExec < bestAxis) { bestAxis = aPlan + aExec; bestAxisPlan = aPlan }
     }
     Seq(
-      "insert_full_dataset" -> insertSec,
-      "insert_stage_sec" -> bestStage,
-      "insert_rename_sec" -> bestRename,
-      "insert_direct" -> directSec,
-      "insert_direct_job_sec" -> bestDirectJob,
+      "insert_full_dataset" -> bestInsert,
       "open_collection_cold" -> openSec,
       "query_one_partition_full" -> queryOneSec,
       "query_full" -> bestFull,

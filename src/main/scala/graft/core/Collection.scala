@@ -5,9 +5,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ManifestRead
+import org.apache.spark.sql.graftbridge.{ManifestRead, ParquetWriteBridge}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType,
-  LongType, ShortType, StringType, StructField, StructType}
+  LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 import scala.jdk.CollectionConverters._
 
@@ -248,13 +248,13 @@ final class Collection private (
 
     if (existing.isEmpty) {
       // Initial-load fast path: nothing can collide, so skip the
-      // distinct-keys pass entirely — the staged write reports exactly
-      // the files this job created (crash orphans are never adopted).
+      // distinct-keys pass entirely — the write reports exactly the
+      // files its tasks created (crash orphans are never adopted).
       // CHECK constraints still guard (they can predate the first row).
       val checked =
         if (man0.constraints.isEmpty) assigned
         else constraintGuard(assigned, man0.constraints)
-      val newFiles = physicalWrite(prepareForWrite(checked, man0.taskBase))
+      val newFiles = physicalWrite(prepareForWrite(checked), man0)
       commitDelta(man0, newFiles, Set.empty, writeTasks, streamMark, op = "insert")
       return newFiles.map(parentRel).distinct.sorted
     }
@@ -376,7 +376,7 @@ final class Collection private (
     * the orphans. */
   private[graft] def insertUncommitted(df: DataFrame): Unit = {
     requireWritable()
-    physicalWrite(prepareForWrite(partitioning.assign(df), currentManifest().taskBase))
+    physicalWrite(prepareForWrite(partitioning.assign(df)), currentManifest())
   }
 
   /** Write the small non-axis dataset to `_immutable/`; it is merged back
@@ -401,10 +401,10 @@ final class Collection private (
 
   /** Range-repartition on (partition cols, axis) — parallelism follows the
     * DATA, not the partition-key count; each task writes contiguous
-    * axis-sorted slices — then assign collision-free row ids above the
-    * manifest's task base. */
-  private def prepareForWrite(df: DataFrame, taskBase: Long,
-                              cluster: Seq[Column] = null): DataFrame = {
+    * axis-sorted slices. Row ids are not a column here: the task writer
+    * assigns them, collision-free above the manifest's task base, and
+    * any incoming `_zc_row` is dropped. */
+  private def prepareForWrite(df: DataFrame, cluster: Seq[Column] = null): DataFrame = {
     // Row-id ordering: axis first, then a deterministic hash tiebreak over
     // the SCALAR columns only — hashing wide array/struct payloads (e.g. a
     // 240-float swath) would dominate the insert cost for no extra
@@ -424,155 +424,32 @@ final class Collection private (
     // default clustering is the axis (tight axis zone maps per file); a
     // z-ordered compaction passes its Morton value instead
     val order = if (cluster == null) Seq(col(axis)) else cluster
-    df
+    df.drop(RowIdCol)
       .repartitionByRange(writeTasks, (partCols.map(col) ++ order): _*)
       .sortWithinPartitions((partCols.map(col) ++ order :+ tiebreak): _*)
-      .withColumn(RowIdCol, monotonically_increasing_id() + lit(taskBase << 33))
   }
 
-  /** Append-mode physical write: never deletes or overwrites — new part
-    * files land under the Hive tree with unique names and stay invisible
-    * until a manifest commits them. Timestamps write as INT64 MICROS
-    * (not INT96): micros carry footer min/max statistics, which the
-    * commit turns into manifest zone maps ([[axisFileStats]]) — and are
-    * the modern parquet interchange type besides. */
-  /** Scheme-dispatched physical write. Two protocols, one contract: the
-    * write job reports the EXACT relative paths it created — the commit's
-    * file set is KNOWN, not discovered by listing, so a concurrent writer
-    * appending to the same partition can neither be adopted into this
-    * commit nor have its in-flight task files clobbered (writers never
-    * share a committer dir). File visibility is governed by the manifest,
-    * so neither protocol needs filesystem atomicity: a mid-write crash
-    * leaves unreferenced files that [[vacuum]]'s age-gated GC reclaims.
-    *
-    *  - STAGED (`file`/`hdfs`/... — stores with metadata-only rename):
-    *    the job writes under a writer-unique `_stage/<uuid>` dir, then
-    *    each data file is renamed into its partition dir (one metadata
-    *    RPC per file, fanned out 16-wide).
-    *  - DIRECT (`s3a`/`gs`/`abfs`/... — keystores where rename is a
-    *    server-side COPY + DELETE, i.e. a second full pass over the
-    *    data): tasks write final uniquely-named files straight into the
-    *    partition dirs via [[DirectWriteProtocol]] — zero renames, bytes
-    *    written exactly once (Delta's DelayedCommitProtocol shape; the
-    *    reference gets the equivalent from Icechunk's content-addressed
-    *    chunk keys, store/icechunk_store.py).
-    *
-    * `spark.graft.write.mode` = `auto` (default, scheme-dispatched) |
-    * `direct` | `staged` forces a protocol. [[WriteMetrics]] accumulates
-    * per-phase wall time for the bench's insert profile. */
-  private def physicalWrite(df: DataFrame): Seq[String] = {
-    if (profile.compression == "zstd")
-      spark.sparkContext.hadoopConfiguration
-        .setInt("parquet.compression.codec.zstd.level", profile.zstdLevel)
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsKey)
-    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    def runJob(target: String): Unit = {
-      val writer0 = bloomColumns.foldLeft(
-        df.write.partitionBy(partCols: _*)
-          .option("compression", profile.compression)) { (w, c) =>
-        // parquet-mr writes a footer bloom filter per row group for the
-        // column; [[pruneByBloom]] reads it back at query time
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-      val writer = bloomNdv.foldLeft(writer0) { case (w, (c, ndv)) =>
-        w.option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
-      }
-      writer.mode("append").parquet(target)
-    }
-    try {
-      if (useDirectWrite) directWrite(runJob) else stagedWrite(runJob)
-    } finally {
-      prevTs match {
-        case Some(v) => spark.conf.set(tsKey, v)
-        case None    => spark.conf.unset(tsKey)
-      }
-    }
+  /** Append-mode physical write: never deletes or overwrites. The
+    * native task writer ([[GraftWriterFactory]], the same one the SQL
+    * face runs) streams each task's rows into final, uniquely-named
+    * files in the partition dirs; the files stay invisible until a
+    * manifest commits them. The tasks report the EXACT relative paths
+    * they created, so the commit's file set is KNOWN, not discovered by
+    * listing: a concurrent writer appending to the same partition can
+    * neither be adopted into this commit nor have its files clobbered.
+    * A mid-write crash leaves unreferenced files that [[vacuum]]'s
+    * age-gated GC reclaims. Row ids start at `man.taskBase`. The codec,
+    * bloom options and INT64-micros timestamps (footer min/max stats
+    * feed [[axisFileStats]]) ride the job's own hadoop conf; no session
+    * or SparkContext setting changes. */
+  private def physicalWrite(df: DataFrame, man: Manifest): Seq[String] = {
+    val factory = GraftWriterFactory.forFrame(spark, root, writeSpec(man), df.schema)
+    GraftNativeCommit.files(ParquetWriteBridge.runWriteJob(df, factory)(committed =>
+      dropUncommittedFiles(GraftNativeCommit.files(committed)))).sorted
   }
 
-  private def useDirectWrite: Boolean =
-    spark.conf.getOption(DirectWriteModeKey).getOrElse("auto") match {
-      case "direct" => true
-      case "staged" => false
-      case _ => RenameAsCopySchemes.contains(
-        try fs.getScheme.toLowerCase catch { case _: Exception => "file" })
-    }
-
-  /** DIRECT protocol: swap in [[DirectWriteProtocol]] for one V1 write
-    * job targeting the collection root; the protocol's task commit
-    * messages carry the exact file set back. */
-  private def directWrite(runJob: String => Unit): Seq[String] = {
-    val t0 = System.nanoTime()
-    // the protocol instance is recovered by output path after the job:
-    // serialize direct JOBS per root within this JVM so two concurrent
-    // writers can't swap instances (manifest-commit concurrency — the
-    // contended part — is untouched; separate drivers don't share this)
-    val rootKey = fs.makeQualified(new Path(root)).toString
-    val lock = directWriteLocks.computeIfAbsent(rootKey, _ => new Object)
-    lock.synchronized {
-      DirectWriteProtocol.install(spark)
-      try {
-        DirectWriteProtocol.take(rootKey) // drop any stale crashed-job entry
-        runJob(root)
-        val proto = DirectWriteProtocol.take(rootKey)
-        require(proto.isDefined,
-          "direct write ran without DirectWriteProtocol — " +
-          "commitProtocolClass was overridden mid-write")
-        val files = proto.get.committedFiles.sorted
-        WriteMetrics.directJobNanos.addAndGet(System.nanoTime() - t0)
-        WriteMetrics.directFiles.addAndGet(files.size)
-        files
-      } finally DirectWriteProtocol.uninstall(spark)
-    }
-  }
-
-  /** STAGED protocol: write under `_stage/<uuid>`, then rename each data
-    * file into its partition dir (metadata-only on local/HDFS). */
-  private def stagedWrite(runJob: String => Unit): Seq[String] = {
-    val stageRel = s"$StageDir/${java.util.UUID.randomUUID().toString}"
-    val stagePath = new Path(s"$root/$stageRel")
-    try {
-      val tJob0 = System.nanoTime()
-      runJob(stagePath.toString)
-      WriteMetrics.stageJobNanos.addAndGet(System.nanoTime() - tJob0)
-      val tMove0 = System.nanoTime()
-      def walk(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (isDataFile(st.getPath.getName)) Seq(st.getPath)
-        else Nil
-      }
-      val staged = walk(stagePath)
-      // the move is one metadata RPC per file — fan it out so a 10k-file
-      // commit is bounded by RPC latency x files/threads, not x files
-      val dirs = staged.map(p => new Path(s"$root/${relativize(stagePath, p.getParent)}")).distinct
-      dirs.foreach(fs.mkdirs)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(16, staged.size)))
-      try {
-        import scala.jdk.CollectionConverters._
-        val moved = pool.invokeAll(staged.map { p =>
-          new java.util.concurrent.Callable[String] {
-            def call(): String = {
-              val rel = relativize(stagePath, p)
-              if (!fs.rename(p, new Path(s"$root/$rel")))
-                throw new java.io.IOException(s"failed to move staged file $rel into place")
-              rel
-            }
-          }
-        }.asJava)
-        val out = moved.asScala.map(_.get()).toSeq.sorted
-        WriteMetrics.renameNanos.addAndGet(System.nanoTime() - tMove0)
-        WriteMetrics.renamedFiles.addAndGet(out.size)
-        out
-      } finally pool.shutdown()
-    }
-    finally {
-      try fs.delete(stagePath, true) catch { case _: Exception => () }
-    }
-  }
-
-  /** The commit protocol: stage-write the data files (the staged move
-    * reports the exact new-file set), commit `prev - replaced + new` as
+  /** The commit protocol: write the data files (the task commits report
+    * the exact new-file set), commit `prev - replaced + new` as
     * the next generation, then GC the replaced files (readers on the old
     * snapshot may still be streaming them — deletion is best-effort and
     * deferred-safe, like Icechunk's expiration). */
@@ -600,10 +477,10 @@ final class Collection private (
     val checked =
       if (rewrite || man.constraints.isEmpty) df
       else constraintGuard(df, man.constraints)
-    // the staged write returns its exact file set: crash orphans and
+    // the write returns its exact file set: crash orphans and
     // concurrent writers' files in the same partitions are structurally
     // excluded from this commit (no directory-diff discovery)
-    val prepared = prepareForWrite(checked, man.taskBase, cluster)
+    val prepared = prepareForWrite(checked, cluster)
     // COLUMN RENAMES (r11): files always carry PHYSICAL names — new
     // writes of a renamed column land under its pinned original name,
     // so every file of every generation shares one physical schema
@@ -611,13 +488,13 @@ final class Collection private (
       if (man.renames.isEmpty) prepared
       else prepared.select(prepared.columns.toSeq.map(c =>
         col(c).as(man.renames.getOrElse(c, c))): _*)
-    val newFiles = physicalWrite(physical)
+    val newFiles = physicalWrite(physical, man)
     commitWrittenFiles(man, newFiles, replaced, streamMark, rewrite,
       replacedFiles, newPartSpec, op, dvUpdates)
   }
 
   /** The commit tail of [[writeAndCommit]], shared with the NATIVE DSv2
-    * batch write (whose data files arrive from executor task commits
+    * batch write (whose data files arrive through the DSv2 `BatchWrite`
     * instead of [[physicalWrite]]): resolve the doomed files, publish
     * the delta (with the conflict-cleanup contract), GC the replaced
     * files honoring tag/branch pins. `newFiles` are root-relative. */
@@ -1003,11 +880,12 @@ final class Collection private (
       if (st.getPath.getName.endsWith(".tmp") && aged(st.getModificationTime))
         try fs.delete(st.getPath, false) catch { case _: Exception => () }
     }
-    // abandoned staging dirs: a writer that crashed mid-write leaves its
-    // `_stage/<uuid>` subtree behind. Gate on the NEWEST mtime anywhere
-    // in the subtree — a long-running live write keeps landing task
-    // files, so its newest entry stays inside the grace window even when
-    // the top dir's creation time has aged out.
+    // legacy staging dirs: earlier builds staged each write under
+    // `_stage/<uuid>`, and a crash mid-write left that subtree behind.
+    // Gate on the NEWEST mtime anywhere in the subtree — a write still
+    // running in an older build keeps landing task files, so its newest
+    // entry stays inside the grace window even when the top dir's
+    // creation time has aged out.
     def newestMtime(p: Path): Long = {
       val st = fs.getFileStatus(p)
       if (!st.isDirectory) st.getModificationTime
@@ -2985,58 +2863,51 @@ final class Collection private (
 
   // --- native DSv2 batch-write planning ----------------------------
 
-  /** Plan a NATIVE DSv2 batch write (the write-side mirror of
-    * [[nativeScanPlan]]): the pinned generation whose `taskBase` seeds
-    * executor row ids plus everything the executor-side parquet writers
-    * need. `None` = this write is not natively expressible and must go
-    * through the proven V1 bridge — a partition column of a type whose
-    * Hive path segment the native writer cannot format EXACTLY as
-    * Spark's own dynamic-partition committer would
-    * ([[Collection.nativeKeyType]] — the same gate the native scan
-    * applies for decoding). CHECK constraints stopped being a fallback
-    * in r10b: the spec carries them and the native tasks enforce the
-    * [[constraintGuard]] NULL-passes/raise semantics per row, so
-    * constrained tables keep dynamic overwrite, REPLACE WHERE, and
-    * streaming writes. A constraint added CONCURRENTLY with the write
-    * still refuses in the rebase guard (constraints are pinned at
-    * planning). */
-  /** Read-only-safe eligibility probe for [[nativeWriteSpec]] — what
-    * [[graft.sources.GraftTable.capabilities]] consults to decide
-    * whether to advertise `V1_BATCH_WRITE` (Spark's write strategy
-    * REQUIRES the capability set and the built Write to agree, so the
-    * decision is made once at table level and the builder follows it). */
-  private[graft] def nativeWriteCompatible: Boolean =
-    partCols.map(c => partitioning.colType(c, schema))
-      .forall(Collection.nativeKeyType) &&
-      // renamed columns (r11): files carry PHYSICAL names — the V1
-      // write bridge applies the mapping; the native task writer
-      // doesn't (yet), so renamed tables keep the proven path
-      currentManifest().renames.isEmpty
-
-  private[graft] def nativeWriteSpec(): Option[Collection.NativeWriteSpec] = {
-    requireWritable()
-    val man = currentManifest()
-    val keyTypes = partCols.map(c => partitioning.colType(c, schema))
-    if (!keyTypes.forall(Collection.nativeKeyType)) return None
-    if (man.renames.nonEmpty) return None // see nativeWriteCompatible
-    Some(Collection.NativeWriteSpec(
+  /** What the task writer needs from a pinned snapshot: the generation
+    * to commit against, the row-id task base, the partition layout, the
+    * codec/bloom configuration and the CHECK constraints. */
+  private def writeSpec(man: Manifest): Collection.NativeWriteSpec =
+    Collection.NativeWriteSpec(
       generation = man.generation,
       taskBase = man.taskBase,
       partCols = partCols,
-      partColTypes = keyTypes,
       identityCols = partitioning.identityCols,
       compression = profile.compression,
       zstdLevel = profile.zstdLevel,
       bloomCols = bloomColumns,
       bloomNdv = bloomNdv,
-      constraints = man.constraints.toSeq.sortBy(_._1)))
+      constraints = man.constraints.toSeq.sortBy(_._1))
+
+  /** Read-only-safe eligibility probe for [[nativeWriteSpec]] — what
+    * [[graft.sources.GraftTable.capabilities]] consults to decide
+    * whether to advertise `V1_BATCH_WRITE` (Spark's write strategy
+    * REQUIRES the capability set and the built Write to agree, so the
+    * decision is made once at table level and the builder follows it).
+    * Renamed columns (r11) keep the V1 face: files carry PHYSICAL names,
+    * and only [[writeAndCommit]] applies the mapping. */
+  private[graft] def nativeWriteCompatible: Boolean =
+    currentManifest().renames.isEmpty
+
+  /** Plan a NATIVE DSv2 batch write (the write-side mirror of
+    * [[nativeScanPlan]]) against the head snapshot; `None` when the
+    * table must take the V1 face ([[nativeWriteCompatible]]). CHECK
+    * constraints stopped being a fallback in r10b: the spec carries
+    * them and the native tasks enforce the [[constraintGuard]]
+    * NULL-passes/raise semantics per row, so constrained tables keep
+    * dynamic overwrite, REPLACE WHERE, and streaming writes. A
+    * constraint added CONCURRENTLY with the write still refuses in the
+    * rebase guard (constraints are pinned at planning). */
+  private[graft] def nativeWriteSpec(): Option[Collection.NativeWriteSpec] = {
+    requireWritable()
+    val man = currentManifest()
+    if (man.renames.nonEmpty) None else Some(writeSpec(man))
   }
 
   /** Publish a native batch write's task-committed files as one atomic
     * manifest commit — [[writeAndCommit]]'s tail with the data files
-    * already on disk (executor task commits reported the exact set;
-    * crash/abort leftovers are unreferenced and vacuum-reclaimed, the
-    * same contract as [[DirectWriteProtocol]]). Modes:
+    * already on disk (the [[GraftWriterFactory]] tasks reported the
+    * exact set; crash/abort leftovers are unreferenced and
+    * vacuum-reclaimed, the same contract as [[physicalWrite]]). Modes:
     *
     *  - `"append"` mirrors [[insertInternal]]'s Concat leg, including
     *    the post-commit auto-compaction check;
@@ -3104,10 +2975,18 @@ final class Collection private (
     * select all of them (replace). Only a genuinely row-dependent
     * predicate throws — row-level replace-where would need a
     * read-modify-write, which `updateWhere`/`deleteWhere` already
-    * provide. */
+    * provide. Keys outside [[Collection.nativeKeyType]] refuse too:
+    * decimal, double and boolean keys decode as their directory strings
+    * ('1.50', 'true'), which do not compare typed against the
+    * predicate's literals, so a verdict there could keep the very
+    * partitions the predicate selects; timestamp keys refuse with them. */
   private[graft] def replaceWherePartitions(man: Manifest,
                                             ast: FilterExpr.Ast): Seq[String] = {
     require(ast != null && ast != FilterExpr.True, "replace-where needs a predicate")
+    partCols.find(c => !Collection.nativeKeyType(partitioning.colType(c, schema)))
+      .foreach { c => throw new IllegalArgumentException(
+        s"REPLACE WHERE cannot decide partition key '$c' of type " +
+        s"${partitioning.colType(c, schema).simpleString} — use DELETE plus INSERT") }
     man.partitionPaths.filter { p =>
       decodePath(p) match {
         case Some(kvs) =>
@@ -4708,6 +4587,8 @@ final class Collection private (
       val decoded: Any = partitioning.colType(n, schema) match {
         case LongType | IntegerType | ShortType | ByteType =>
           scala.util.Try(v.toLong).getOrElse(v)
+        case TimestampType | TimestampNTZType =>
+          FilterExpr.WallClockKey.parse(v).map(FilterExpr.WallClockKey(_, v)).getOrElse(v)
         case _ => v
       }
       n -> decoded
@@ -4720,6 +4601,7 @@ final class Collection private (
       val c = (x, y) match {
         case (l: Long, r: Long)     => java.lang.Long.compare(l, r)
         case (l: String, r: String) => l.compareTo(r)
+        case (l: FilterExpr.WallClockKey, r: FilterExpr.WallClockKey) => l.time.compareTo(r.time)
         case _                      => x.toString.compareTo(y.toString)
       }
       if (c != 0) return c < 0
@@ -4835,22 +4717,11 @@ object Collection extends CollectionManifestLayer {
   val ManifestDir = "_manifest"
   val ImmutableDir = "_immutable"
   val ImmutableMeta = "_meta.json"
-  /** Writer-unique staging subtree for physical writes: each write job
-    * lands under its own `_stage/<uuid>` before a metadata-only move into
-    * the partition dirs — concurrent writers never share a Spark
-    * `_temporary` dir, and each commit knows its exact file set without
-    * listing (so a concurrent writer's files can never be adopted). */
+  /** Staging subtree of earlier builds, which wrote each job under
+    * `_stage/<uuid>` and renamed the files into place. Nothing writes it
+    * any more; [[Collection.vacuum]] still sweeps trees a crash left. */
   val StageDir = "_stage"
   val BranchDir = "_branches"
-  /** `spark.graft.write.mode`: `auto` (scheme-dispatched) | `direct`
-    * (zero-rename [[DirectWriteProtocol]]) | `staged` (`_stage` + move). */
-  val DirectWriteModeKey = "spark.graft.write.mode"
-  /** Filesystem schemes where rename is a server-side COPY + DELETE (no
-    * real directories), so the staged protocol would double every
-    * insert's data IO — these default to the direct protocol. */
-  val RenameAsCopySchemes: Set[String] =
-    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss",
-        "oss", "cos", "cosn", "swift", "obs")
   /** Hidden per-partition row id, the positional key for View overlays. */
   val RowIdCol = "_zc_row"
 
@@ -4889,23 +4760,23 @@ object Collection extends CollectionManifestLayer {
         * The native reader masks these rowids per batch (r11). */
       dv: Option[DvRef] = None)
 
-  /** Everything a NATIVE DSv2 batch write's driver side needs from the
-    * pinned snapshot ([[Collection#nativeWriteSpec]]): the generation to
-    * commit against, the row-id task base, the partition-column layout
-    * for executor-side Hive path formatting, the parquet codec/bloom
-    * configuration [[Collection#physicalWrite]] would have applied, and
-    * the CHECK constraints (name -> predicate SQL, name-sorted) the
-    * write's tasks enforce per row (r10b — previously a V1 fallback). */
+  /** Everything the task writer ([[GraftWriterFactory]]) needs from a
+    * pinned snapshot: the generation to commit against, the row-id task
+    * base, the partition columns (in directory order) and which of them
+    * are identity columns, the parquet codec/bloom configuration, and
+    * the CHECK constraints (name -> predicate SQL, name-sorted) the SQL
+    * face's tasks enforce per row. */
   private[graft] final case class NativeWriteSpec(
       generation: Long, taskBase: Long,
-      partCols: Seq[String], partColTypes: Seq[DataType],
+      partCols: Seq[String],
       identityCols: Seq[String],
       compression: String, zstdLevel: Int,
       bloomCols: Seq[String], bloomNdv: Map[String, Long],
       constraints: Seq[(String, String)])
 
   /** Partition-column types the native scan can decode from Hive path
-    * segments into Catalyst internal values ([[internalKeyValue]]). */
+    * segments into Catalyst internal values ([[internalKeyValue]]).
+    * Read side only: the task writer formats every key type. */
   private[graft] def nativeKeyType(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType | DateType => true
     case _ => false
@@ -4964,12 +4835,6 @@ object Collection extends CollectionManifestLayer {
     * under heavy same-partition contention giving up is correct). */
   val MaxCommitRebases: Int = 5
 
-
-  /** Per-root monitors serializing direct-protocol write JOBS within this
-    * JVM (see [[DirectWriteProtocol]] — the instance registry is keyed by
-    * output path, so same-root jobs must not overlap in one driver). */
-  private val directWriteLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
 
   /** Create a new collection rooted at `root` (reference base.py:161-234). */
   def create(
@@ -5286,25 +5151,4 @@ object Collection extends CollectionManifestLayer {
       .select((keep.map(col) ++
         arrayCols.map(c => col("_e").getField(c).as(c))): _*)
   }
-}
-
-/** Wall-time accumulators for the physical write path, split by phase —
-  * the profile that arbitrates "host IO contention" vs "protocol cost"
-  * in the bench's insert numbers ([[graft.Bench]] emits the deltas as
-  * `insert_stage_sec` / `insert_rename_sec` / `insert_direct_sec`).
-  * Cheap atomics, always on. */
-private[graft] object WriteMetrics {
-  import java.util.concurrent.atomic.AtomicLong
-  /** Spark write job into `_stage/<uuid>` (staged protocol). */
-  val stageJobNanos = new AtomicLong(0)
-  /** walk + mkdirs + fan-out rename into partition dirs (staged). */
-  val renameNanos = new AtomicLong(0)
-  val renamedFiles = new AtomicLong(0)
-  /** Whole direct-protocol write job (no rename phase exists). */
-  val directJobNanos = new AtomicLong(0)
-  val directFiles = new AtomicLong(0)
-  def snapshot(): Map[String, Long] = Map(
-    "stageJobNanos" -> stageJobNanos.get, "renameNanos" -> renameNanos.get,
-    "renamedFiles" -> renamedFiles.get, "directJobNanos" -> directJobNanos.get,
-    "directFiles" -> directFiles.get)
 }

@@ -279,9 +279,11 @@ object FilterExpr {
       case _                                 => None
     }
     case Not(e) => evalOpt(e, key).map(!_)
-    case In(n, vs, neg) => key.get(n).map { v =>
-      val hit = vs.exists(x => valueEq(v, x))
-      if (neg) !hit else v != null && hit
+    case In(n, vs, neg) => key.get(n).flatMap { v =>
+      try {
+        val hit = vs.exists(x => valueEq(v, x))
+        Some(if (neg) !hit else v != null && hit)
+      } catch { case _: ParseException => None }
     }
     case IsNull(n, neg) => key.get(n).map { v =>
       if (neg) v != null else v == null
@@ -357,10 +359,12 @@ object FilterExpr {
       case None       => RowDependent
       case Some(null) => UnknownRows // NULL [NOT] IN (...) is UNKNOWN
       case Some(v) =>
-        val hit = vs.exists(x => x != null && valueEq(v, x))
-        if (hit) { if (neg) NoRows else AllRows }
-        else if (vs.exists(_ == null)) UnknownRows // miss decided by a NULL element
-        else if (neg) AllRows else NoRows
+        try {
+          val hit = vs.exists(x => x != null && valueEq(v, x))
+          if (hit) { if (neg) NoRows else AllRows }
+          else if (vs.exists(_ == null)) UnknownRows // miss decided by a NULL element
+          else if (neg) AllRows else NoRows
+        } catch { case _: ParseException => RowDependent }
     }
     case IsNull(n, neg) => key.get(n) match {
       case None => RowDependent
@@ -585,7 +589,36 @@ object FilterExpr {
     case _         => toLongOpt(v).map(_.toDouble)
   }
 
-  private def valueEq(a: Any, b: Any): Boolean = (toLongOpt(a), toLongOpt(b)) match {
+  /** A timestamp partition key as its Hive directory names it: the wall
+    * clock of Spark's `Cast(ts AS STRING)` in the session time zone,
+    * fraction trimmed ('2024-01-01 10:00:00.5'). It compares by time
+    * with a string literal of any fraction width — the SQL face renders
+    * '2024-01-01 10:00:00.500000' — and with nothing else (a
+    * [[ParseException]]: the partition is kept, never decided). */
+  final case class WallClockKey(time: java.time.LocalDateTime, raw: String) {
+    override def toString: String = raw
+  }
+
+  object WallClockKey {
+    /** 'yyyy-MM-dd[ HH:mm[:ss[.f…]]]' → wall clock; None otherwise. */
+    def parse(s: String): Option[java.time.LocalDateTime] =
+      scala.util.Try(java.time.LocalDateTime.parse(s.replace(' ', 'T')))
+        .orElse(scala.util.Try(java.time.LocalDate.parse(s).atStartOfDay())).toOption
+  }
+
+  private def wallClock(v: Any): java.time.LocalDateTime = v match {
+    case w: WallClockKey => w.time
+    case s: String => WallClockKey.parse(s).getOrElse(
+      throw new ParseException(s"'$s' is not a timestamp"))
+    case other => throw new ParseException(s"cannot compare $other with a timestamp key")
+  }
+
+  private def valueEq(a: Any, b: Any): Boolean = (a, b) match {
+    case (_: WallClockKey, _) | (_, _: WallClockKey) => wallClock(a) == wallClock(b)
+    case _ => numericEq(a, b)
+  }
+
+  private def numericEq(a: Any, b: Any): Boolean = (toLongOpt(a), toLongOpt(b)) match {
     case (Some(x), Some(y)) => x == y
     case _ => (toDoubleOpt(a), toDoubleOpt(b)) match {
       case (Some(x), Some(y)) => x == y
@@ -593,7 +626,12 @@ object FilterExpr {
     }
   }
 
-  private def valueCompare(a: Any, b: Any): Int = (toLongOpt(a), toLongOpt(b)) match {
+  private def valueCompare(a: Any, b: Any): Int = (a, b) match {
+    case (_: WallClockKey, _) | (_, _: WallClockKey) => wallClock(a).compareTo(wallClock(b))
+    case _ => numericCompare(a, b)
+  }
+
+  private def numericCompare(a: Any, b: Any): Int = (toLongOpt(a), toLongOpt(b)) match {
     case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
     case _ => (toDoubleOpt(a), toDoubleOpt(b)) match {
       case (Some(x), Some(y)) => java.lang.Double.compare(x, y)

@@ -1,60 +1,43 @@
 package graft.sources
 
-import java.util.UUID
-
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.graftbridge.{Bridge, ParquetWriteBridge}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.Collection
+import graft.core.{Collection, GraftNativeCommit, GraftWriterFactory}
 
 /** NATIVE DSv2 batch write for the graft catalog face (r10) — the
   * write-side mirror of the E36 native scan: `INSERT INTO graft.db.t`
   * plans as a real `AppendData` (no `V1Write -> InsertableRelation`
-  * Row-bridge seam), executor tasks stream [[InternalRow]]s through
-  * Spark's own parquet writer directly into their FINAL files under the
-  * collection root (the [[graft.core.DirectWriteProtocol]] zero-rename
-  * shape — file visibility is governed by the manifest, so crash/abort
-  * leftovers are unreferenced files vacuum reclaims), task commits
-  * report the exact file set, and `commit()` publishes ONE atomic
-  * manifest generation via the same commit/conflict/GC path every other
-  * writer uses.
+  * Row-bridge seam). The executor tasks are graft's one physical write,
+  * [[graft.core.GraftWriterFactory]] (the same task writer every
+  * [[Collection]] write runs): they stream [[InternalRow]]s into their
+  * FINAL files under the collection root and report the exact file set
+  * in their task commits, and `commit()` publishes ONE atomic manifest
+  * generation via the same commit/conflict/GC path every other writer
+  * uses. This file holds only the DSv2 `Write`, `BatchWrite` and
+  * `StreamingWrite` wrappers around that writer.
   *
-  * Layout parity with the V1 path: [[RequiresDistributionAndOrdering]]
-  * demands a RANGE distribution + intra-task sort on the partitioning's
-  * input columns then the axis — exactly
+  * Layout parity with [[Collection]]'s writes:
+  * [[RequiresDistributionAndOrdering]] demands a RANGE distribution +
+  * intra-task sort on the partitioning's input columns then the axis —
   * `Collection.prepareForWrite`'s `repartitionByRange(partCols, axis)`
   * expressed over data columns (every partition key derivation is
   * monotone in its source column, so sorting by source groups each
   * Hive directory into one contiguous run and each task holds ONE open
   * parquet writer at a time — bounded memory at any partition fan-out).
-  * Row ids reproduce the V1 formula
-  * `(taskBase + sparkPartitionId) << 33 + rowIndex`.
   *
-  * Fallback contract (the read-side claim discipline, mirrored): a
-  * partition-column type the native path cannot format byte-identically
-  * to Spark's dynamic-partition committer falls back to the proven V1
-  * write — a correctness escape, not an optimization.
-  * `spark.graft.nativeWrite=false` pins every write to the V1 bridge.
-  * CHECK constraints are NOT a fallback (r10b): the tasks evaluate the
-  * V1 guard's exact NULL-passes boolean per row, codegen'd, and raise
-  * naming the constraint — which keeps dynamic overwrite, REPLACE
-  * WHERE, and streaming writes available on constrained tables.
-  *
-  * Reference behavior: zcollection's insert writes Zarr chunks then
-  * commits an Icechunk snapshot referencing exactly those chunk keys
-  * (collection/base.py:218-320, store/icechunk_store.py); this is that
-  * two-phase shape on Spark's DSv2 write protocol. */
+  * `spark.graft.nativeWrite=false` and tables with renamed columns keep
+  * the V1 `InsertableRelation` face, which ends in [[Collection.insert]]
+  * and so in the same task writer. CHECK constraints are NOT a fallback
+  * (r10b): the tasks evaluate the constraint guard's exact NULL-passes
+  * boolean per row, codegen'd, and raise naming the constraint — which
+  * keeps dynamic overwrite, REPLACE WHERE, and streaming writes
+  * available on constrained tables. */
 class GraftNativeWrite(spark: SparkSession, collection: Collection,
                        spec: Collection.NativeWriteSpec, mode: String,
                        inputSchema: StructType,
@@ -81,7 +64,8 @@ class GraftNativeWrite(spark: SparkSession, collection: Collection,
   override def requiredDistribution(): Distribution = Distributions.ordered(sortOrders)
   override def requiredOrdering(): Array[SortOrder] = sortOrders
   // 0 = engine-chosen (session shuffle partitions, AQE-coalescible) —
-  // parallelism follows the data volume, like the V1 range repartition
+  // parallelism follows the data volume, like prepareForWrite's range
+  // repartition
   override def requiredNumPartitions(): Int = 0
 
   override def description(): String =
@@ -132,9 +116,9 @@ class GraftNativeStreamingWrite(spark: SparkSession, reopen: () => Collection,
     // NEXT epoch's tasks enforce the new set (constraints ride the spec)
     val spec = c.nativeWriteSpec().getOrElse(throw new IllegalStateException(
       s"collection ${c.root} stopped being natively writable mid-stream " +
-      "(partitioning changed concurrently?) — restart the query"))
+      "(a column was renamed concurrently?) — restart the query"))
     epoch = (c, spec)
-    val f = GraftNativeBatchWrite.writerFactory(spark, c, spec, inputSchema)
+    val f = GraftWriterFactory.forTable(spark, c, spec, inputSchema)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
                                 epochId: Long): DataWriter[InternalRow] =
@@ -144,10 +128,7 @@ class GraftNativeStreamingWrite(spark: SparkSession, reopen: () => Collection,
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val (c, spec) = epoch
-    val files = messages.flatMap {
-      case GraftNativeCommit(fs) => fs
-      case other => throw new IllegalStateException(s"unexpected commit message $other")
-    }.toSeq.sorted
+    val files = GraftNativeCommit.files(messages.toSeq).sorted
     if (c.streamHighWaterMark(streamName).exists(_ >= epochId)) {
       // a replayed epoch another run already committed (the checkpoint's
       // commit log lagged the sink): the just-written duplicates were
@@ -164,9 +145,7 @@ class GraftNativeStreamingWrite(spark: SparkSession, reopen: () => Collection,
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val e = epoch
-    if (e != null) e._1.dropUncommittedFiles(messages.collect {
-      case GraftNativeCommit(fs) => fs
-    }.toSeq.flatten)
+    if (e != null) e._1.dropUncommittedFiles(GraftNativeCommit.files(messages.toSeq))
   }
 }
 
@@ -177,199 +156,13 @@ class GraftNativeBatchWrite(spark: SparkSession, collection: Collection,
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftNativeBatchWrite.writerFactory(spark, collection, spec, inputSchema)
+    GraftWriterFactory.forTable(spark, collection, spec, inputSchema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.flatMap {
-      case GraftNativeCommit(fs) => fs
-      case other => throw new IllegalStateException(s"unexpected commit message $other")
-    }.toSeq.sorted
+    val files = GraftNativeCommit.files(messages.toSeq).sorted
     collection.commitNativeWrite(spec.generation, files, mode, replaceAst)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    collection.dropUncommittedFiles(messages.collect {
-      case GraftNativeCommit(fs) => fs
-    }.toSeq.flatten)
-}
-
-object GraftNativeBatchWrite {
-  /** Build the executor writer factory for one job or one streaming
-    * epoch — shared by the batch and streaming legs. Resolves the
-    * partition-key derivations ONCE on the driver: runs the
-    * partitioning's own assign() over an empty frame of the input
-    * schema, collapses the analyzed withColumn Projects, and binds each
-    * partition column's expression to input ordinals — the executors
-    * evaluate exactly what the V1 write job would have evaluated
-    * (session timezone and casts resolved by the analyzer). */
-  private[sources] def writerFactory(spark: SparkSession, collection: Collection,
-                                     spec: Collection.NativeWriteSpec,
-                                     inputSchema: StructType): GraftWriterFactory = {
-    val df0 = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], inputSchema)
-    val assigned = collection.partitioning.assign(df0)
-    val (byName, baseAttrs) = ParquetWriteBridge.collapseProjects(Bridge.analyzed(assigned))
-    val partExprs = ParquetWriteBridge.boundProjection(
-      spec.partCols.map(c => byName.getOrElse(c, throw new IllegalStateException(
-        s"partitioning did not derive expected column '$c'"))), baseAttrs)
-    // file content = input columns minus identity partition columns
-    // (moved into the directory name, like partitionBy), plus the row id
-    val keptIdx = inputSchema.fields.toSeq.zipWithIndex
-      .filterNot { case (f, _) => spec.identityCols.contains(f.name) }
-    val outExprs: Seq[Expression] = keptIdx.map { case (f, i) =>
-      BoundReference(i, f.dataType, f.nullable)
-    }
-    val fileSchema = StructType(
-      keptIdx.map(_._1) :+ StructField(Collection.RowIdCol, LongType, nullable = false))
-    val conf = ParquetWriteBridge.writeConf(spark, fileSchema,
-      spec.compression, spec.zstdLevel, spec.bloomCols, spec.bloomNdv)
-    // CHECK constraints (r10b): compile each predicate ONCE on the
-    // driver into the V1 guard's exact boolean — `coalesce(expr(sql)
-    // .cast("boolean"), true)` (ANSI: NULL passes) — bound to input
-    // ordinals; the tasks evaluate codegen'd per row and raise naming
-    // the constraint, plus a to_json(struct(*)) rendering of the
-    // offending row, the constraintGuard message shape
-    val checkExprs: Seq[Expression] =
-      if (spec.constraints.isEmpty) Nil
-      else {
-        import org.apache.spark.sql.functions.{coalesce, expr, lit, struct, to_json}
-        val guarded = df0.select(
-          spec.constraints.zipWithIndex.map { case ((_, sql), i) =>
-            coalesce(expr(sql).cast("boolean"), lit(true)).as(s"__check_$i")
-          } :+ to_json(struct(inputSchema.fieldNames.toSeq.map(
-            org.apache.spark.sql.functions.col): _*)).as("__check_row"): _*)
-        val (byName2, baseAttrs2) = ParquetWriteBridge.collapseProjects(
-          Bridge.analyzed(guarded))
-        ParquetWriteBridge.boundProjection(
-          (spec.constraints.indices.map(i => byName2(s"__check_$i"))
-            :+ byName2("__check_row")).map(ParquetWriteBridge.replaceRuntime),
-          baseAttrs2)
-      }
-    GraftWriterFactory(collection.root, new SerializableConfiguration(conf),
-      partExprs, spec.partCols, spec.partColTypes, outExprs, spec.taskBase,
-      spec.compression, UUID.randomUUID().toString,
-      checkExprs, spec.constraints)
-  }
-}
-
-/** Files (root-relative) one committed task wrote. */
-case class GraftNativeCommit(files: Seq[String]) extends WriterCommitMessage
-
-case class GraftWriterFactory(root: String, conf: SerializableConfiguration,
-                              partExprs: Seq[Expression], partCols: Seq[String],
-                              partColTypes: Seq[DataType], outExprs: Seq[Expression],
-                              taskBase: Long, compression: String, jobUuid: String,
-                              /** Bound CHECK guards: one boolean per
-                                * constraint, then the row's JSON
-                                * rendering (violation message). */
-                              checkExprs: Seq[Expression] = Nil,
-                              checkConstraints: Seq[(String, String)] = Nil)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(this, partitionId, taskId)
-}
-
-/** One task's writer: rows arrive sorted so each Hive directory is a
-  * contiguous run — exactly one parquet writer is open at any moment.
-  * Speculative attempts are arbitrated by Spark's commit coordinator
-  * (only one attempt's files reach `commit()`); a losing or crashed
-  * attempt's files are unreferenced and reclaimed by vacuum. */
-class GraftDataWriter(f: GraftWriterFactory, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val partProj = ParquetWriteBridge.unsafeProjection(f.partExprs)
-  private val outProj = ParquetWriteBridge.unsafeProjection(f.outExprs)
-  // CHECK guards: booleans (never null — coalesced true) + row JSON
-  private val checkProj =
-    if (f.checkExprs.isEmpty) null
-    else ParquetWriteBridge.unsafeProjection(f.checkExprs)
-  private val idRow = new GenericInternalRow(1)
-  private val joined = new JoinedRow
-  private var rowId: Long = (f.taskBase + partitionId) << 33
-  private var writer: org.apache.spark.sql.execution.datasources.parquet.ParquetOutputWriter = null
-  private var fileSeq = 0
-  private val files = ArrayBuffer.empty[String]
-
-  private val ext =
-    if (f.compression.toLowerCase == "none") ".parquet"
-    else s".${f.compression.toLowerCase}.parquet"
-
-  private def partitionDir(vals: InternalRow): String =
-    f.partCols.indices.map { i =>
-      val s: String =
-        if (vals.isNullAt(i)) null
-        else f.partColTypes(i) match {
-          case StringType => vals.getUTF8String(i).toString
-          case LongType   => vals.getLong(i).toString
-          case IntegerType => vals.getInt(i).toString
-          case ShortType  => vals.getShort(i).toString
-          case ByteType   => vals.getByte(i).toString
-          case DateType   => java.time.LocalDate.ofEpochDay(vals.getInt(i)).toString
-          case other => throw new IllegalStateException(
-            s"unsupported native-write partition type $other") // gated at planning
-        }
-      ParquetWriteBridge.partitionPathSegment(f.partCols(i), s)
-    }.mkString("/")
-
-  private def roll(dir: String): Unit = {
-    if (writer != null) writer.close()
-    val name = f"part-$partitionId%05d-${f.jobUuid}-t$taskId-c$fileSeq$ext"
-    fileSeq += 1
-    val rel = s"$dir/$name"
-    files += rel
-    writer = ParquetWriteBridge.newWriter(f.conf.value,
-      new Path(f.root, rel).toString, partitionId, taskId)
-  }
-
-  /** The last roll's partition key (a defensive copy — `partProj`
-    * reuses its buffer). The demanded sort makes each Hive directory a
-    * contiguous run, so the per-row cost is one UnsafeRow bytes-compare;
-    * the per-column value formatting + path escaping in [[partitionDir]]
-    * runs only when the key actually changes. */
-  private var currentKey: InternalRow = null
-
-  override def write(row: InternalRow): Unit = {
-    if (checkProj != null) {
-      val v = checkProj(row)
-      var i = 0
-      while (i < f.checkConstraints.length) {
-        if (!v.getBoolean(i)) {
-          val (name, sql) = f.checkConstraints(i)
-          // the task fails -> the job aborts -> nothing commits; same
-          // atomic-refusal contract (and message shape) as the V1
-          // write's raise_error guard
-          throw new IllegalStateException(
-            s"CHECK constraint '$name' violated: ($sql) is false for row " +
-            v.getUTF8String(f.checkConstraints.length))
-        }
-        i += 1
-      }
-    }
-    val key = partProj(row)
-    if (currentKey == null || key != currentKey) {
-      roll(partitionDir(key))
-      currentKey = key.copy()
-    }
-    idRow.setLong(0, rowId)
-    rowId += 1
-    writer.write(joined(outProj(row), idRow).asInstanceOf[InternalRow])
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) { writer.close(); writer = null }
-    GraftNativeCommit(files.toSeq)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) {
-      try writer.close() catch { case _: Exception => () }
-      writer = null
-    }
-    val fs = new Path(f.root).getFileSystem(f.conf.value)
-    files.foreach { rel =>
-      try fs.delete(new Path(f.root, rel), false) catch { case _: Exception => () }
-    }
-  }
-
-  override def close(): Unit =
-    if (writer != null) { writer.close(); writer = null }
+    collection.dropUncommittedFiles(GraftNativeCommit.files(messages.toSeq))
 }

@@ -138,17 +138,18 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
   override def version(): String =
     asOfGen.getOrElse(collection.generation).toString
 
-  /** Does this table's write path run NATIVELY (r10: executor-side
-    * parquet task writes + one atomic manifest publish in
-    * `BatchWrite.commit`) or through the proven V1 bridge? Decided HERE,
-    * once, because Spark's write strategy requires the capability set
-    * and the built `Write` to agree: a table advertising
-    * `V1_BATCH_WRITE` must build a `V1Write`; one that doesn't must
-    * build a `toBatch`-capable Write. Fallback to V1 when a
-    * partition-key type is outside the native-formattable set, or
-    * `spark.graft.nativeWrite=false` pins the bridge (CHECK constraints
-    * stopped being a fallback in r10b — the native tasks enforce them
-    * per row).
+  /** Does this table's SQL write face plan as a native DSv2 write (r10:
+    * one atomic manifest publish in `BatchWrite.commit`) or through the
+    * V1 `InsertableRelation` bridge? Both end in the same task writer
+    * ([[graft.core.GraftWriterFactory]]); the bridge reaches it through
+    * [[Collection.insert]]. Decided HERE, once, because Spark's write
+    * strategy requires the capability set and the built `Write` to
+    * agree: a table advertising `V1_BATCH_WRITE` must build a
+    * `V1Write`; one that doesn't must build a `toBatch`-capable Write.
+    * The bridge serves tables with renamed columns, and
+    * `spark.graft.nativeWrite=false` pins it (CHECK constraints stopped
+    * being a fallback in r10b — the native tasks enforce them per
+    * row).
     *
     * CACHED (lazy val) and NON-THROWING: `capabilities()` consults this
     * on every `Table.supports()` probe during analysis and planning —
@@ -481,7 +482,10 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
         groupCols.zip(gTypes).map { case (c, t) => StructField(c, t, nullable = true) }
           ++ aggSpecs.map(_._1))
       val rows = groups.map { case (vals, n, bounds) =>
-        Row.fromSeq(vals.zip(gTypes).map { case (v, t) => external(v, t) }
+        // a key `external` cannot type (the directory string of a
+        // timestamp, decimal or boolean key) refuses: the scan answers
+        Row.fromSeq(vals.zip(gTypes).map { case (v, t) =>
+          scala.util.Try(external(v, t)).getOrElse(return None) }
           ++ aggSpecs.map {
             case (_, None) => n
             case (f, Some((c, hi))) =>
@@ -699,14 +703,14 @@ class GraftWriteBuilder(spark: SparkSession, open: () => Collection,
     * ([[GraftTable.nativeWriteEligible]] — the capability set and the
     * Write instance must agree for Spark's write strategy). A snapshot
     * whose eligibility changed between table load and write planning
-    * (a concurrent partition evolution to an exotic key type) fails
-    * loudly here rather than formatting paths wrong. */
+    * (a column renamed concurrently) fails loudly here rather than
+    * writing logical names into the files. */
   override def build(): Write = {
     val c = open()
     if (native) {
       val spec = c.nativeWriteSpec().getOrElse(throw new IllegalStateException(
         s"table $tableName was loaded native-writable but the current " +
-        "snapshot is not (partitioning changed concurrently?) — " +
+        "snapshot is not (a column was renamed concurrently?) — " +
         "re-read the table and retry"))
       require(info.schema().fieldNames.toSeq == c.schema.fieldNames.toSeq,
         s"INSERT schema ${info.schema().fieldNames.mkString(",")} does not " +

@@ -1,27 +1,32 @@
 package org.apache.spark.sql.graftbridge
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.write.{DataWriterFactory, WriterCommitMessage}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-/** Same-package bridge into Spark's parquet WRITE stack for the native
-  * graft DSv2 batch write ([[graft.sources.GraftBatchWrite]]) — the
-  * write-side sibling of [[ParquetReadBridge]].
+/** Same-package bridge into Spark's parquet WRITE stack for graft's one
+  * physical write ([[graft.core.GraftWriterFactory]]) — the write-side
+  * sibling of [[ParquetReadBridge]].
   *
-  * The native write plans its own partition layout and file names
-  * (manifest-governed, like [[graft.core.DirectWriteProtocol]]) but the
-  * bytes go through Spark's OWN [[ParquetOutputWriter]] /
-  * [[ParquetWriteSupport]] — the exact row-to-parquet conversion a V1
-  * `df.write.parquet` performs (timestamp micros, decimal encodings,
-  * rebase handling, field-id metadata), so files written natively and
-  * files written through the V1 bridge are indistinguishable to every
-  * reader, including this library's footer-stats collector. */
+  * The task writer plans its own partition layout and file names
+  * (manifest-governed) but the bytes go through Spark's OWN
+  * [[ParquetOutputWriter]] / [[ParquetWriteSupport]] — the exact
+  * row-to-parquet conversion a `df.write.parquet` performs (timestamp
+  * micros, decimal encodings, rebase handling, field-id metadata), so
+  * every reader, including this library's footer-stats collector, sees
+  * ordinary Spark parquet files. */
 object ParquetWriteBridge {
 
   /** A hadoop conf prepared exactly as `ParquetFileFormat.prepareWrite`
@@ -42,8 +47,8 @@ object ParquetWriteBridge {
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
       sqlConf.writeLegacyParquetFormat.toString)
     // graft collections always write INT64 micros: footer min/max stats
-    // feed the manifest zone maps (Collection.physicalWrite pins the
-    // same session conf around its V1 job)
+    // feed the manifest zone maps. Set on this job's conf only; the
+    // session's own outputTimestampType is never touched
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
       sqlConf.parquetFieldIdWriteEnabled.toString)
@@ -71,6 +76,46 @@ object ParquetWriteBridge {
     conf
   }
 
+  /** Run `factory`'s writers over `df`'s partitions as ONE Spark job
+    * under its own SQL execution id — what Spark's V2 write exec does,
+    * minus the `BatchWrite` around it: each task runs
+    * `DataWritingSparkTask` (commit-coordinated, so only one attempt per
+    * partition commits) and ships its commit message back, in
+    * partition order. On failure, `abort` receives the same array, null
+    * where a task did not commit (the others' files are on disk but no
+    * manifest will reference them), then the failure propagates. */
+  def runWriteJob(df: DataFrame, factory: DataWriterFactory)
+                 (abort: Seq[WriterCommitMessage] => Unit): Seq[WriterCommitMessage] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      val rdd = qe.executedPlan.execute()
+      val messages = new Array[WriterCommitMessage](rdd.partitions.length)
+      // DataWritingSparkTaskResult is private to Spark's v2 package: take
+      // the commit message inside the task closure
+      val task = (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+        DataWritingSparkTask.run(factory, ctx, rows, true, Map.empty).writerCommitMessage
+      try df.sparkSession.sparkContext.runJob(rdd, task, rdd.partitions.indices,
+        (i: Int, m: WriterCommitMessage) => messages(i) = m)
+      catch { case e: Throwable =>
+        // a failing clean-up must not hide why the job failed
+        try abort(messages.toSeq)
+        catch { case NonFatal(s) => e.addSuppressed(s) }
+        throw e
+      }
+      messages.toSeq
+    }
+  }
+
+  /** Report a committed task's output to Spark's task metrics, as the
+    * V1 writer's `BasicWriteTaskStatsTracker` does (`DataWritingSparkTask`
+    * leaves `outputMetrics` at zero). No-op outside a task. */
+  def reportOutput(bytes: Long, records: Long): Unit =
+    Option(TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(bytes)
+      m.setRecordsWritten(records)
+    }
+
   /** Open one parquet file at `path` for [[InternalRow]]s of the schema
     * `writeConf` was built with. The task-attempt identity only names
     * the hadoop context (our file names are already unique); `close()`
@@ -86,8 +131,8 @@ object ParquetWriteBridge {
 
   /** Spark's Hive-style partition path segment for one `col=value` pair
     * (`ExternalCatalogUtils` escaping + the null/empty default-partition
-    * sentinel) — byte-identical to what the V1 dynamic-partition
-    * committer names, so [[graft.core.Collection]]'s path decoder reads
+    * sentinel) — byte-identical to what Spark's dynamic-partition
+    * writer names, so [[graft.core.Collection]]'s path decoder reads
     * native-written partitions with no special case. */
   def partitionPathSegment(col: String, value: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils

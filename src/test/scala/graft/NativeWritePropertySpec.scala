@@ -10,10 +10,13 @@ import graft.core.{Collection, DatePartitioning, GroupedSequencePartitioning,
 /** Property fuzz for the r10 NATIVE DSv2 batch write: across random
   * schemas, partitionings, and data (nulls everywhere, null axis rows,
   * empty strings in identity keys, arrays/structs/decimals/dates in
-  * the payload), a native `INSERT INTO` and a V1-bridge `INSERT INTO`
-  * of the same rows must produce collections with IDENTICAL query
-  * results and identical Hive partition layouts — the write-side twin
-  * of NativeScanPropertySpec's read fuzz. */
+  * the payload, and identity keys of timestamp, boolean, decimal and
+  * date type), a native `INSERT INTO` and a V1-bridge `INSERT INTO`
+  * (which runs `Collection.insert`) of the same rows must produce
+  * collections with IDENTICAL query results, and both must lay out
+  * exactly the Hive partition directories plain Spark's `partitionBy`
+  * writes for the assigned rows — the write-side twin of
+  * NativeScanPropertySpec's read fuzz. */
 class NativeWritePropertySpec extends AnyFunSuite {
   lazy val spark = {
     val s = SparkTestSession.spark
@@ -87,6 +90,79 @@ class NativeWritePropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Exotic identity keys: each row's `e` takes one of a few values of
+    * `dt` (or null), so partitions hold several rows. */
+  private val exoticKeyTypes: Vector[DataType] =
+    Vector(TimestampType, BooleanType, DecimalType(10, 2), DateType)
+
+  private def exoticKey(rng: scala.util.Random, dt: DataType): Any =
+    if (rng.nextInt(8) == 0) null
+    else dt match {
+      case TimestampType => java.sql.Timestamp.from(java.time.Instant.parse(Seq(
+        "2024-01-01T10:00:00.500Z", "2024-03-05T00:00:00.123456Z",
+        "2023-12-31T23:59:59Z", "2024-06-30T12:34:56.000001Z")(rng.nextInt(4))))
+      case BooleanType => rng.nextBoolean()
+      case _: DecimalType => Seq(new java.math.BigDecimal("-1.50"),
+        new java.math.BigDecimal("0.00"), new java.math.BigDecimal("12345678.99"),
+        new java.math.BigDecimal("3.10"))(rng.nextInt(4))
+      case DateType => java.sql.Date.valueOf(Seq("2024-02-29", "1970-01-01",
+        "2031-12-31")(rng.nextInt(3)))
+      case other => throw new IllegalStateException(other.toString)
+    }
+
+  /** A [[SequencePartitioning]] over one exotic key `e` and a long axis. */
+  private def mkExoticCase(seed: Int): (StructType, String,
+      graft.core.Partitioning, Seq[Row]) = {
+    val rng = new scala.util.Random(seed)
+    val kt = exoticKeyTypes(seed % exoticKeyTypes.length)
+    val payload = StructField("p0", payloadTypes(rng.nextInt(payloadTypes.length)))
+    val schema = StructType(Seq(StructField("e", kt), StructField("seq", LongType), payload))
+    val rows = (1 to 120).map { i =>
+      Row(exoticKey(rng, kt), i.toLong, randValue(rng, payload.dataType))
+    }
+    (schema, "seq", SequencePartitioning(Seq("e"), "seq"), rows)
+  }
+
+  /** The partition directories (root-relative) holding `root`'s
+    * parquet files. */
+  private def dataDirs(root: String): Set[String] = {
+    val fs = Collection.fileSystem(spark, root)
+    val base = fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toUri.getPath
+      .stripSuffix("/")
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
+    val out = Set.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      val rel = p.getParent.toUri.getPath.stripPrefix(base).stripPrefix("/")
+      if (p.getName.endsWith(".parquet") && !rel.startsWith("_")) out += rel
+    }
+    out.result()
+  }
+
+  /** Write `rows` natively, through the V1 bridge, and with plain Spark's
+    * `partitionBy`; assert the three layouts and the two collections'
+    * rows agree. */
+  private def checkCase(name: String, schema: StructType, axis: String,
+                        part: graft.core.Partitioning, rows: Seq[Row]): Unit = {
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val cN = writeVia(native = true, s"n$name", schema, axis, part, df)
+    val cV = writeVia(native = false, s"v$name", schema, axis, part, df)
+    assert(cN.partitions() == cV.partitions(),
+      s"$name: partition layouts diverged\n native=${cN.partitions()}\n v1=${cV.partitions()}")
+    val ref = java.nio.file.Files.createTempDirectory("nw-fuzz-ref").toString + "/t"
+    part.assign(df).write.partitionBy(part.axis: _*).parquet(ref)
+    val want = dataDirs(ref)
+    assert(dataDirs(cN.root) == want, s"$name: native dirs != plain Spark's\n" +
+      s" native=${dataDirs(cN.root).toSeq.sorted}\n spark=${want.toSeq.sorted}")
+    assert(dataDirs(cV.root) == want, s"$name: Collection.insert dirs != plain Spark's\n" +
+      s" insert=${dataDirs(cV.root).toSeq.sorted}\n spark=${want.toSeq.sorted}")
+    val a = cN.query().collect().map(_.toString).sorted.toSeq
+    val b = cV.query().collect().map(_.toString).sorted.toSeq
+    assert(a.length == rows.length, s"$name: native lost rows (${a.length})")
+    assert(a == b, s"$name: row content diverged (first diff: ${
+      a.zip(b).find { case (x, y) => x != y }})")
+  }
+
   private def writeVia(native: Boolean, name: String, schema: StructType,
                        axis: String, part: graft.core.Partitioning,
                        df: DataFrame): Collection = {
@@ -106,17 +182,21 @@ class NativeWritePropertySpec extends AnyFunSuite {
   test("seeded fuzz: native and V1 writes produce identical collections") {
     for (seed <- 1 to 12) {
       val (schema, axis, part, rows) = mkCase(seed)
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), schema)
-      val cN = writeVia(native = true, s"n$seed", schema, axis, part, df)
-      val cV = writeVia(native = false, s"v$seed", schema, axis, part, df)
-      assert(cN.partitions() == cV.partitions(),
-        s"seed $seed: partition layouts diverged\n native=${cN.partitions()}\n v1=${cV.partitions()}")
-      val a = cN.query().collect().map(_.toString).sorted.toSeq
-      val b = cV.query().collect().map(_.toString).sorted.toSeq
-      assert(a.length == rows.length, s"seed $seed: native lost rows (${a.length})")
-      assert(a == b, s"seed $seed: row content diverged (first diff: ${
-        a.zip(b).find { case (x, y) => x != y }})")
+      checkCase(seed.toString, schema, axis, part, rows)
+    }
+  }
+
+  test("seeded fuzz: exotic identity keys lay out plain Spark's directories") {
+    for (seed <- 101 to 108) {
+      val (schema, axis, part, rows) = mkExoticCase(seed)
+      checkCase(seed.toString, schema, axis, part, rows)
+      // the written keys decode back to the original values
+      val got = Collection.open(spark, s"${CatalogSpec.warehouse}/nwfuzz/n$seed",
+        readOnly = true).query().select("e", "seq").collect()
+        .map(r => r.getLong(1) -> Option(r.get(0))).toMap
+      rows.foreach { r =>
+        assert(got(r.getLong(1)) == Option(r.get(0)), s"seed $seed: key of seq ${r.getLong(1)}")
+      }
     }
   }
 }

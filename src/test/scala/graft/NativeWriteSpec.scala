@@ -8,9 +8,9 @@ import graft.core.Collection
 /** r10 native DSv2 batch write: `INSERT INTO graft.db.t` runs as a real
   * `AppendData` — executor tasks write final parquet files directly
   * (zero renames), `commit()` publishes one atomic manifest generation —
-  * with row-identical results to the V1 bridge it replaces, and the V1
-  * fallback preserved for CHECK-constrained tables and
-  * `spark.graft.nativeWrite=false`. */
+  * with row-identical results to the V1 bridge, which
+  * `spark.graft.nativeWrite=false` pins (CHECK-constrained tables write
+  * natively since r10b). */
 class NativeWriteSpec extends AnyFunSuite {
   lazy val spark = {
     val s = SparkTestSession.spark
@@ -188,6 +188,69 @@ class NativeWriteSpec extends AnyFunSuite {
       .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0), r.getLong(1))).toSeq
     assert(afterNot == Seq((-1L, 20L), (5L, 30L)),
       s"NOT(grp = 9) must keep ONLY the null partition: $afterNot")
+  }
+
+  test("timestamp and decimal identity keys: REPLACE WHERE refuses; dynamic overwrite, reads and DELETE decide by value") {
+    def dynamic(q: String): Unit = {
+      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try sql(q)
+      finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
+    }
+    def positions(t: String): Seq[Long] =
+      sql(s"SELECT pos FROM $t ORDER BY pos").collect().map(_.getLong(0)).toSeq
+
+    // Spark names these directories '2023-12-31 23:59:59' and
+    // '2024-01-01 10:00:00.5'; REPLACE WHERE decides partitions only
+    // over integral, string and date keys
+    sql("""CREATE TABLE graft.nw.tsk_t (e TIMESTAMP, pos BIGINT, v DOUBLE)
+           PARTITIONED BY (e) TBLPROPERTIES ('axis'='pos')""")
+    sql("""INSERT INTO graft.nw.tsk_t VALUES
+           (TIMESTAMP'2023-12-31 23:59:59', 1, 1.0),
+           (TIMESTAMP'2024-01-01 10:00:00.5', 2, 2.0),
+           (TIMESTAMP'2024-01-01 10:00:00.5', 3, 3.0)""")
+    for (pred <- Seq("e = TIMESTAMP'2023-12-31 23:59:59'",
+                     "e > TIMESTAMP'2024-01-01 00:00:00'")) {
+      intercept[Exception](sql(
+        s"INSERT INTO graft.nw.tsk_t REPLACE WHERE $pred SELECT TIMESTAMP'2023-12-31 23:59:59', 7L, 7.0"))
+      assert(positions("graft.nw.tsk_t") == Seq(1L, 2L, 3L),
+        s"a refused REPLACE WHERE ($pred) must not write anything")
+    }
+    dynamic("INSERT OVERWRITE graft.nw.tsk_t SELECT TIMESTAMP'2024-01-01 10:00:00.5', 9L, 9.0")
+    assert(positions("graft.nw.tsk_t") == Seq(1L, 9L),
+      "dynamic overwrite must replace exactly the 10:00:00.5 partition")
+    assert(sql("SELECT pos FROM graft.nw.tsk_t WHERE e = TIMESTAMP'2024-01-01 10:00:00.5'")
+      .collect().map(_.getLong(0)).toSeq == Seq(9L))
+    // reads decide these partitions by time, not by string: the filter,
+    // the metadata count, the grouped count and a DELETE all see them
+    assert(sql("SELECT count(*) FROM graft.nw.tsk_t WHERE e > TIMESTAMP'2024-01-01 00:00:00'")
+      .collect().head.getLong(0) == 1)
+    val groups = sql("SELECT CAST(e AS STRING), count(*) FROM graft.nw.tsk_t GROUP BY e")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(groups == Set(("2023-12-31 23:59:59", 1L), ("2024-01-01 10:00:00.5", 1L)), s"$groups")
+    assert(Collection.open(spark, s"${CatalogSpec.warehouse}/nw/tsk_t", readOnly = true)
+      .query("e == '2024-01-01 10:00:00.500'").count() == 1)
+    sql("DELETE FROM graft.nw.tsk_t WHERE e = TIMESTAMP'2023-12-31 23:59:59'")
+    assert(positions("graft.nw.tsk_t") == Seq(9L))
+
+    sql("""CREATE TABLE graft.nw.deck_t (d DECIMAL(10,2), pos BIGINT, v DOUBLE)
+           PARTITIONED BY (d) TBLPROPERTIES ('axis'='pos')""")
+    sql("""INSERT INTO graft.nw.deck_t VALUES
+           (1.50BD, 1, 1.0), (1.50BD, 2, 2.0), (-3.10BD, 3, 3.0)""")
+    intercept[Exception](sql(
+      "INSERT INTO graft.nw.deck_t REPLACE WHERE d = 1.50BD SELECT 1.50BD, 7L, 7.0"))
+    assert(positions("graft.nw.deck_t") == Seq(1L, 2L, 3L))
+    dynamic("INSERT OVERWRITE graft.nw.deck_t SELECT 1.50BD, 9L, 9.0")
+    assert(positions("graft.nw.deck_t") == Seq(3L, 9L),
+      "dynamic overwrite must replace exactly the 1.50 partition")
+    assert(sql("SELECT pos FROM graft.nw.deck_t WHERE d = 1.5").collect().map(_.getLong(0)).toSeq
+      == Seq(9L))
+    val dGroups = sql("SELECT CAST(d AS STRING), count(*) FROM graft.nw.deck_t GROUP BY d")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(dGroups == Set(("1.50", 1L), ("-3.10", 1L)), s"$dGroups")
   }
 
   test("capabilities() is IO-free after first probe and never throws on a stale handle") {
