@@ -449,15 +449,19 @@ object Bench {
       val d = spark.read.parquet(dimPath).where(col("flag") === "keep")
       e.join(broadcast(d), e("day") === d("day_key")).agg(sum("value").as("s"))
     }
-    graft.sources.GraftBatchScan.lastPlannedFiles = -1
+    def fullQuery() = spark.read.format("graft").load(c.root).agg(sum("value").as("s"))
+    // the files the graft scan planned, read off an executed plan
+    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      graft.sources.GraftBatchScan.in(df.queryExecution.executedPlan)
+        .map(_.report.plannedFiles).sum
+    }
     val dppSec = minOf(reps)(time { dppQuery().write.format("noop").mode("overwrite").save() })
-    val prunedFiles = graft.sources.GraftBatchScan.lastPlannedFiles
-    graft.sources.GraftBatchScan.lastPlannedFiles = -1
     val fullSec = minOf(reps)(time {
-      spark.read.format("graft").load(c.root).agg(sum("value").as("s"))
-        .write.format("noop").mode("overwrite").save()
+      fullQuery().write.format("noop").mode("overwrite").save()
     })
-    val fullFiles = graft.sources.GraftBatchScan.lastPlannedFiles
+    val prunedFiles = plannedFiles(dppQuery())
+    val fullFiles = plannedFiles(fullQuery())
     if (prunedFiles >= fullFiles)
       System.err.println(s"[bench] WARNING: DPP did not prune files ($prunedFiles vs $fullFiles)")
 

@@ -9,7 +9,10 @@ import graft.dedup.{MinHashSig, SimHash64}
 import graft.functions.{CharShingleHashes, Fnv1a64, ShingleHashes}
 
 /** Session extensions registering graft's custom Catalyst expressions for
-  * SQL use:
+  * SQL use, and the post-hoc rule that lowers SQL UPDATE / MERGE INTO /
+  * row-level DELETE over graft tables onto the collection engine (graft
+  * tables need no optimizer rule: their scans report statistics
+  * natively):
   *
   * {{{
   *   SparkSession.builder().withExtensions(new GraftExtensions)...
@@ -28,10 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
         builder))
     }
-    // restore reported statistics to V1-bridged catalog scans (the
-    // auto-broadcast input Spark's V1ScanWrapper drops) — runs after
-    // the V2 pushdown rules
-    e.injectPreCBORule(_ => org.apache.spark.sql.graftbridge.RestoreV1ScanStatistics)
     // SQL UPDATE / MERGE INTO / row-level DELETE over graft tables:
     // Spark rewrites these only for SupportsRowLevelOperations tables,
     // so the post-hoc rule lowers them onto the collection engine
@@ -41,8 +40,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Runtime registration for sessions that already exist (extensions only
-  * apply at builder time). */
+/** Runtime registration of the expressions for sessions that already
+  * exist (extensions only apply at builder time; the DML rule needs
+  * `spark.sql.extensions` at session build). */
 object GraftExtensions {
 
   private def intArg(e: Expression, fn: String): Int = e match {
@@ -82,12 +82,5 @@ object GraftExtensions {
     All.foreach { case (name, builder) =>
       org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, builder)
     }
-    // the runtime analogue of injectPreCBORule (extensions only apply
-    // at builder time); the "User Provided Optimizers" batch runs after
-    // the V2 pushdown rules, which is all the stats restore needs
-    val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(org.apache.spark.sql.graftbridge.RestoreV1ScanStatistics))
-      spark.experimental.extraOptimizations =
-        extra :+ org.apache.spark.sql.graftbridge.RestoreV1ScanStatistics
   }
 }

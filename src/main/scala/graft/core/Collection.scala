@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ManifestRead, ParquetWriteBridge}
+import org.apache.spark.sql.graftbridge.{ManifestRead, ParquetReadBridge, ParquetWriteBridge}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType,
   LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
@@ -2180,31 +2180,6 @@ final class Collection private (
     * plus the compiled row predicate applied. `asOfGen` pins a committed
     * snapshot (the `versionAsOf` read option) — pruning then runs
     * against that snapshot's own stats. */
-  /** LIMIT-budgeted unfiltered scan: files in manifest order until the
-    * recorded row counts reach `n` — a SUPERSET of n rows (the engine's
-    * own LIMIT applies on top), so `SELECT * FROM t LIMIT 10` schedules
-    * one file instead of the whole collection. `None` (caller scans
-    * normally) when any needed file lacks a recorded count — the answer
-    * must be provable, never guessed. */
-  private[graft] def scanHead(n: Long, asOfGen: Option[Long]): Option[DataFrame] = {
-    val man = asOfGen.map { g =>
-      require(generations().contains(g), s"no committed generation $g at $root")
-      manifestAt(g)
-    }.getOrElse(currentManifest())
-    val rowsByFile = man.shards.flatMap(e => man.shardData(e).rows).toMap
-    val take = scala.collection.mutable.ArrayBuffer.empty[String]
-    var acc = 0L
-    val it = man.files.iterator
-    while (acc < n && it.hasNext) {
-      val f = it.next()
-      rowsByFile.get(f) match {
-        case Some(r) => take += f; acc += r
-        case None    => return None
-      }
-    }
-    Some(readManifestFiles(man, take.toSeq).drop(RowIdCol))
-  }
-
   private[graft] def scanWithAst(ast: FilterExpr.Ast,
                                  asOfGen: Option[Long] = None): DataFrame = {
     val pinned = asOfGen.map { g =>
@@ -2698,34 +2673,14 @@ final class Collection private (
 
   // --- native DSv2 batch-scan planning -----------------------------
 
-  /** Fill-bearing columns of the (pinned or current) snapshot — reads
-    * touching one go through the DataFrame path, whose coalesce applies
-    * the declared fill (the native parquet reader surfaces raw nulls). */
-  private[graft] def fillColumns(asOfGen: Option[Long]): Set[String] =
-    manifestFor(asOfGen).fills.keySet
-
-  /** RENAMED columns of the (pinned or current) snapshot (r11) — reads
-    * touching one keep the DataFrame path, whose scan requests the
-    * physical name and aliases back. */
-  private[graft] def renamedColumns(asOfGen: Option[Long]): Set[String] =
-    manifestFor(asOfGen).renames.keySet
-
-  /** Can a micro-batch STREAM of this collection plan natively at all —
-    * native-typed partition keys and no fill-bearing columns (r11, r10
-    * verdict #5)? Computable from schema + head manifest at table
-    * build, so `capabilities()` withholds MICRO_BATCH_READ and a
-    * V1-fallback `readStream.table` refuses at ANALYSIS, matching the
-    * write side's capability discipline (fills added between load and
-    * stream start still fail loudly at start — that race is
-    * irreducible). */
-  private[graft] def nativeStreamCompatible: Boolean =
-    partCols.map(c => partitioning.colType(c, schema))
-      .forall(Collection.nativeKeyType) && fillColumns(None).isEmpty &&
-      currentManifest().renames.isEmpty // r11: V1-bridge reads can't stream
-
-  private def manifestFor(asOfGen: Option[Long]): Manifest = asOfGen.map { g =>
-    require(generations().contains(g), s"no committed generation $g at $root")
-    manifestAt(g)
+  /** The committed manifest at `asOfGen`, else the head. A generation
+    * this handle already parsed is served from the cache without a
+    * listing; any other is checked against the committed list first. */
+  private[graft] def manifestFor(asOfGen: Option[Long]): Manifest = asOfGen.map { g =>
+    manifestCache.getOrElse(g, {
+      require(generations().contains(g), s"no committed generation $g at $root")
+      manifestAt(g)
+    })
   }.getOrElse(currentManifest())
 
   /** A decoded partition key with the Hive null sentinel mapped to real
@@ -2788,19 +2743,16 @@ final class Collection private (
     }
   }
 
-  /** Plan a NATIVE parquet batch scan: the pruned file list with
-    * per-file physical path, size, and the partition key as Catalyst
-    * INTERNAL values (aligned with [[partColumns]]). `None` = this
-    * snapshot is not natively scannable (an undecodable partition path,
-    * a partition column of an unsupported type) — the caller falls back
-    * to the proven DataFrame bridge. `limitRows` applies the LIMIT file
-    * budget: manifest-ordered files are scheduled only until their
-    * recorded row counts cover the limit (unknown counts simply skip
-    * the optimization — the engine's own LIMIT still applies). */
-  private[graft] def nativeScanPlan(ast: FilterExpr.Ast, asOfGen: Option[Long],
-                                    limitRows: Option[Long])
-      : Option[Seq[Collection.NativeFile]] = {
-    val man = manifestFor(asOfGen)
+  /** Plan a NATIVE parquet batch scan of generation `gen`: the pruned
+    * file list with per-file physical path, size, and the partition key
+    * as Catalyst INTERNAL values (aligned with [[partColumns]]).
+    * `limitRows` applies the LIMIT file budget: manifest-ordered files
+    * are scheduled only until their recorded row counts cover the limit
+    * (unknown counts simply skip the optimization — the engine's own
+    * LIMIT still applies). */
+  private[graft] def nativeScanPlan(ast: FilterExpr.Ast, gen: Long,
+                                    limitRows: Option[Long]): Seq[Collection.NativeFile] = {
+    val man = manifestFor(Some(gen))
     val selected0 = ast match {
       case FilterExpr.True => man.files
       case _               => pruneCandidates(man, ast)
@@ -2813,31 +2765,30 @@ final class Collection private (
   }
 
   /** [[nativeScanPlan]]'s file-metadata half for an EXPLICIT file set —
-    * the DSv2 streaming source's per-micro-batch planning primitive. */
+    * the DSv2 streaming source's per-micro-batch planning primitive.
+    * Every key decodes from its directory value the way
+    * [[org.apache.spark.sql.graftbridge.ManifestFileIndex]]'s inference
+    * does on the DataFrame face
+    * ([[org.apache.spark.sql.graftbridge.ParquetReadBridge.partitionValue]]). */
   private[graft] def nativeFilesFor(man: Manifest, selected: Seq[String])
-      : Option[Seq[Collection.NativeFile]] = {
+      : Seq[Collection.NativeFile] = {
     val keyTypes = partCols.map(c => partitioning.colType(c, schema))
-    if (!keyTypes.forall(Collection.nativeKeyType)) return None
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
     val sizeOf = fileSizes(man, selected)
     val dvs = man.dvsForFiles(selected)
-    val keyCache = scala.collection.mutable.Map.empty[String, Option[Seq[Any]]]
-    val out = Seq.newBuilder[Collection.NativeFile]
-    for (f <- selected) {
+    val keyCache = scala.collection.mutable.Map.empty[String, Seq[Any]]
+    selected.map { f =>
       val parent = parentRel(f)
-      keyCache.getOrElseUpdate(parent,
-        decodePath(parent).flatMap { kvs =>
-          val vs = kvs.map(_._2).zip(keyTypes).map {
-            case (v, t) => Collection.internalKeyValue(v, t)
-          }
-          if (vs.contains(None)) None else Some(vs.map(_.get))
-        }) match {
-        case None => return None
-        case Some(key) =>
-          out += Collection.NativeFile(Collection.absOf(root, f), sizeOf(f), key,
-            dvs.get(f).map(r => r.copy(path = Collection.absOf(root, r.path))))
-      }
+      val key = keyCache.getOrElseUpdate(parent, {
+        if (decodePath(parent).isEmpty)
+          throw new IllegalStateException(s"undecodable partition path '$parent' under $root")
+        parent.split("/").toSeq.zip(keyTypes).map { case (seg, t) =>
+          ParquetReadBridge.partitionValue(t, seg.substring(seg.indexOf('=') + 1), zone)
+        }
+      })
+      Collection.NativeFile(Collection.absOf(root, f), sizeOf(f), key,
+        dvs.get(f).map(r => r.copy(path = Collection.absOf(root, r.path))))
     }
-    Some(out.result())
   }
 
   /** Manifest-ordered file prefix whose RECORDED LIVE row counts
@@ -4774,35 +4725,13 @@ object Collection extends CollectionManifestLayer {
       bloomCols: Seq[String], bloomNdv: Map[String, Long],
       constraints: Seq[(String, String)])
 
-  /** Partition-column types the native scan can decode from Hive path
-    * segments into Catalyst internal values ([[internalKeyValue]]).
-    * Read side only: the task writer formats every key type. */
+  /** Partition-key types whose decoded directory values
+    * ([[Collection#decodePath]]) compare exactly as the keys do —
+    * the gate for REPLACE WHERE, which decides whole partitions from
+    * them. Reads and writes serve every key type. */
   private[graft] def nativeKeyType(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType | DateType => true
     case _ => false
-  }
-
-  /** A [[Collection#decodePath]] value (Long | String) → the Catalyst
-    * internal value of the declared partition-column type; the Hive
-    * default sentinel reads as null. `None` = not convertible (the
-    * caller falls back to the DataFrame read path). */
-  private[graft] def internalKeyValue(raw: Any, dt: DataType): Option[Any] = raw match {
-    case HiveDefaultPartition => Some(null)
-    case l: Long => dt match {
-      case LongType    => Some(l)
-      case IntegerType => Some(l.toInt)
-      case ShortType   => Some(l.toShort)
-      case ByteType    => Some(l.toByte)
-      case _           => None
-    }
-    case s: String => dt match {
-      case StringType =>
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      case DateType =>
-        scala.util.Try(java.time.LocalDate.parse(s).toEpochDay.toInt).toOption
-      case _ => None
-    }
-    case _ => None
   }
   /** [[Collection.changes]]' change-kind column: `'insert' | 'delete'`. */
   val ChangeTypeCol = "_change_type"

@@ -4,15 +4,21 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, Expression,
+  GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
   Partitioning => V2Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.graftbridge.{Bridge, ParquetReadBridge}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{Collection, FilterExpr}
 
@@ -27,111 +33,69 @@ final case class GraftInputPartition(delegate: InputPartition, key: InternalRow)
   override def preferredLocations(): Array[String] = Array.empty
 }
 
-/** Unwraps [[GraftInputPartition]] and delegates to Spark's stock
-  * parquet reader factory — columnar (vectorized) whenever the read
-  * schema supports it. */
-final class GraftReaderFactory(delegate: PartitionReaderFactory)
+/** The native read's reader factory: unwraps [[GraftInputPartition]]
+  * into Spark's stock parquet reader and shapes its output for the
+  * engine. Every output column `i` is the reader's column
+  * `sources(i)`, so one factory re-orders columns into the read's TABLE
+  * order (the parquet stack emits data columns, then the row id when
+  * widened, then partition columns), coalesces fill-bearing columns with their fill value (`fills(i)`,
+  * Catalyst internal) and drops the rows a deletion vector masks
+  * (`dvByKey`, keyed by [[graft.core.DeletionVectors.pathKey]]; each
+  * task reads its own files' sections and probes the row id at
+  * `rowIdOrdinal`).
+  *
+  * Fills and deletion vectors read row-based: Spark requires one
+  * columnar answer for the whole scan, and a columnar batch has neither
+  * a deletion mask nor a per-value coalesce. Otherwise the scan stays
+  * columnar and a re-order permutes the vector array (zero copy). */
+final class GraftReaderFactory(delegate: PartitionReaderFactory,
+                               sources: Array[Int],
+                               outTypes: Array[DataType],
+                               fills: Array[Option[Any]],
+                               dvByKey: Map[String, graft.core.Collection.DvRef],
+                               rowIdOrdinal: Int,
+                               conf: SerializableConfiguration)
     extends PartitionReaderFactory {
+
+  private val rowBased = dvByKey.nonEmpty || fills.exists(_.isDefined)
+  private val identity = !rowBased && sources.sameElements(sources.indices)
+
   private def unwrap(p: InputPartition): InputPartition =
     p.asInstanceOf[GraftInputPartition].delegate
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    delegate.createReader(unwrap(p))
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    delegate.createColumnarReader(unwrap(p))
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(unwrap(p))
-}
-
-/** Reorders reader output to a target schema (streaming relations pin
-  * the TABLE column order, while the parquet stack emits data columns
-  * followed by partition columns; batch plans get a Project from the
-  * pushdown rules — streaming plans do not). Columnar batches permute
-  * the vector array (zero copy); rows go through an unsafe projection. */
-final class PermutingReaderFactory(delegate: PartitionReaderFactory,
-                                   fromSchema: StructType, toSchema: StructType)
-    extends PartitionReaderFactory {
-  private val perm: Array[Int] = toSchema.fieldNames.map(fromSchema.fieldIndex)
-  private val identity = perm.zipWithIndex.forall { case (p, i) => p == i }
 
   override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(p)
+    !rowBased && delegate.supportColumnarReads(unwrap(p))
 
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val inner = delegate.createColumnarReader(p)
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
+    val inner = delegate.createColumnarReader(unwrap(p))
     if (identity) inner
-    else new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    else new PartitionReader[ColumnarBatch] {
       override def next(): Boolean = inner.next()
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
+      override def get(): ColumnarBatch = {
         val b = inner.get()
-        new org.apache.spark.sql.vectorized.ColumnarBatch(
-          perm.map(i => b.column(i)), b.numRows())
+        new ColumnarBatch(sources.map(i => b.column(i)), b.numRows())
       }
       override def close(): Unit = inner.close()
     }
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val inner = delegate.createReader(p)
-    if (identity) inner
-    else new PartitionReader[InternalRow] {
-      private val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(perm.zipWithIndex.map { case (from, i) =>
-          org.apache.spark.sql.catalyst.expressions.BoundReference(
-            from, fromSchema(toSchema.fields(i).name).dataType,
-            fromSchema(toSchema.fields(i).name).nullable)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        }.toSeq)
-      override def next(): Boolean = inner.next()
-      override def get(): InternalRow = proj(inner.get())
-      override def close(): Unit = inner.close()
-    }
-  }
-}
-
-/** Applies DELETION VECTORS inside the native scan (r11): for input
-  * partitions containing DV'd files, the read schema is widened with
-  * the persisted row-id column, each task reads its own files' DV
-  * sections (`8 + 8*count` bytes, sorted rowids, binary-searched per
-  * row), masked rows drop, and the row id projects back out — the
-  * engine above sees exactly the live rows under the original schema.
-  * Built only when the plan carries deletion vectors, and then every
-  * partition reads row-based: Spark requires one columnar answer for
-  * the whole scan, and a columnar batch has no deletion mask.
-  *
-  * `rowIdOrdinal` is the widened read schema's row-id position (last
-  * data column, before the partition columns); `outTypes` are the
-  * original output's column types. */
-final class DvFilteringReaderFactory(
-    delegate: PartitionReaderFactory,
-    dvByPath: Map[String, graft.core.Collection.DvRef],
-    conf: org.apache.spark.util.SerializableConfiguration,
-    rowIdOrdinal: Int,
-    outTypes: Array[org.apache.spark.sql.types.DataType])
-    extends PartitionReaderFactory {
-
-  private val dvByKey: Map[String, graft.core.Collection.DvRef] =
-    dvByPath.map { case (p, r) =>
-      graft.core.DeletionVectors.pathKey(new org.apache.hadoop.fs.Path(p)) -> r
-    }
-
-  private def partitionDvs(p: InputPartition): Seq[graft.core.Collection.DvRef] =
-    ParquetReadBridge.filePaths(p).map(graft.core.DeletionVectors.pathKey)
+    val files = unwrap(p)
+    val inner = delegate.createReader(files)
+    val dvs = ParquetReadBridge.filePaths(files).map(graft.core.DeletionVectors.pathKey)
       .distinct.flatMap(dvByKey.get)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val inner = delegate.createReader(p)
-    val mask = graft.core.DeletionVectors.mask(conf.value, partitionDvs(p))
-    val proj = ParquetReadBridge.withoutColumn(outTypes.toSeq, rowIdOrdinal)
+    if (identity && dvs.isEmpty) return inner
+    val mask = if (dvs.isEmpty) null else graft.core.DeletionVectors.mask(conf.value, dvs)
+    val proj = UnsafeProjection.create(sources.indices.map { i =>
+      val ref = BoundReference(sources(i), outTypes(i), nullable = true)
+      fills(i).fold[Expression](ref)(v => Coalesce(Seq(ref, Literal(v, outTypes(i)))))
+    })
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = {
         while (inner.next()) {
           val r = inner.get()
-          if (!mask.deleted(r.getLong(rowIdOrdinal))) {
+          if (mask == null || !mask.deleted(r.getLong(rowIdOrdinal))) {
             current = proj(r)
             return true
           }
@@ -144,11 +108,11 @@ final class DvFilteringReaderFactory(
   }
 }
 
-/** The NATIVE DSv2 batch scan over a graft collection — what the
-  * catalog face plans when [[GraftScanBuilder]] can prove the snapshot
-  * natively scannable (decodable partition keys, no fill-bearing read
-  * columns). Compared to the V1 bridge it adds the two scan features a
-  * 100 TB star-join plan lives on:
+/** The NATIVE DSv2 batch scan over a graft collection — what every
+  * catalog and path-face read plans unless a metadata aggregate answers
+  * it (see [[GraftScanBuilder.build]]). On top of the manifest skip
+  * layers it adds the two scan features a 100 TB star-join plan lives
+  * on:
   *
   *  - '''runtime partition filtering''' ([[SupportsRuntimeV2Filtering]]):
   *    a join against a filtered dimension re-prunes this scan's FILE
@@ -163,9 +127,16 @@ final class DvFilteringReaderFactory(
   *
   * Execution delegates to Spark's own vectorized parquet reader
   * ([[org.apache.spark.sql.graftbridge.ParquetReadBridge]]) — the scan
-  * only decides WHICH files and WHICH bytes, never how to decode them.
-  * File selection is manifest-metadata only; there is no directory
-  * walk anywhere in the plan path.
+  * only decides WHICH files and WHICH bytes; [[GraftBatchScan.readerFactory]]
+  * adds what the manifest declares on top of the files: renamed columns
+  * read under their physical names, fills, and deletion vectors. File
+  * selection is manifest-metadata only; there is no directory walk
+  * anywhere in the plan path.
+  *
+  * Every (re-)plan reads generation `pinnedGen`, which the builder
+  * pinned the first time it read the manifest: runtime-filter
+  * re-planning and a claimed filter's validity cannot drift onto a
+  * manifest committed mid-query.
   *
   * Filter contract: `claimed` filters (partition-only, strictly
   * decidable — [[Collection.canClaimStrict]]) are fully enforced by
@@ -175,23 +146,21 @@ final class DvFilteringReaderFactory(
   */
 final class GraftBatchScan(spark: SparkSession,
                            private val collection: Collection,
+                           /** The table's declared schema (the path face
+                             * appends its derived partition columns). */
+                           tableSchema: StructType,
                            private val requiredSchema: StructType,
                            private val baseAst: FilterExpr.Ast,
                            private val asOfGen: Option[Long],
                            private val limitRows: Option[Long],
                            parquetFilters: Array[Filter],
-                           prePlanned: Option[Seq[Collection.NativeFile]] = None,
-                           streamOptions: Map[String, String] = Map.empty,
-                           /** Generation every (re-)plan reads — pinned
-                             * at build so runtime-filter re-planning and
-                             * a claimed filter's validity cannot drift
-                             * onto a manifest committed mid-query. */
-                           private val pinnedGen: Option[Long] = None,
+                           streamOptions: Map[String, String],
+                           private val pinnedGen: Long,
                            /** Did the builder CLAIM `baseAst` (engine
                              * dropped its re-filter)? Streaming must
                              * then re-prove the claim on every batch's
                              * manifest. */
-                           private val claimed: Boolean = false)
+                           claimed: Boolean)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning with SupportsReportStatistics {
 
@@ -201,10 +170,6 @@ final class GraftBatchScan(spark: SparkSession,
     requiredSchema.fields.filter(f => partColSet(f.name)))
   private val readDataSchema = StructType(
     requiredSchema.fields.filterNot(f => partColSet(f.name)))
-  /** Physical file schema: declared data columns minus the partition
-    * columns (written as Hive directories, never into the files). */
-  private val fileDataSchema = StructType(
-    collection.schema.fields.filterNot(f => partColSet(f.name)))
   /** Indices (into the full partition key) of the REQUIRED partition
     * columns, in required order. */
   private val keyProjection: Array[Int] =
@@ -223,39 +188,30 @@ final class GraftBatchScan(spark: SparkSession,
 
   private def plan(): Array[InputPartition] = synchronized {
     if (planned == null) {
-      val ast = currentAst
-      GraftRelation.lastScanAst = ast // shared spec observable
-      // an empty-at-build snapshot has no generation to pin
-      // (pinnedGen=None): letting a runtime-filter re-plan fall through
-      // to currentManifest() could adopt a manifest committed AFTER
-      // query planning — keep the build-time (empty) file set instead;
-      // there is nothing for DPP to prune from an empty scan anyway
-      val rePlannable = asOfGen.isDefined || pinnedGen.isDefined
-      val files = prePlanned.filter(_ => runtimeAst == FilterExpr.True || !rePlannable)
-        .getOrElse(collection.nativeScanPlan(ast, asOfGen.orElse(pinnedGen), limitRows)
-          .getOrElse(throw new IllegalStateException(
-            s"native scan plan unavailable for ${collection.root} (validated at build)")))
-      planned = packPartitions(files)
+      val files = collection.nativeScanPlan(currentAst, pinnedGen, limitRows)
+      val (parts, keys) = GraftBatchScan.packByKey(spark, files, keyProjection)
+      planned = parts
+      plannedKeyCount = keys
       plannedFiles = files
-      GraftBatchScan.lastPlannedFiles = files.size
     }
     planned
   }
 
-  /** Group by partition key, split big files at the session split size,
-    * pack slices per key with open-cost padding — Spark's own file-scan
-    * packing, but never across partition keys (the HasPartitionKey
-    * contract). */
-  private def packPartitions(files: Seq[Collection.NativeFile]): Array[InputPartition] = {
-    val (parts, keys) = GraftBatchScan.packByKey(spark, files, keyProjection)
-    plannedKeyCount = keys
-    parts
+  /** What this scan pushed and planned: the pushed filter, the runtime
+    * filter applied since, and the planned file count. Specs and
+    * [[graft.Bench]] read it off the executed plan's `BatchScanExec`. */
+  private[graft] def report: GraftBatchScan.Report = {
+    plan()
+    GraftBatchScan.Report(baseAst, runtimeAst, plannedFiles.size)
   }
 
   // --- Scan ---------------------------------------------------------
 
-  override def readSchema(): StructType =
-    StructType(readDataSchema.fields ++ readPartitionSchema.fields)
+  /** The required columns in TABLE order — the reader factory permutes
+    * the parquet stack's output (data, then partition columns) into it,
+    * so pushdown adds no re-ordering Project above the scan (a DELETE's
+    * relation must be the bare scan). */
+  override def readSchema(): StructType = requiredSchema
 
   override def toBatch: Batch = this
 
@@ -282,17 +238,16 @@ final class GraftBatchScan(spark: SparkSession,
     * the pruned selection the same way — r9 ADVICE). Row counts are
     * only advertised for the unfiltered, unlimited read (post-filter
     * cardinality is unknowable from metadata), and BOTH numbers answer
-    * at THIS scan's snapshot (`asOfGen`/`pinnedGen`) — a VERSION AS OF
-    * read of a 1k-row snapshot must not advertise the head's 1B rows
-    * next to the pinned selection's bytes, or the optimizer mis-plans
-    * joins off self-contradictory stats. Metadata-only throughout:
-    * never a Spark job inside optimizer-time statistics. */
+    * at THIS scan's pinned snapshot — a VERSION AS OF read of a 1k-row
+    * snapshot must not advertise the head's 1B rows next to the pinned
+    * selection's bytes, or the optimizer mis-plans joins off
+    * self-contradictory stats. Metadata-only throughout: never a Spark
+    * job inside optimizer-time statistics. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private def statGen: Option[Long] = asOfGen.orElse(pinnedGen)
     private lazy val selectedBytes: Option[Long] =
       try { plan(); Some(plannedFiles.map(_.bytes).sum) }
       catch { case _: Exception =>
-        try collection.sizeOnDiskAt(statGen) catch { case _: Exception => None } }
+        try collection.sizeOnDiskAt(Some(pinnedGen)) catch { case _: Exception => None } }
     override def sizeInBytes(): java.util.OptionalLong = selectedBytes match {
       case Some(b) => java.util.OptionalLong.of(b)
       case None    => java.util.OptionalLong.empty()
@@ -300,7 +255,7 @@ final class GraftBatchScan(spark: SparkSession,
     override def numRows(): java.util.OptionalLong = {
       if (currentAst != FilterExpr.True || limitRows.isDefined)
         return java.util.OptionalLong.empty()
-      val n = try collection.countRowsMeta(FilterExpr.True, statGen)
+      val n = try collection.countRowsMeta(FilterExpr.True, Some(pinnedGen))
         catch { case _: Exception => None }
       n match {
         case Some(v) => java.util.OptionalLong.of(v)
@@ -313,8 +268,8 @@ final class GraftBatchScan(spark: SparkSession,
 
   /** `spark.readStream.table("graft.db.t")`: the DSv2 micro-batch face
     * over the same manifest-generation offset machinery as
-    * `format("graft")`, reading each batch through this scan's native
-    * parquet partitions. */
+    * `format("graft")`, reading each batch through the same reader
+    * factory as this scan. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(asOfGen.isEmpty,
@@ -330,30 +285,14 @@ final class GraftBatchScan(spark: SparkSession,
   override def planInputPartitions(): Array[InputPartition] = plan()
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val dataFilters = parquetFilters.filter(
-      _.references.forall(fileDataSchema.fieldNames.contains))
     plan()
-    val dvByPath = plannedFiles.flatMap(f => f.dv.map(f.path -> _)).toMap
-    if (dvByPath.isEmpty)
-      new GraftReaderFactory(ParquetReadBridge.readerFactory(
-        spark, fileDataSchema, readDataSchema, readPartitionSchema, dataFilters))
-    else {
-      // DELETION VECTORS in the plan (r11): widen the read with the
-      // persisted row-id column and mask per partition — see
-      // [[DvFilteringReaderFactory]]. The whole scan reads row-based;
-      // a DV-free plan keeps the columnar reader.
-      val rowIdField = org.apache.spark.sql.types.StructField(
-        Collection.RowIdCol, org.apache.spark.sql.types.LongType)
-      val fileWide = StructType(fileDataSchema.fields :+ rowIdField)
-      val readWide = StructType(readDataSchema.fields :+ rowIdField)
-      val inner = ParquetReadBridge.readerFactory(
-        spark, fileWide, readWide, readPartitionSchema, dataFilters)
-      val outTypes = (readDataSchema.fields ++ readPartitionSchema.fields)
-        .map(_.dataType)
-      new GraftReaderFactory(new DvFilteringReaderFactory(
-        inner, dvByPath, ParquetReadBridge.serializableConf(spark),
-        rowIdOrdinal = readDataSchema.length, outTypes = outTypes))
-    }
+    val man = collection.manifestFor(Some(pinnedGen))
+    GraftBatchScan.readerFactory(spark,
+      fileSchema = StructType(tableSchema.fields.filterNot(f => partColSet(f.name))),
+      readDataSchema, readPartitionSchema, out = requiredSchema,
+      man.renames, man.fills,
+      dvByPath = plannedFiles.flatMap(f => f.dv.map(f.path -> _)).toMap,
+      filters = parquetFilters)
   }
 
   // --- SupportsReportPartitioning -----------------------------------
@@ -392,16 +331,71 @@ final class GraftBatchScan(spark: SparkSession,
       runtimeAst = if (runtimeAst == FilterExpr.True) rf
                    else FilterExpr.And(runtimeAst, rf)
       planned = null
-      GraftBatchScan.lastRuntimeAst = runtimeAst
     }
   }
 }
 
 object GraftBatchScan {
-  /** Spec observables: the last runtime-filter AST applied and the last
-    * planned file count (asserting DPP actually shrank the scan). */
-  @volatile private[graft] var lastRuntimeAst: FilterExpr.Ast = FilterExpr.True
-  @volatile private[graft] var lastPlannedFiles: Int = -1
+  /** See [[GraftBatchScan.report]]. */
+  private[graft] final case class Report(pushedAst: FilterExpr.Ast,
+                                         runtimeAst: FilterExpr.Ast,
+                                         plannedFiles: Int)
+
+  private object AdaptivePlans extends AdaptiveSparkPlanHelper
+
+  /** The graft scans of an executed plan, adaptive stages included. */
+  private[graft] def in(plan: SparkPlan): Seq[GraftBatchScan] =
+    AdaptivePlans.collect(plan) { case b: BatchScanExec => b.scan }
+      .collect { case g: GraftBatchScan => g }
+
+  /** The reader factory of a native read, batch or micro-batch. The
+    * schemas speak LOGICAL names: `fileSchema` is the snapshot's
+    * declared data columns (partition columns excluded — they live in
+    * the directory names), `readData`/`readPartition` what the read
+    * needs of each, `out` the order the engine expects. `renames` maps
+    * logical to physical (file-resident) names, `fills` logical names
+    * to fill SQL, `dvByPath` absolute data-file paths to their deletion
+    * vectors. `filters` reach parquet row-group pruning, minus any on a
+    * renamed column (the files name it differently) or a fill column (a
+    * row group of nulls would be skipped although its rows read as the
+    * fill). */
+  private[graft] def readerFactory(spark: SparkSession,
+                                   fileSchema: StructType,
+                                   readData: StructType,
+                                   readPartition: StructType,
+                                   out: StructType,
+                                   renames: Map[String, String],
+                                   fills: Map[String, String],
+                                   dvByPath: Map[String, Collection.DvRef],
+                                   filters: Array[Filter]): PartitionReaderFactory = {
+    def physical(s: StructType): StructType =
+      StructType(s.fields.map(f => renames.get(f.name).fold(f)(p => f.copy(name = p))))
+    val rowId = if (dvByPath.isEmpty) Nil else Seq(StructField(Collection.RowIdCol, LongType))
+    val pushable = filters.filter(_.references.forall(c =>
+      fileSchema.fieldNames.contains(c) && !renames.contains(c) && !fills.contains(c)))
+    val inner = ParquetReadBridge.readerFactory(spark,
+      StructType(physical(fileSchema).fields ++ rowId),
+      StructType(physical(readData).fields ++ rowId), readPartition, pushable)
+    val emitted = readData.fieldNames ++ rowId.map(_.name) ++ readPartition.fieldNames
+    new GraftReaderFactory(inner,
+      sources = out.fieldNames.map(c => emitted.indexOf(c)),
+      outTypes = out.fields.map(_.dataType),
+      fills = out.fields.map(f => fills.get(f.name).map(fillValue(spark, _, f.dataType))),
+      dvByKey = dvByPath.map { case (p, r) =>
+        graft.core.DeletionVectors.pathKey(new org.apache.hadoop.fs.Path(p)) -> r },
+      rowIdOrdinal = readData.length,
+      conf = if (dvByPath.isEmpty) null else ParquetReadBridge.serializableConf(spark))
+  }
+
+  /** A column's fill SQL cast to its type and evaluated once, at
+    * planning, to a Catalyst value — the constant the DataFrame face
+    * coalesces with (`Collection.readManifestFiles`). */
+  private def fillValue(spark: SparkSession, fillSql: String, dt: DataType): Any = {
+    val e = spark.range(1).select(org.apache.spark.sql.functions.expr(fillSql).cast(dt))
+      .queryExecution.analyzed.expressions.head.children.head // under the Alias
+    require(e.foldable, s"fill '$fillSql' is not a constant")
+    e.eval()
+  }
 
   /** The shared per-key split-and-pack planner: files grouped by
     * partition key, large files sliced at the session split size,

@@ -31,8 +31,7 @@ import graft.core.{Collection, GraftNativeCommit, GraftWriterFactory}
   * Hive directory into one contiguous run and each task holds ONE open
   * parquet writer at a time — bounded memory at any partition fan-out).
   *
-  * `spark.graft.nativeWrite=false` and tables with renamed columns keep
-  * the V1 `InsertableRelation` face, which ends in [[Collection.insert]]
+  * Tables with renamed columns keep the V1 `InsertableRelation` face, which ends in [[Collection.insert]]
   * and so in the same task writer. CHECK constraints are NOT a fallback
   * (r10b): the tasks evaluate the constraint guard's exact NULL-passes
   * boolean per row, codegen'd, and raise naming the constraint — which

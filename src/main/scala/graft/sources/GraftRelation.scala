@@ -103,7 +103,6 @@ class GraftRelation(override val sqlContext: SQLContext, root: String,
     val zone = sessionZone
     val known = schema.fieldNames.toSet
     val ast = GraftRelation.toAst(filters, known, zone)
-    GraftRelation.lastScanAst = ast // test observable
     // the filters [[unhandledFilters]] claimed must be APPLIED here,
     // not just pruned — the engine dropped its own re-filter for them
     val claimed = filters.flatMap(f => GraftRelation.toAstExact(Array(f), known, zone))
@@ -116,9 +115,6 @@ class GraftRelation(override val sqlContext: SQLContext, root: String,
 
 object GraftRelation {
   private type Ast = FilterExpr.Ast
-
-  /** Last pushed-down AST — spec observable for the pruning contract. */
-  @volatile private[graft] var lastScanAst: Ast = FilterExpr.True
 
   /** Catalyst source filters → FilterExpr, best-effort: the top-level
     * array is a conjunction, so unconvertible members simply drop

@@ -4,17 +4,15 @@ import java.util.{Map => JMap, Set => JSet}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -23,11 +21,13 @@ import graft.core.{Collection, DatePartitioning, FilterExpr, GroupedSequencePart
 
 /** A graft collection as a DataSource **V2** table — what
   * [[GraftCatalog]] hands the analyzer for `graft.<ns>.<table>`
-  * identifiers. The execution paths are the PROVEN ones: scans go
-  * through [[org.apache.spark.sql.connector.read.V1Scan]] into the same
-  * pruned manifest scan as [[GraftRelation]] (Spark's own JDBC
-  * connector ships on exactly this bridge), writes through
-  * [[org.apache.spark.sql.connector.write.V1Write]] into
+  * identifiers, and (as the path face) for `spark.read.format("graft")`.
+  * Every read plans the native [[GraftBatchScan]] over Spark's parquet
+  * reader, or a [[GraftAggregateScan]] when manifest metadata answers an
+  * aggregate; `readStream.table` streams through the same reader
+  * ([[graft.streaming.GraftMicroBatchStream]]). Writes plan the native
+  * [[GraftNativeWrite]], except on tables with renamed columns, which
+  * write through [[org.apache.spark.sql.connector.write.V1Write]] into
   * [[Collection.insert]]/[[Collection.overwrite]]. What V2 adds on top
   * of the V1 relation:
   *
@@ -50,10 +50,11 @@ import graft.core.{Collection, DatePartitioning, FilterExpr, GroupedSequencePart
   *    — and `MIN`/`MAX` over the axis or a declared stats column from
   *    the zone-map rollup (E6/E7) — zero data files opened at any
   *    collection size;
-  *  - EXACTLY-translatable predicates are claimed and applied in-scan
-  *    (prune + row filter), so the engine drops its post-scan Filter;
-  *    anything outside the exact domain falls back to the weakened
-  *    pruning-only contract with full engine re-application;
+  *  - partition-exact predicates (translated EXACTLY, partition
+  *    columns only, decided on every partition key) are claimed: file
+  *    pruning enforces them, so the engine drops its post-scan Filter;
+  *    every other predicate prunes (weakened where it must be) and is
+  *    re-applied by the engine;
   *  - exact `sizeInBytes`/`rowCount` statistics from the manifest byte
   *    rollup (E32), so a small graft dimension auto-broadcasts in joins
   *    against big facts.
@@ -146,10 +147,9 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
     * strategy requires the capability set and the built `Write` to
     * agree: a table advertising `V1_BATCH_WRITE` must build a
     * `V1Write`; one that doesn't must build a `toBatch`-capable Write.
-    * The bridge serves tables with renamed columns, and
-    * `spark.graft.nativeWrite=false` pins it (CHECK constraints stopped
-    * being a fallback in r10b — the native tasks enforce them per
-    * row).
+    * The bridge serves tables with renamed columns (CHECK constraints
+    * stopped being a fallback in r10b — the native tasks enforce them
+    * per row).
     *
     * CACHED (lazy val) and NON-THROWING: `capabilities()` consults this
     * on every `Table.supports()` probe during analysis and planning —
@@ -163,10 +163,8 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
     * and write planning still fails loudly in
     * [[GraftWriteBuilder.build]]. */
   private[sources] lazy val nativeWriteEligible: Boolean =
-    try {
-      spark.conf.get("spark.graft.nativeWrite", "true").toBoolean &&
-        collection.nativeWriteCompatible
-    } catch { case scala.util.control.NonFatal(_) => false }
+    try collection.nativeWriteCompatible
+    catch { case scala.util.control.NonFatal(_) => false }
 
   /** OVERWRITE_DYNAMIC rides the native write only (r10): the V1 write
     * bridge covers append and overwrite-by-filter (`V1FallbackWriters`),
@@ -175,21 +173,9 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
     * `df.write.format("graft").mode("overwrite")` with
     * `partitionOverwriteMode=dynamic`, or [[Collection.insert]] with
     * `MergeStrategy.Replace`, which land on the same atomic commit.
-    *
-    * MICRO_BATCH_READ is advertised only when the table can actually
-    * stream (r11, closing the r10 verdict's #5): fill-bearing columns
-    * or a non-native partition-key type force the V1 bridge, which has
-    * no micro-batch stream — withholding the capability turns what was
-    * a stream-START UnsupportedOperationException into Spark's own
-    * ANALYSIS-time "does not support micro-batch scan" error, matching
-    * the write side's capability discipline. A fill added between table
-    * load and stream start still fails loudly at start
-    * (GraftV1Scan.toMicroBatchStream keeps its message) — that race is
-    * irreducible by any capability probe. */
-  private[sources] lazy val nativeStreamEligible: Boolean =
-    try collection.nativeStreamCompatible
-    catch { case scala.util.control.NonFatal(_) => false }
-
+    * Every catalog table streams (MICRO_BATCH_READ): the micro-batch
+    * reader applies fills, renames and every partition-key type like
+    * the batch scan. */
   override def capabilities(): JSet[TableCapability] = {
     // the path face reads natively but keeps EVERY write on the V1
     // bridge: V1_BATCH_WRITE serves session-catalog `USING graft`
@@ -204,10 +190,10 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
       TableCapability.OVERWRITE_BY_FILTER)
     val base = new java.util.HashSet[TableCapability](JSet.of(
       TableCapability.BATCH_READ,
+      TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER))
-    if (nativeStreamEligible) base.add(TableCapability.MICRO_BATCH_READ)
     if (nativeWriteEligible) {
       // r10: the native BatchWrite expresses dynamic partition replace
       // (commit with replaced = touched partitions), so dynamic INSERT
@@ -216,16 +202,11 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
       // rides the same eligibility: `writeStream.toTable` plans the
       // native exactly-once epoch sink (CHECK constraints enforce
       // in-task since r10b, so constrained tables stream too; only
-      // exotic partition-key types remain on the V1 bridge)
-      val s = new java.util.HashSet[TableCapability](base)
-      s.add(TableCapability.OVERWRITE_DYNAMIC)
-      s.add(TableCapability.STREAMING_WRITE)
-      s
-    } else {
-      val s = new java.util.HashSet[TableCapability](base)
-      s.add(TableCapability.V1_BATCH_WRITE)
-      s
-    }
+      // tables with renamed columns remain on the V1 bridge)
+      base.add(TableCapability.OVERWRITE_DYNAMIC)
+      base.add(TableCapability.STREAMING_WRITE)
+    } else base.add(TableCapability.V1_BATCH_WRITE)
+    base
   }
 
   // --- read ---------------------------------------------------------
@@ -290,9 +271,10 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
 
 /** Pushdown state machine for one scan: filters compile (weakening,
   * polarity-tracked) into the [[FilterExpr]] skip stack, projections
-  * narrow the final select, and an eligible aggregate replaces the scan
-  * with manifest metadata. All pushed filters are ALSO returned as
-  * post-scan filters — pruning can only skip files, never change a row. */
+  * narrow the read, and an eligible aggregate replaces the scan with
+  * manifest metadata. Pushed filters are returned as post-scan filters
+  * unless file pruning provably enforces them (`exactPush`) — pruning
+  * can only skip files, never change a row. */
 class GraftScanBuilder(spark: SparkSession, collection: Collection,
                        tableSchema: StructType, asOfGen: Option[Long],
                        scanOptions: Map[String, String] = Map.empty)
@@ -310,31 +292,30 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
   private var requiredSchema: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var ast: FilterExpr.Ast = FilterExpr.True
-  /** The pushed filters translated EXACTLY (the DELETE-grade strict
-    * translator): the scan then applies `ast` row-level itself and
-    * claims the filters handled — which is what unlocks FILTERED
-    * aggregate pushdown (Spark never offers an aggregate to a source
-    * that left post-scan filters behind). */
+  /** The pushed filters are CLAIMED: they translate EXACTLY (the
+    * DELETE-grade strict translator), name partition columns only and
+    * decide every partition of the pinned generation, so file pruning
+    * alone enforces them and the engine drops its re-filter — which is
+    * what unlocks FILTERED aggregate pushdown (Spark never offers an
+    * aggregate to a source that left post-scan filters behind). */
   private var exactPush: Boolean = false
   /** When an aggregate pushed completely: (output schema, the
     * metadata-computed rows — one for a global aggregate, one per
     * group for a partition-column GROUP BY). */
   private var aggResult: Option[(StructType, Seq[Row])] = None
 
-  /** Native batch scans on by default; `spark.graft.nativeScan=false`
-    * pins every catalog read to the proven V1 DataFrame bridge. */
-  private def nativeMode: Boolean =
-    spark.conf.get("spark.graft.nativeScan", "true").toBoolean
+  /** The generation every answer of this scan reads — the claim, the
+    * metadata aggregate and the file plan — pinned on the builder's
+    * first manifest read (`asOfGen` when time-travelling, else the
+    * head), so none of them can see a commit that raced the others. */
+  private lazy val pin: Long = collection.manifestFor(asOfGen).generation
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
       java.util.TimeZone.getDefault.getID))
     pushed = filters
     GraftRelation.toAstExact(filters, fullSchema.fieldNames.toSet, zone) match {
-      case Some(exact) if !nativeMode =>
-        ast = exact; exactPush = true
-        Array.empty // fully handled: pruned AND applied row-level in-scan
-      case Some(exact) if collection.canClaimStrict(exact, asOfGen) =>
+      case Some(exact) if collection.canClaimStrict(exact, Some(pin)) =>
         // partition-only + strictly decidable on every partition key:
         // file-level pruning IS exact row-level filtering (every row of
         // a kept file shares the key), so the native scan claims it
@@ -388,7 +369,7 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
       // filtered bounds answer when the (exact) predicate is partition-
       // aligned: merged per-file zone maps of exactly the matching
       // partitions — same metadata contract as the filtered count
-      collection.columnBoundsAst(name, ast, asOfGen)
+      collection.columnBoundsAst(name, ast, Some(pin))
         .map { case (lo, up) => (if (hi) up else lo, dt) }
     }
 
@@ -398,7 +379,7 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
         // when the (exact) predicate is partition-aligned — O(shards),
         // zero data files, `SELECT count(*) ... WHERE day = 3` at any
         // collection size; anything metadata can't prove refuses
-        collection.countRowsMeta(ast, asOfGen)
+        collection.countRowsMeta(ast, Some(pin))
           .map(n => (StructField("count(*)", LongType, nullable = false), n))
       case m: Min =>
         for {
@@ -475,7 +456,7 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
       }
     if (aggSpecs.isEmpty) return None
     val boundsFor = aggSpecs.flatMap(_._2).map(_._1).distinct
-    collection.groupedAggMeta(groupCols, ast, boundsFor, asOfGen).map { groups =>
+    collection.groupedAggMeta(groupCols, ast, boundsFor, Some(pin)).map { groups =>
       val gTypes = groupCols.map(c => fullSchema(fullSchema.fieldIndex(c)).dataType)
       val schema = StructType(
         // nullable: a null-keyed partition surfaces as a SQL NULL group
@@ -541,105 +522,29 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
   }
   override def isPartiallyPushed(): Boolean = true
 
-  override def build(): Scan = {
-    def v1 = new GraftV1Scan(spark, collection, requiredSchema, ast, asOfGen,
-      aggResult, applyAst = exactPush, limit = limit)
-    if (aggResult.isDefined || !nativeMode) return v1
-    // fills surface through the DataFrame path's coalesce — a read or
-    // filter touching a fill-bearing column keeps the proven bridge;
-    // renamed columns likewise (r11): the bridge scan requests the
-    // physical name and aliases back, the native reader doesn't (yet)
-    val touched = requiredSchema.fieldNames.toSet ++ FilterExpr.names(ast)
-    if (collection.fillColumns(asOfGen).exists(touched)) return v1
-    if (collection.renamedColumns(asOfGen).exists(touched)) return v1
-    // pin the generation every (re-)plan of this scan reads: runtime
-    // (DPP) re-planning must see the SAME snapshot the query planned
-    // against, not whatever a concurrent writer committed since
-    val pin: Option[Long] = asOfGen.orElse(
-      if (collection.generations().nonEmpty) Some(collection.generation) else None)
-    // a CLAIMED filter was validated against the pushFilters-time
-    // manifest; a commit could have raced in between (e.g. a new
-    // null-key partition the strict eval cannot decide). Re-prove the
-    // claim against the pin — the V1 path row-filters, so falling back
-    // is always row-exact.
-    if (exactPush && ast != FilterExpr.True &&
-        !collection.canClaimStrict(ast, pin)) return v1
-    collection.nativeScanPlan(ast, pin, limit.map(_.toLong)) match {
-      case Some(files) =>
-        new GraftBatchScan(spark, collection, requiredSchema, ast, asOfGen,
-          limit.map(_.toLong), pushed, prePlanned = Some(files),
-          streamOptions = scanOptions, pinnedGen = pin, claimed = exactPush)
-      case None => v1 // undecodable key / unsupported partition type
-    }
+  /** A metadata aggregate answer becomes a [[LocalScan]] of its rows
+    * (Spark plans a `LocalTableScanExec`: no data file opens); every
+    * other read is the native [[GraftBatchScan]] over the pinned
+    * generation. */
+  override def build(): Scan = aggResult match {
+    case Some((s, rows)) => new GraftAggregateScan(collection.root, s, rows)
+    case None =>
+      new GraftBatchScan(spark, collection, tableSchema, requiredSchema, ast, asOfGen,
+        limit.map(_.toLong), pushed, scanOptions, pin, claimed = exactPush)
   }
 }
 
-/** V2 scan executing through the V1 bridge — the same
-  * `scanWithAst → select → toRdd` path [[GraftRelation.buildScan]]
-  * runs, so pruning, schema evolution, and fills behave identically in
-  * both SQL surfaces. Reports exact manifest statistics for CBO. */
-class GraftV1Scan(spark: SparkSession, collection: Collection,
-                  requiredSchema: StructType, ast: FilterExpr.Ast,
-                  asOfGen: Option[Long],
-                  aggResult: Option[(StructType, Seq[Row])],
-                  applyAst: Boolean = false,
-                  limit: Option[Int] = None)
-    extends V1Scan with SupportsReportStatistics {
-
-  override def readSchema(): StructType = aggResult.map(_._1).getOrElse(requiredSchema)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    throw new UnsupportedOperationException(
-      s"this read of ${collection.root} fell back to the V1 bridge " +
-        "(fill-bearing columns or an unsupported partition-key type) and cannot " +
-        "stream through readStream.table — use " +
-        "spark.readStream.format(\"graft\").load(path) instead")
-
-  override def description(): String = aggResult match {
-    case Some((s, _)) => s"graft ${collection.root} metadata-agg ${s.fieldNames.mkString(", ")}"
-    case None => s"graft ${collection.root} ast=$ast"
+/** A metadata aggregate answer ([[GraftScanBuilder]]'s `COUNT`/`MIN`/
+  * `MAX` pushdown) as a DSv2 local scan of its rows. */
+final class GraftAggregateScan(root: String, schema: StructType, answer: Seq[Row])
+    extends LocalScan {
+  override def readSchema(): StructType = schema
+  override def rows(): Array[InternalRow] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    answer.map(r => toCatalyst(r).asInstanceOf[InternalRow]).toArray
   }
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): java.util.OptionalLong =
-      (try collection.sizeOnDisk() catch { case _: Exception => None }) match {
-        case Some(b) => java.util.OptionalLong.of(b)
-        case None    => java.util.OptionalLong.empty()
-      }
-    override def numRows(): java.util.OptionalLong = {
-      val n = try collection.countRows() catch { case _: Exception => -1L }
-      if (n < 0) java.util.OptionalLong.empty() else java.util.OptionalLong.of(n)
-    }
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T = {
-    val scan = this
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = scan.readSchema()
-      override def needConversion: Boolean = false
-      override def buildScan(): RDD[Row] = {
-        val df = aggResult match {
-          case Some((s, rows)) =>
-            context.sparkSession.createDataFrame(
-              new java.util.ArrayList[Row](rows.asJava), s)
-          case None =>
-            GraftRelation.lastScanAst = ast // shared spec observable
-            val scanned = limit.flatMap(n => collection.scanHead(n, asOfGen))
-              .getOrElse(collection.scanWithAst(ast, asOfGen))
-            // exact pushdown: the engine dropped its Filter — apply the
-            // predicate row-level here (files were only PRUNED by stats)
-            val filtered =
-              if (applyAst && ast != FilterExpr.True)
-                scanned.where(FilterExpr.toColumn(ast))
-              else scanned
-            filtered.select(requiredSchema.fieldNames.toSeq.map(col): _*)
-        }
-        df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-      }
-    }.asInstanceOf[T]
-  }
+  override def description(): String =
+    s"graft $root metadata-agg ${schema.fieldNames.mkString(", ")}"
 }
 
 /** INSERT INTO (append), static INSERT OVERWRITE (truncate-and-write),

@@ -673,9 +673,9 @@ class GraftCollectionSourceProvider extends StreamSourceProvider with DataSource
   //
   // `spark.read.format("graft").load(root)` resolves through HERE,
   // handing the analyzer the same GraftTable the catalog face uses —
-  // so path-based reads get the native vectorized BatchScan, filtered
-  // metadata-aggregate pushdown, and exact statistics, with the proven
-  // fill/AS-OF fallbacks. The table advertises BATCH_READ ONLY
+  // so path-based reads get the native vectorized BatchScan (fills,
+  // renames and AS OF included), filtered metadata-aggregate pushdown,
+  // and exact statistics. The table advertises BATCH_READ ONLY
   // (GraftTable.pathFace): DataFrameWriter sees no BATCH_WRITE and
   // falls back to this class's CreatableRelationProvider (preserving
   // dynamic partition overwrite), and DataStreamReader/Writer see no

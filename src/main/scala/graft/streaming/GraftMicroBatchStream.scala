@@ -6,20 +6,20 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
   Offset => OffsetV2, ReadLimit, SupportsAdmissionControl,
   SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.graftbridge.ParquetReadBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Collection, FilterExpr}
-import graft.sources.{GraftBatchScan, GraftReaderFactory}
+import graft.core.FilterExpr
+import graft.sources.GraftBatchScan
 
 /** DSv2 MICRO-BATCH stream over a graft collection — what
   * `spark.readStream.table("graft.db.t")` executes (r9b). Offsets,
   * pacing, manifest diffing, the compaction-rewrite skip, and filter
   * pruning all come from the PROVEN [[GraftCollectionSource]] engine
   * (`batchFiles`); this class only plans each micro-batch's file set as
-  * NATIVE parquet input partitions (the same vectorized
-  * [[ParquetReadBridge]] stack as the batch [[GraftBatchScan]]), so the
-  * catalog's streaming face reads columnar with zero `Row` bridging.
+  * NATIVE parquet input partitions, read through the batch scan's
+  * reader factory ([[GraftBatchScan.readerFactory]]) — vectorized with
+  * zero `Row` bridging, and with fills and renamed columns applied
+  * under the names and fills of the snapshot the stream started on.
   *
   * Options (`readStream.option(...)`), same names as `format("graft")`:
   * `maxGenerationsPerBatch`, `filters`, `startingGeneration`,
@@ -34,7 +34,7 @@ import graft.sources.{GraftBatchScan, GraftReaderFactory}
   * so every filter that reaches it must be ROW-EXACT at file
   * granularity: the `filters` option and any builder-claimed predicate
   * must be partition-only and strictly decidable on every partition key
-  * ([[Collection.canClaimStrict]]), checked at stream start AND against
+  * ([[graft.core.Collection.canClaimStrict]]), checked at stream start AND against
   * every batch's end manifest (a later commit can introduce a null or
   * undecidable partition key — the stream then fails loudly instead of
   * silently delivering rows the filter excludes). Row-level filters
@@ -60,6 +60,7 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
   private val partCols = collection.partColumns
   private val partColSet = partCols.toSet
   private val pinned = source.pinnedDataSchema
+  private val startManifest = collection.manifestFor(None)
 
   /** Everything that must hold row-exactly with no engine re-filter:
     * the `filters` option plus the builder-claimed predicate. */
@@ -69,18 +70,11 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
     case (f, c)               => FilterExpr.And(f, c)
   }
 
-  {
-    val touched = requiredSchema.fieldNames.toSet ++ FilterExpr.names(pushedAst)
-    val fills = collection.fillColumns(None).filter(touched)
-    require(fills.isEmpty,
-      s"readStream.table cannot serve fill-bearing column(s) ${fills.mkString(", ")} " +
-        "natively — stream with spark.readStream.format(\"graft\").load(path) instead")
-    require(mustHold == FilterExpr.True || collection.canClaimStrict(mustHold, None),
-      "readStream.table filters must be PARTITION-EXACT (partition columns only, " +
-        s"strictly decidable on every partition key): '$mustHold' is not — " +
-        "apply row-level predicates as .where(...) on the stream, or use " +
-        "spark.readStream.format(\"graft\") which re-filters rows")
-  }
+  require(mustHold == FilterExpr.True || collection.canClaimStrict(mustHold, None),
+    "readStream.table filters must be PARTITION-EXACT (partition columns only, " +
+      s"strictly decidable on every partition key): '$mustHold' is not — " +
+      "apply row-level predicates as .where(...) on the stream, or use " +
+      "spark.readStream.format(\"graft\") which re-filters rows")
 
   private val readPartitionSchema = StructType(
     requiredSchema.fields.filter(f => partColSet(f.name)))
@@ -203,9 +197,7 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
       case FilterExpr.True => diffed
       case ast             => collection.pruneFilesForRead(man, diffed, ast)
     }
-    val native = collection.nativeFilesFor(man, files).getOrElse(
-      throw new IllegalStateException(
-        s"native streaming plan unavailable for $root (validated at scan build)"))
+    val native = collection.nativeFilesFor(man, files)
     // DELETION VECTORS (r11): this factory's reader is built once with
     // the unwidened schema — delivering a DV'd file would resurrect its
     // deleted rows mid-stream. Refuse loudly; the append stream's
@@ -221,16 +213,12 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
     GraftBatchScan.packByKey(spark, native, keyProjection)._1
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = new GraftReaderFactory(ParquetReadBridge.readerFactory(
-      spark, fileDataSchema, readDataSchema, readPartitionSchema,
-      Array.empty))
-    // the engine pins the streaming relation to the TABLE column order,
-    // while the parquet stack emits data columns then partition columns
-    val emitted = StructType(readDataSchema.fields ++ readPartitionSchema.fields)
-    if (emitted == requiredSchema) inner
-    else new graft.sources.PermutingReaderFactory(inner, emitted, requiredSchema)
-  }
+  /** The engine pins the streaming relation to the TABLE column order
+    * (`requiredSchema`). */
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftBatchScan.readerFactory(spark, fileDataSchema, readDataSchema,
+      readPartitionSchema, out = requiredSchema, startManifest.renames,
+      startManifest.fills, dvByPath = Map.empty, filters = Array.empty)
 
   override def commit(end: OffsetV2): Unit = ()
   override def stop(): Unit = ()

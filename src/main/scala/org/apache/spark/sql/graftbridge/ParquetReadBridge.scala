@@ -3,12 +3,14 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile,
+  PartitioningUtils}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** Same-package bridge into Spark's file-source execution machinery for
@@ -75,6 +77,15 @@ object ParquetReadBridge {
       partitionSchema, filters, None,
       new ParquetOptions(Map.empty[String, String], conf))
   }
+
+  /** A partition directory's value, still path-escaped (`e=<raw>`), as
+    * the Catalyst internal value of the key type `dt` — the routine
+    * Spark's partition inference applies under a declared schema, so
+    * the native scan and [[ManifestFileIndex]] decode every key type
+    * alike (the Hive null sentinel reads as null). */
+  def partitionValue(dt: DataType, raw: String, zone: java.time.ZoneId): Any =
+    if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+    else PartitioningUtils.castPartValueToDesiredType(dt, raw, zone)
 
   /** Pack slices into one executable input partition (the
     * [[FilePartition]] shape [[ParquetPartitionReaderFactory]] reads). */

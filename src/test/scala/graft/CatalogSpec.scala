@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Collection, FilterExpr}
-import graft.sources.GraftRelation
 
 /** The graft DataSource-V2 catalog (round 9): `graft.<ns>.<table>`
   * identifiers resolve to warehouse-rooted collections and the whole
@@ -16,7 +15,7 @@ class CatalogSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", CatalogSpec.warehouse)
-    GraftExtensions.register(s) // stats-restore rule for V1-bridged scans
+    GraftExtensions.register(s)
     s
   }
   import spark.implicits._
@@ -51,12 +50,11 @@ class CatalogSpec extends AnyFunSuite {
     val shown = sql("SHOW TABLES IN graft.db1").collect().map(_.getString(1)).toSeq
     assert(shown.contains("events"))
 
-    // filters push into the skip stack (shared observable with the V1 path)
-    GraftRelation.lastScanAst = FilterExpr.True
-    val got = sql("SELECT v FROM graft.db1.events WHERE user_id = 1")
-      .collect().map(_.getDouble(0)).sorted.toSeq
+    // filters push into the skip stack
+    val filtered = sql("SELECT v FROM graft.db1.events WHERE user_id = 1")
+    val got = filtered.collect().map(_.getDouble(0)).sorted.toSeq
     assert(got == Seq(1.0, 4.0))
-    assert(GraftRelation.lastScanAst != FilterExpr.True,
+    assert(ScanPlans.graftScans(filtered).map(_.report.pushedAst) != Seq(FilterExpr.True),
       "catalog scans must push filters like the V1 relation does")
 
     // derived partition components are METADATA columns: queryable +
@@ -173,17 +171,10 @@ class CatalogSpec extends AnyFunSuite {
     mkEvents("graft.db5.agg")
 
     val q = sql("SELECT count(*), min(ts), max(ts), min(user_id), max(user_id) FROM graft.db5.agg")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates: [COUNT(*)"),
-      s"aggregate must push to the metadata scan; got plan:\n$plan")
-    assert(!plan.contains("HashAggregate"),
-      s"complete pushdown leaves no re-aggregation in the plan:\n$plan")
-    // r10 pin: under the DEFAULT native scan, the metadata answer must
-    // keep planning ZERO parquet reads — no BatchScan node may appear
-    // (the aggregate resolves before the native/V1 scan choice is made)
-    assert(spark.conf.get("spark.graft.nativeScan", "true") == "true")
-    assert(!plan.contains("BatchScan"),
-      s"metadata aggregate must not schedule a data scan:\n$plan")
+    // the metadata answer is the plan's only leaf: a local scan of its
+    // rows, no parquet scan of either kind and no re-aggregation
+    assert(ScanPlans.answeredFromMetadata(q),
+      s"aggregate must answer from metadata; got plan:\n${q.queryExecution.executedPlan}")
     val r = q.collect().head
     assert(r.getLong(0) == 4)
     assert(r.getTimestamp(1).toInstant == java.time.Instant.parse("2024-01-01T08:00:00Z"))
@@ -210,9 +201,8 @@ class CatalogSpec extends AnyFunSuite {
       .collect().head.getLong(0)
     val q4 = sql(s"SELECT count(*), max(user_id) FROM graft.db5.agg " +
       s"VERSION AS OF ${gens - 1}")
-    val p4 = q4.queryExecution.executedPlan.toString
-    assert(p4.contains("PushedAggregates: [COUNT(*)") && !p4.contains("BatchScan"),
-      s"pinned aggregates must stay metadata-only:\n$p4")
+    assert(ScanPlans.answeredFromMetadata(q4),
+      s"pinned aggregates must stay metadata-only:\n${q4.queryExecution.executedPlan}")
     val r4 = q4.collect().head
     assert(r4.getLong(0) == 4 && r4.getLong(1) == 3,
       s"pinned count/max must answer at the snapshot, not the head: $r4")
@@ -229,35 +219,21 @@ class CatalogSpec extends AnyFunSuite {
     // zone maps of exactly the matching partitions — O(shards), zero
     // data files
     val q = sql("SELECT count(*), min(ts), max(user_id) FROM graft.db10.fcnt WHERE day <= 2")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates: [COUNT(*)"),
-      s"filtered count must push to the metadata scan; got plan:\n$plan")
-    assert(!plan.contains("HashAggregate"),
-      s"complete pushdown leaves no re-aggregation in the plan:\n$plan")
-    assert(!plan.contains("BatchScan"),
-      s"filtered metadata count must not schedule a data scan (r10 pin):\n$plan")
+    assert(ScanPlans.answeredFromMetadata(q),
+      s"filtered count must answer from metadata:\n${q.queryExecution.executedPlan}")
     val r0 = q.collect().head
     assert(r0.getLong(0) == 3)
     assert(r0.getTimestamp(1).toInstant == java.time.Instant.parse("2024-01-01T08:00:00Z"))
     assert(r0.getLong(2) == 3)
 
-    // exact DATA-column predicate: under the NATIVE scan (default) the
-    // engine re-applies it vectorized above the columnar scan (the
-    // stock parquet residual contract — parquet row-group pruning still
-    // sees the filter); under the V1 bridge the scan claims it and no
-    // post-scan Filter remains. Rows identical either way.
-    val q2sql = "SELECT user_id, v FROM graft.db10.fcnt WHERE user_id = 1 AND day >= 2"
-    assert(sql(q2sql).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
-      Seq((1L, 4.0)))
-    spark.conf.set("spark.graft.nativeScan", "false")
-    try {
-      val q2 = sql(q2sql)
-      val noFilter = q2.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FilterExec => f
-      }.isEmpty
-      assert(noFilter, "an exactly-translated predicate leaves no post-scan Filter (V1)")
-      assert(q2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((1L, 4.0)))
-    } finally spark.conf.set("spark.graft.nativeScan", "true")
+    // exact DATA-column predicate: the engine re-applies it vectorized
+    // above the columnar scan (the stock parquet residual contract —
+    // parquet row-group pruning still sees the filter)
+    val q2 = sql("SELECT user_id, v FROM graft.db10.fcnt WHERE user_id = 1 AND day >= 2")
+    assert(q2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((1L, 4.0)))
+    assert(q2.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FilterExec => f
+    }.nonEmpty, "a data-column predicate stays a post-scan Filter")
 
     // a filter metadata can't count (data column) still refuses the
     // aggregate — but the exact in-scan filter keeps the result right
@@ -269,13 +245,8 @@ class CatalogSpec extends AnyFunSuite {
     // one row per group from the per-partition recorded counts
     val q5 = sql(
       "SELECT day, count(*) AS n FROM graft.db10.fcnt GROUP BY day ORDER BY day")
-    val p5 = q5.queryExecution.executedPlan.toString
-    assert(p5.contains("PushedAggregates: [COUNT(*)"),
-      s"grouped count must push to the metadata scan:\n$p5")
-    assert(!p5.contains("HashAggregate"),
-      s"complete grouped pushdown leaves no re-aggregation:\n$p5")
-    assert(!p5.contains("BatchScan"),
-      s"grouped metadata count must not schedule a data scan (r10 pin):\n$p5")
+    assert(ScanPlans.answeredFromMetadata(q5),
+      s"grouped count must answer from metadata:\n${q5.queryExecution.executedPlan}")
     assert(q5.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq ==
       Seq((1, 2L), (2, 1L), (3, 1L)))
     // composed with a partition-aligned filter
@@ -306,13 +277,13 @@ class CatalogSpec extends AnyFunSuite {
 
     // unfiltered LIMIT schedules files only until recorded rows cover
     // it — one file of the three partitions, not the collection
-    assert(sql("SELECT * FROM graft.db10.fcnt LIMIT 1").count() == 1)
+    val limited = sql("SELECT * FROM graft.db10.fcnt LIMIT 1")
+    assert(limited.collect().length == 1, "the budgeted file set is a superset of n rows")
     val c10 = Collection.open(spark, s"${CatalogSpec.warehouse}/db10/fcnt",
       readOnly = true)
-    val head = c10.scanHead(1, None).get
-    assert(head.inputFiles.length < c10.query().inputFiles.length,
+    assert(ScanPlans.graftScans(limited).map(_.report.plannedFiles).sum <
+      c10.query().inputFiles.length,
       "the LIMIT file budget must schedule fewer files than the full scan")
-    assert(head.count() >= 1, "the budgeted file set is a superset of n rows")
     // filtered LIMIT refuses the file budget and stays correct
     assert(sql("SELECT * FROM graft.db10.fcnt WHERE day >= 2 LIMIT 2").count() == 2)
   }

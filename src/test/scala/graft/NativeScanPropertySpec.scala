@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Property fuzz for the native DSv2 batch scan (r9b): random filter
   * trees over partition components and data columns, random
   * projections, random LIMITs — every shape must return row-identical
-  * results under the native scan and the V1 bridge (the proven path).
-  * Seeded: failures reproduce. */
+  * results under the native scan and the DataFrame face, a stock V1
+  * parquet `FileSourceScanExec` over the same manifest
+  * ([[ScanPlans.dataFrameView]]). Seeded: failures reproduce. */
 class NativeScanPropertySpec extends AnyFunSuite {
   lazy val spark = {
     val s = SparkTestSession.spark
@@ -30,7 +31,11 @@ class NativeScanPropertySpec extends AnyFunSuite {
       s"(TIMESTAMP'2024-02-0$day $hh:13:00', ${rnd.nextInt(50)}, ${rnd.nextInt(1000) / 100.0}, $tag)"
     }
     sql(s"INSERT INTO graft.nsp.fz VALUES ${rows.mkString(", ")}")
+    ScanPlans.dataFrameView(spark, s"${CatalogSpec.warehouse}/nsp/fz", "nsp_fz_df")
   }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   private def randPredicate(rnd: scala.util.Random, depth: Int): String = {
     def leaf(): String = rnd.nextInt(8) match {
@@ -60,12 +65,20 @@ class NativeScanPropertySpec extends AnyFunSuite {
       val proj = projections(rnd.nextInt(projections.length))
       val pred = randPredicate(rnd, 2)
       val q = s"SELECT $proj FROM graft.nsp.fz WHERE $pred"
-      val native = sql(q).collect().map(_.toString).sorted.toSeq
-      spark.conf.set("spark.graft.nativeScan", "false")
-      val v1 = try sql(q).collect().map(_.toString).sorted.toSeq
-        finally spark.conf.set("spark.graft.nativeScan", "true")
+      // the view's SELECT * would add the derived partition columns
+      val refProj = if (proj == "*") "ts, user_id, v, tag" else proj
+      val graftDf = sql(q)
+      val refDf = sql(s"SELECT $refProj FROM nsp_fz_df WHERE $pred")
+      val native = rowsOf(graftDf)
+      val v1 = rowsOf(refDf)
       assert(native == v1,
         s"shape $i diverged\n  query: $q\n  native=${native.size} v1=${v1.size}")
+      // never native against native: the reference scans through the
+      // file source, and wherever it scans, the graft read is BatchScan
+      assert(ScanPlans.batchScans(refDf) == 0, s"shape $i: reference planned a BatchScan")
+      assert(ScanPlans.fileScans(graftDf) == 0, s"shape $i: graft read planned a FileScan")
+      assert(ScanPlans.fileScans(refDf) == 0 || ScanPlans.batchScans(graftDf) == 1,
+        s"shape $i: graft read must plan BatchScan\n  query: $q")
     }
   }
 
@@ -78,10 +91,11 @@ class NativeScanPropertySpec extends AnyFunSuite {
     }
     val agg = "SELECT day, count(*) AS c, min(user_id) AS lo, max(user_id) AS hi " +
       "FROM graft.nsp.fz GROUP BY day"
-    val native = sql(agg).collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.nativeScan", "false")
-    val v1 = try sql(agg).collect().map(_.toString).sorted.toSeq
-      finally spark.conf.set("spark.graft.nativeScan", "true")
-    assert(native == v1)
+    val graftDf = sql(agg)
+    val refDf = sql(agg.replace("graft.nsp.fz", "nsp_fz_df"))
+    assert(rowsOf(graftDf) == rowsOf(refDf))
+    assert(ScanPlans.answeredFromMetadata(graftDf),
+      s"the grouped aggregate answers from metadata:\n${graftDf.queryExecution.executedPlan}")
+    assert(ScanPlans.fileScans(refDf) == 1 && ScanPlans.batchScans(refDf) == 0)
   }
 }

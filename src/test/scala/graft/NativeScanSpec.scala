@@ -7,13 +7,13 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Collection, FilterExpr}
-import graft.sources.GraftBatchScan
 
 /** The NATIVE DSv2 batch scan (round 9): catalog reads plan
   * `BatchScanExec` over Spark's vectorized parquet reader with
   * manifest-planned file sets — unlocking runtime (join-driven) file
   * pruning and storage-partitioned joins — while staying row-identical
-  * to the proven V1 bridge on every query shape. */
+  * on every query shape to the DataFrame face, a stock parquet
+  * `FileSourceScanExec` over the same manifest ([[ScanPlans.dataFrameView]]). */
 class NativeScanSpec extends AnyFunSuite {
   lazy val spark = {
     val s = SparkTestSession.spark
@@ -33,9 +33,6 @@ class NativeScanSpec extends AnyFunSuite {
       case (k, None)    => spark.conf.unset(k)
     }
   }
-
-  private def withV1[T](f: => T): T =
-    withConf("spark.graft.nativeScan" -> "false")(f)
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -63,22 +60,27 @@ class NativeScanSpec extends AnyFunSuite {
 
   test("native catalog reads plan BatchScan and match the V1 bridge on every shape") {
     setup
+    ScanPlans.dataFrameView(spark, s"${CatalogSpec.warehouse}/nsc/events", "nsc_events_df")
     val shapes = Seq(
-      "SELECT * FROM graft.nsc.events",
-      "SELECT v FROM graft.nsc.events WHERE user_id = 1",
-      "SELECT user_id, v FROM graft.nsc.events WHERE day = 2",
-      "SELECT day, user_id FROM graft.nsc.events WHERE day >= 2 AND v < 4.0",
-      "SELECT ts, v FROM graft.nsc.events WHERE ts >= TIMESTAMP'2024-01-02 00:00:00'",
-      "SELECT v FROM graft.nsc.events WHERE user_id = 1 OR v > 2.5",
-      "SELECT year, month, day, v FROM graft.nsc.events",
-      "SELECT count(*) AS c FROM graft.nsc.events WHERE v IS NOT NULL")
-    for (q <- shapes)
-      assert(rowsOf(sql(q)) == withV1(rowsOf(sql(q))), s"native != v1 for: $q")
-
-    assert(sql("SELECT v FROM graft.nsc.events").queryExecution.executedPlan
-      .toString.contains("BatchScan"), "native mode must plan BatchScanExec")
-    assert(withV1(sql("SELECT v FROM graft.nsc.events").queryExecution.executedPlan
-      .toString).contains("Scan graft"), "conf off must keep the V1 bridge")
+      "SELECT ts, user_id, v FROM $t",
+      "SELECT v FROM $t WHERE user_id = 1",
+      "SELECT user_id, v FROM $t WHERE day = 2",
+      "SELECT day, user_id FROM $t WHERE day >= 2 AND v < 4.0",
+      "SELECT ts, v FROM $t WHERE ts >= TIMESTAMP'2024-01-02 00:00:00'",
+      "SELECT v FROM $t WHERE user_id = 1 OR v > 2.5",
+      "SELECT year, month, day, v FROM $t",
+      "SELECT count(*) AS c FROM $t WHERE v IS NOT NULL")
+    for (shape <- shapes) {
+      val q = sql(shape.replace("$t", "graft.nsc.events"))
+      val ref = sql(shape.replace("$t", "nsc_events_df"))
+      assert(rowsOf(q) == rowsOf(ref), s"native != DataFrame face for: $shape")
+      assert(ScanPlans.batchScans(q) == 1 && ScanPlans.fileScans(q) == 0,
+        s"the catalog read must plan BatchScanExec: $shape")
+      assert(ScanPlans.batchScans(ref) == 0 && ScanPlans.fileScans(ref) == 1,
+        s"the reference must plan the DataFrame face's FileSourceScanExec: $shape")
+    }
+    assert(rowsOf(sql("SELECT * FROM graft.nsc.events")) ==
+      rowsOf(sql("SELECT ts, user_id, v FROM nsc_events_df")))
   }
 
   test("claimed partition-only filters leave no engine re-filter; data filters stay residual") {
@@ -97,9 +99,9 @@ class NativeScanSpec extends AnyFunSuite {
   test("metadata-only aggregates stay metadata under native mode") {
     setup
     // unfiltered + partition-filtered COUNT answer from the manifest (no scan job)
-    val plan = sql("SELECT count(*) FROM graft.nsc.events WHERE day = 1")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BatchScan"), s"filtered COUNT must stay metadata-only:\n$plan")
+    val counted = sql("SELECT count(*) FROM graft.nsc.events WHERE day = 1")
+    assert(ScanPlans.answeredFromMetadata(counted),
+      s"filtered COUNT must stay metadata-only:\n${counted.queryExecution.executedPlan}")
     assert(sql("SELECT count(*) FROM graft.nsc.events WHERE day = 1")
       .collect().head.getLong(0) == 2L)
     assert(sql("SELECT day, count(*) AS c FROM graft.nsc.events GROUP BY day ORDER BY day")
@@ -116,21 +118,20 @@ class NativeScanSpec extends AnyFunSuite {
     Seq((1, "y"), (2, "x"), (3, "y")).toDF("day_key", "flag")
       .write.mode("overwrite").parquet(dimPath)
     spark.read.parquet(dimPath).createOrReplaceTempView("nsc_dim")
-    GraftBatchScan.lastRuntimeAst = FilterExpr.True
-    GraftBatchScan.lastPlannedFiles = -1
     val df = sql("""SELECT e.user_id, e.v FROM graft.nsc.events e
                     JOIN nsc_dim d ON e.day = d.day_key WHERE d.flag = 'x'""")
     assert(rowsOf(df) == Seq("[1,3.5]", "[3,3.0]"))
-    assert(GraftBatchScan.lastRuntimeAst != FilterExpr.True,
+    val Seq(scan) = ScanPlans.graftScans(df).map(_.report)
+    assert(scan.runtimeAst != FilterExpr.True,
       "the dim side's key values must reach the scan as a runtime filter")
     // r10 pin: the runtime filter must have SHRUNK the planned file set,
     // not merely arrived — the executed DPP scan plans strictly fewer
     // files than the unfiltered read of the same snapshot
-    val pruned = GraftBatchScan.lastPlannedFiles
+    val pruned = scan.plannedFiles
     val total = { // all partitions, for comparison
-      GraftBatchScan.lastPlannedFiles = -1
-      sql("SELECT v FROM graft.nsc.events").collect()
-      GraftBatchScan.lastPlannedFiles
+      val all = sql("SELECT v FROM graft.nsc.events")
+      all.collect()
+      ScanPlans.graftScans(all).map(_.report.plannedFiles).sum
     }
     assert(total >= 3)
     assert(pruned >= 1 && pruned < total,
@@ -182,7 +183,7 @@ class NativeScanSpec extends AnyFunSuite {
       s"head's (${head.sizeInBytes})")
   }
 
-  test("VERSION AS OF, LIMIT, empty match, and fill fallback stay correct") {
+  test("VERSION AS OF, LIMIT, empty match, and fills stay correct") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.nsc")
     sql("CREATE TABLE graft.nsc.tt (cargo BIGINT, v DOUBLE) PARTITIONED BY (cargo)")
     sql("INSERT INTO graft.nsc.tt VALUES (1, 1.0)")
@@ -192,17 +193,50 @@ class NativeScanSpec extends AnyFunSuite {
     assert(sql("SELECT * FROM graft.nsc.tt LIMIT 1").collect().length == 1)
     assert(sql("SELECT * FROM graft.nsc.tt WHERE cargo = 99").collect().isEmpty)
 
-    // a fill-bearing column forces the DataFrame (coalesce) path — and
-    // both faces agree on the filled values
-    val c = Collection.open(spark, s"${CatalogSpec.warehouse}/nsc/tt")
+    // a fill-bearing column reads natively, coalesced with its fill —
+    // and the DataFrame face agrees on the filled values
+    val root = s"${CatalogSpec.warehouse}/nsc/tt"
+    val c = Collection.open(spark, root)
     c.addVariable("q", org.apache.spark.sql.types.DoubleType, fill = Some("-1.0"))
     sql("INSERT INTO graft.nsc.tt VALUES (3, 3.0, 30.0)")
-    val got = rowsOf(sql("SELECT cargo, q FROM graft.nsc.tt"))
-    assert(got == withV1(rowsOf(sql("SELECT cargo, q FROM graft.nsc.tt"))))
+    val filled = sql("SELECT cargo, q FROM graft.nsc.tt")
+    val got = rowsOf(filled)
+    ScanPlans.dataFrameView(spark, root, "nsc_tt_df")
+    assert(got == rowsOf(sql("SELECT cargo, q FROM nsc_tt_df")))
     assert(got == Seq("[1,-1.0]", "[2,-1.0]", "[3,30.0]"))
-    // columns NOT touching the fill still take the native path
-    assert(sql("SELECT cargo, v FROM graft.nsc.tt").queryExecution.executedPlan
-      .toString.contains("BatchScan"))
+    assert(ScanPlans.batchScans(filled) == 1, "fill-bearing reads plan the native scan")
+    assert(ScanPlans.batchScans(sql("SELECT cargo, v FROM graft.nsc.tt")) == 1)
+  }
+
+  test("fill and rename pushdown trap: null row groups read as the fill; renamed stats prune") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.nsc")
+    sql("""CREATE TABLE graft.nsc.trap (cargo BIGINT, user_id BIGINT, v DOUBLE)
+           PARTITIONED BY (cargo) TBLPROPERTIES ('statsColumns'='user_id')""")
+    sql("INSERT INTO graft.nsc.trap VALUES (1, 10, 1.0), (2, 20, 2.0)")
+    val root = s"${CatalogSpec.warehouse}/nsc/trap"
+    val c = Collection.open(spark, root)
+    c.addVariable("q", org.apache.spark.sql.types.DoubleType, fill = Some("-1.0"))
+    // a NEW file whose q is physically NULL in every row: its row group
+    // holds only nulls, which a pushed parquet filter `q = -1.0` would
+    // skip although the rows read as the fill
+    sql("INSERT INTO graft.nsc.trap VALUES (3, 30, 3.0, NULL), (3, 31, 3.5, 7.0)")
+    sql("INSERT INTO graft.nsc.trap VALUES (4, 40, 4.0, NULL)")
+    val trap = sql("SELECT cargo, user_id, q FROM graft.nsc.trap WHERE q = -1.0")
+    assert(rowsOf(trap) == Seq("[1,10,-1.0]", "[2,20,-1.0]", "[3,30,-1.0]", "[4,40,-1.0]"),
+      "the filled rows of the old and the new files must all match")
+    assert(ScanPlans.batchScans(trap) == 1, "the filtered fill read plans the native scan")
+
+    // a renamed STATS column filtered by its new name: the zone maps
+    // (keyed by the physical name) still prune, the rows still match
+    c.renameVariable("user_id", "uid")
+    val rep = c.explainPruning("uid == 30")
+    assert(rep.filesAfterStats < rep.filesListed,
+      s"the renamed stats column must still prune: $rep")
+    val renamed = sql("SELECT cargo, uid, q FROM graft.nsc.trap WHERE uid = 30 OR uid = 40")
+    assert(rowsOf(renamed) == Seq("[3,30,-1.0]", "[4,40,-1.0]"))
+    assert(ScanPlans.batchScans(renamed) == 1, "the renamed read plans the native scan")
+    assert(ScanPlans.graftScans(renamed).map(_.report.plannedFiles).sum < c.query().inputFiles.length,
+      "the renamed filter prunes the native scan's files")
   }
 }
 

@@ -139,11 +139,12 @@ class NativeWritePropertySpec extends AnyFunSuite {
     out.result()
   }
 
-  /** Write `rows` natively, through the V1 bridge, and with plain Spark's
-    * `partitionBy`; assert the three layouts and the two collections'
-    * rows agree. */
+  /** Write `rows` natively, through [[Collection.insert]] (the call the
+    * V1 bridge ends in), and with plain Spark's `partitionBy`; assert the
+    * three layouts and the two collections' rows agree. Returns plain
+    * Spark's layout. */
   private def checkCase(name: String, schema: StructType, axis: String,
-                        part: graft.core.Partitioning, rows: Seq[Row]): Unit = {
+                        part: graft.core.Partitioning, rows: Seq[Row]): String = {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
     val cN = writeVia(native = true, s"n$name", schema, axis, part, df)
     val cV = writeVia(native = false, s"v$name", schema, axis, part, df)
@@ -161,21 +162,20 @@ class NativeWritePropertySpec extends AnyFunSuite {
     assert(a.length == rows.length, s"$name: native lost rows (${a.length})")
     assert(a == b, s"$name: row content diverged (first diff: ${
       a.zip(b).find { case (x, y) => x != y }})")
+    ref
   }
 
   private def writeVia(native: Boolean, name: String, schema: StructType,
                        axis: String, part: graft.core.Partitioning,
                        df: DataFrame): Collection = {
     val root = s"${CatalogSpec.warehouse}/nwfuzz/$name"
-    Collection.create(spark, root, schema, axis, part, catalogEnabled = true)
-    df.createOrReplaceTempView("nw_fuzz_src")
-    spark.conf.set("spark.graft.nativeWrite", native.toString)
-    try {
+    val c = Collection.create(spark, root, schema, axis, part, catalogEnabled = true)
+    if (native) {
+      df.createOrReplaceTempView("nw_fuzz_src")
       val ins = spark.sql(s"INSERT INTO graft.nwfuzz.$name SELECT * FROM nw_fuzz_src")
       val plan = ins.queryExecution.executedPlan.toString
-      if (native) assert(!plan.contains("ExecV1"), s"expected native write:\n$plan")
-      else assert(plan.contains("AppendDataExecV1"), s"expected V1 write:\n$plan")
-    } finally spark.conf.set("spark.graft.nativeWrite", "true")
+      assert(!plan.contains("ExecV1"), s"expected native write:\n$plan")
+    } else c.insert(df, graft.core.MergeStrategy.Concat)
     Collection.open(spark, root, readOnly = true)
   }
 
@@ -189,7 +189,27 @@ class NativeWritePropertySpec extends AnyFunSuite {
   test("seeded fuzz: exotic identity keys lay out plain Spark's directories") {
     for (seed <- 101 to 108) {
       val (schema, axis, part, rows) = mkExoticCase(seed)
-      checkCase(seed.toString, schema, axis, part, rows)
+      val ref = checkCase(seed.toString, schema, axis, part, rows)
+      // the catalog reads them natively, row-for-row with plain Spark
+      // reading its own layout under the same schema
+      val keySql = rows.map(_.get(0)).find(_ != null).get match {
+        case t: java.sql.Timestamp   => s"TIMESTAMP'${t.toInstant}'"
+        case d: java.sql.Date        => s"DATE'$d'"
+        case b: java.math.BigDecimal => s"CAST('$b' AS ${schema("e").dataType.sql})"
+        case other                   => other.toString
+      }
+      val plain = spark.read.schema(schema).parquet(ref).select("e", "seq", "p0")
+      for (where <- Seq(None, Some(s"e = $keySql"))) {
+        val got = spark.sql(s"SELECT * FROM graft.nwfuzz.n$seed" +
+          where.fold("")(w => s" WHERE $w"))
+        val want = where.fold(plain)(w => plain.where(w))
+        val gotRows = got.collect().map(_.toString).sorted.toSeq
+        assert(ScanPlans.batchScans(got) == 1,
+          s"seed $seed, $where: exotic keys must read natively\n" +
+            got.queryExecution.executedPlan)
+        assert(gotRows.nonEmpty && gotRows == want.collect().map(_.toString).sorted.toSeq,
+          s"seed $seed, $where: the catalog read differs from plain Spark's")
+      }
       // the written keys decode back to the original values
       val got = Collection.open(spark, s"${CatalogSpec.warehouse}/nwfuzz/n$seed",
         readOnly = true).query().select("e", "seq").collect()

@@ -8,9 +8,9 @@ import graft.core.Collection
 /** r10 native DSv2 batch write: `INSERT INTO graft.db.t` runs as a real
   * `AppendData` — executor tasks write final parquet files directly
   * (zero renames), `commit()` publishes one atomic manifest generation —
-  * with row-identical results to the V1 bridge, which
-  * `spark.graft.nativeWrite=false` pins (CHECK-constrained tables write
-  * natively since r10b). */
+  * with row-identical results to [[Collection.insert]], the call the V1
+  * bridge ends in (CHECK-constrained tables write natively since r10b;
+  * only tables with renamed columns keep the bridge). */
 class NativeWriteSpec extends AnyFunSuite {
   lazy val spark = {
     val s = SparkTestSession.spark
@@ -32,18 +32,17 @@ class NativeWriteSpec extends AnyFunSuite {
     srcView(2000, "nw_src")
     sql("CREATE TABLE graft.nw.native_t (ts TIMESTAMP, user_id BIGINT, v DOUBLE) PARTITIONED BY (months(ts))")
     sql("CREATE TABLE graft.nw.v1_t (ts TIMESTAMP, user_id BIGINT, v DOUBLE) PARTITIONED BY (months(ts))")
+    val cV1 = Collection.open(spark, s"${CatalogSpec.warehouse}/nw/v1_t")
 
     val ins = sql("INSERT INTO graft.nw.native_t SELECT * FROM nw_src")
     val plan = ins.queryExecution.executedPlan.toString
     assert(plan.contains("AppendData") && !plan.contains("AppendDataExecV1"),
       s"expected a native AppendData plan:\n$plan")
 
-    spark.conf.set("spark.graft.nativeWrite", "false")
-    try {
-      val insV1 = sql("INSERT INTO graft.nw.v1_t SELECT * FROM nw_src")
-      assert(insV1.queryExecution.executedPlan.toString.contains("AppendDataExecV1"),
-        "conf off must pin the V1 write bridge")
-    } finally spark.conf.set("spark.graft.nativeWrite", "true")
+    // the reference: the frame the V1 face hands Collection.insert — the
+    // analyzer has cast the query to the table schema (v is a decimal)
+    cV1.insert(sql("SELECT ts, user_id, CAST(v AS DOUBLE) AS v FROM nw_src"),
+      graft.core.MergeStrategy.Concat)
 
     val a = sql("SELECT * FROM graft.nw.native_t ORDER BY ts, user_id")
       .collect().map(_.toString).toSeq
@@ -56,7 +55,6 @@ class NativeWriteSpec extends AnyFunSuite {
     // rows/stats make metadata COUNT and zone-map pruning work
     assert(sql("SELECT COUNT(*) FROM graft.nw.native_t").collect().head.getLong(0) == 2000)
     val cNat = Collection.open(spark, s"${CatalogSpec.warehouse}/nw/native_t", readOnly = true)
-    val cV1 = Collection.open(spark, s"${CatalogSpec.warehouse}/nw/v1_t", readOnly = true)
     assert(cNat.partitions() == cV1.partitions(),
       "native writes must land in the same Hive partition layout")
     // zone maps recorded: an axis-range read prunes below the full file set

@@ -38,11 +38,11 @@ class SqlSourceSpec extends AnyFunSuite {
 
     // filter + projection through SQL, with pushdown observed
     df.createOrReplaceTempView("graft_src_events")
-    val got = spark.sql(
-        "SELECT id, v FROM graft_src_events WHERE id >= 2 AND id < 4 AND day <= 2")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+    val filtered = spark.sql(
+      "SELECT id, v FROM graft_src_events WHERE id >= 2 AND id < 4 AND day <= 2")
+    val got = filtered.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
     assert(got == Seq((2L, 2.0), (3L, 3.0)))
-    assert(GraftRelation.lastScanAst != FilterExpr.True,
+    assert(ScanPlans.graftScans(filtered).map(_.report.pushedAst) != Seq(FilterExpr.True),
       "the WHERE clause must reach the skip stack as a pushed AST")
 
     // unsupported filter shapes degrade to no pushdown, never wrongness
@@ -52,12 +52,12 @@ class SqlSourceSpec extends AnyFunSuite {
 
     // TIMESTAMP literals push down as session-zone wall-clock strings —
     // the axis-range case that drives the zone maps
-    GraftRelation.lastScanAst = FilterExpr.True
-    val ts = df.where("ts >= timestamp'2024-01-02 00:00:00'").select("id")
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val tsDf = df.where("ts >= timestamp'2024-01-02 00:00:00'").select("id")
+    val ts = tsDf.collect().map(_.getLong(0)).sorted.toSeq
     assert(ts == Seq(3L, 4L))
-    assert(GraftRelation.lastScanAst.toString.contains("2024-01-02"),
-      s"timestamp filter must push: ${GraftRelation.lastScanAst}")
+    val tsAst = ScanPlans.graftScans(tsDf).map(_.report.pushedAst)
+    assert(tsAst.size == 1 && tsAst.head.toString.contains("2024-01-02"),
+      s"timestamp filter must push: $tsAst")
 
     // the relation advertises a metadata cardinality for join planning
     val rel = new GraftRelation(spark.sqlContext, root)
@@ -65,20 +65,13 @@ class SqlSourceSpec extends AnyFunSuite {
       s"sizeInBytes must come from metadata, got ${rel.sizeInBytes}")
   }
 
-  test("path reads resolve through the DSv2 face: native BatchScan, V1-pinnable (r10)") {
+  test("path reads resolve through the DSv2 face: native BatchScan (r10)") {
     val root = SparkTestSession.tmp("graft-sql-native")
     fresh(root)
     val plan = spark.read.format("graft").load(root).where("id >= 2")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BatchScan"),
       s"a path read must plan the native vectorized BatchScan:\n$plan")
-    spark.conf.set("spark.graft.nativeScan", "false")
-    try {
-      val v1 = spark.read.format("graft").load(root).where("id >= 2")
-        .queryExecution.executedPlan.toString
-      assert(!v1.contains("BatchScan"),
-        s"nativeScan=false must pin the proven V1 bridge:\n$v1")
-    } finally spark.conf.set("spark.graft.nativeScan", "true")
     // writes through the SAME format string stay on the V1 provider
     // (dynamic partition overwrite & friends): plan-level proof is the
     // V1 commands in the write-modes test; here assert the round trip
@@ -276,11 +269,10 @@ class SqlSourceSpec extends AnyFunSuite {
     // the whole disjunction reaches conv — but graft's mini-language
     // can't express it: positive polarity weakens the conjunction to
     // id <= 1 and the disjunction around it still prunes
-    GraftRelation.lastScanAst = FilterExpr.True
-    val got = src.where("(id <= 1 AND contains(tag, 'lp')) OR id >= 4")
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val weakened = src.where("(id <= 1 AND contains(tag, 'lp')) OR id >= 4").select("id")
+    val got = weakened.collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(1L, 4L))
-    val ast = GraftRelation.lastScanAst
+    val Seq(ast) = ScanPlans.graftScans(weakened).map(_.report.pushedAst)
     assert(ast == FilterExpr.Or(
       FilterExpr.Cmp("<=", FilterExpr.Name("id"), FilterExpr.Lit(1L)),
       FilterExpr.Cmp(">=", FilterExpr.Name("id"), FilterExpr.Lit(4L))),

@@ -117,28 +117,33 @@ class StreamTableSpec extends AnyFunSuite {
     assert(rows == Seq(1L, 2L, 3L), s"AvailableNow must drain every generation: $rows")
   }
 
-  test("a V1-fallback table refuses readStream.table at ANALYSIS (r11)") {
-    // a fill-bearing column forces every read through the V1 bridge,
-    // which has no micro-batch stream — capabilities() now withholds
-    // MICRO_BATCH_READ, so the refusal is Spark's own analysis error,
-    // not a stream-start UnsupportedOperationException
+  test("readStream.table streams a fill-bearing, renamed table by its logical names") {
+    // fills and renames ride the micro-batch reader like the batch scan:
+    // the delivered rows carry the fill under the column's logical name
     sql("CREATE NAMESPACE IF NOT EXISTS graft.strm")
     sql("CREATE TABLE graft.strm.evfill (cargo BIGINT, v DOUBLE) PARTITIONED BY (cargo)")
     sql("INSERT INTO graft.strm.evfill VALUES (1, 1.0)")
     val root = CatalogSpec.warehouse + "/strm/evfill"
-    graft.core.Collection.open(spark, root)
-      .addVariable("w", org.apache.spark.sql.types.DoubleType, fill = Some("0.0"))
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.readStream.table("graft.strm.evfill")
-        .writeStream.format("memory").queryName("strm_fill_" + System.nanoTime())
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("strm-ckpt").toString)
-        .start()
-    }
-    assert(e.getMessage.toLowerCase.contains("micro-batch"),
-      s"expected the analysis-time capability error, got: ${e.getMessage}")
-    // batch reads of the same table still work (V1 bridge)
-    assert(sql("SELECT * FROM graft.strm.evfill").count() == 1)
+    val c = graft.core.Collection.open(spark, root)
+    c.addVariable("w", org.apache.spark.sql.types.DoubleType, fill = Some("0.5"))
+    c.renameVariable("v", "value")
+    val name = "strm_fill_" + System.nanoTime()
+    val q = spark.readStream.table("graft.strm.evfill")
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("strm-ckpt").toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      def got: Seq[String] = spark.table(name).collect().map(_.toString).sorted.toSeq
+      assert(spark.table(name).columns.toSeq == Seq("cargo", "value", "w"))
+      assert(got == Seq("[1,1.0,0.5]"), "the pre-add file reads w as its fill")
+      sql("INSERT INTO graft.strm.evfill VALUES (2, 2.0, NULL), (3, 3.0, 7.0)")
+      q.processAllAvailable()
+      assert(got == Seq("[1,1.0,0.5]", "[2,2.0,0.5]", "[3,3.0,7.0]"),
+        "a NULL w reads as the fill; renamed values stream under the new name")
+    } finally q.stop()
+    assert(sql("SELECT * FROM graft.strm.evfill").count() == 3)
   }
 
   test("data-column filters refuse on the no-refilter streaming face") {

@@ -106,6 +106,21 @@ class RenameColumnSpec extends AnyFunSuite {
     val df = spark.read.format("graft").load(root)
     assert(df.columns.contains("weight"))
     assert(df.where("user_id >= 100").count() == 50)
+    // a SQL INSERT into a renamed CATALOG table plans the V1 write (only
+    // Collection.insert maps logical names to the files' physical ones),
+    // and its rows read back under the new name
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft.warehouse", graft.CatalogSpec.warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ren")
+    spark.sql("CREATE TABLE graft.ren.t (k BIGINT, value DOUBLE) PARTITIONED BY (k)")
+    spark.sql("INSERT INTO graft.ren.t VALUES (1, 1.0)")
+    Collection.open(spark, s"${graft.CatalogSpec.warehouse}/ren/t")
+      .renameVariable("value", "score")
+    val ins = spark.sql("INSERT INTO graft.ren.t VALUES (2, 2.0)")
+    assert(ins.queryExecution.executedPlan.toString.contains("AppendDataExecV1"),
+      s"a renamed table writes through the V1 face:\n${ins.queryExecution.executedPlan}")
+    assert(spark.sql("SELECT k, score FROM graft.ren.t").as[(Long, Double)]
+      .collect().sorted.toSeq == Seq((1L, 1.0), (2L, 2.0)))
     // dropping a renamed column retires its PHYSICAL name too
     c.renameVariable("value", "score")
     c.dropVariable("score")
