@@ -9,10 +9,16 @@ import graft.dedup.{MinHashSig, SimHash64}
 import graft.functions.{CharShingleHashes, Fnv1a64, ShingleHashes}
 
 /** Session extensions registering graft's custom Catalyst expressions for
-  * SQL use, and the post-hoc rule that lowers SQL UPDATE / MERGE INTO /
-  * row-level DELETE over graft tables onto the collection engine (graft
-  * tables need no optimizer rule: their scans report statistics
-  * natively):
+  * SQL use, the post-hoc rule that lowers SQL UPDATE / MERGE INTO /
+  * row-level DELETE over graft tables onto the collection engine, and
+  * the columnar rule [[graft.plans.BoundLiterals]], which binds the
+  * constants of a graft read's residual filter as code parameters so a
+  * read that differs from the last one only in its constants reuses the
+  * compiled class. Graft tables need no optimizer rule: their scans
+  * report statistics natively. Both rules need `spark.sql.extensions`
+  * (or `withExtensions`) at session build: [[GraftExtensions.register]]
+  * adds only the expressions, because a running session takes no new
+  * analyzer or physical rules.
   *
   * {{{
   *   SparkSession.builder().withExtensions(new GraftExtensions)...
@@ -37,12 +43,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (analysis-time injection only — like Delta, DML requires
     // spark.sql.extensions at session build)
     e.injectPostHocResolutionRule(session => graft.sources.GraftDmlRule(session))
+    // residual-filter constants as code parameters, on the adaptive and
+    // the non-adaptive path alike
+    e.injectColumnar(_ => graft.plans.BoundLiterals.Columnar)
   }
 }
 
 /** Runtime registration of the expressions for sessions that already
-  * exist (extensions only apply at builder time; the DML rule needs
-  * `spark.sql.extensions` at session build). */
+  * exist (extensions only apply at builder time; the DML rule and the
+  * bound-literal rule need `spark.sql.extensions` at session build). */
 object GraftExtensions {
 
   private def intArg(e: Expression, fn: String): Int = e match {

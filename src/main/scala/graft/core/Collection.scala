@@ -4,6 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ManifestRead, ParquetReadBridge, ParquetWriteBridge}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType,
@@ -229,7 +231,7 @@ final class Collection private (
     * having its partitions silently truncated. */
   def overwrite(df: DataFrame): Seq[String] = {
     requireWritable()
-    val assigned = partitioning.assign(df)
+    val assigned = partitioning.assign(conformTypes(df))
     val man0 = currentManifest()
     writeAndCommit(assigned, replaced = man0.partitionPaths.toSet,
       base = man0, op = "overwrite")
@@ -239,7 +241,7 @@ final class Collection private (
   private[graft] def insertInternal(df: DataFrame, merge: MergeStrategy,
                                     streamMark: Option[(String, Long)]): Seq[String] = {
     requireWritable()
-    val assigned = partitioning.assign(df)
+    val assigned = partitioning.assign(conformTypes(df))
     // one manifest read serves collision detection, the merge's read of
     // existing rows, AND (for read-modify-write merges) the commit base —
     // see writeAndCommit's `base` contract
@@ -376,7 +378,28 @@ final class Collection private (
     * the orphans. */
   private[graft] def insertUncommitted(df: DataFrame): Unit = {
     requireWritable()
-    physicalWrite(prepareForWrite(partitioning.assign(df)), currentManifest())
+    physicalWrite(prepareForWrite(partitioning.assign(conformTypes(df))), currentManifest())
+  }
+
+  /** `df` with each declared column it carries at its declared type, as
+    * SQL `INSERT INTO` would store it: a column of another type is cast
+    * where ANSI store assignment allows it (DECIMAL into DOUBLE, INT
+    * into BIGINT) and refused otherwise (STRING into DOUBLE), before
+    * anything is written. Nullability differences pass unchanged. */
+  private def conformTypes(df: DataFrame): DataFrame = {
+    val declared = schema
+    val casts = df.schema.fields.flatMap { f =>
+      declared.find(_.name == f.name).map(_.dataType)
+        .filterNot(DataTypeUtils.sameType(f.dataType, _))
+        .map { to =>
+          require(Cast.canANSIStoreAssign(f.dataType, to),
+            s"cannot write column '${f.name}' of type ${f.dataType.sql} into a " +
+              s"collection that declares it ${to.sql}")
+          f.name -> to
+        }
+    }.toMap
+    if (casts.isEmpty) df
+    else df.select(df.columns.toSeq.map(c => casts.get(c).fold(col(c))(col(c).cast(_).as(c))): _*)
   }
 
   /** Write the small non-axis dataset to `_immutable/`; it is merged back

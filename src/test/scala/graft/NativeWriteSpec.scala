@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -121,6 +123,34 @@ class NativeWriteSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(users == Seq(3L, 9L),
       s"dynamic overwrite must replace only the touched day partition: $users")
+  }
+
+  test("Collection.insert stores a column of another type as INSERT INTO would, or refuses it unwritten") {
+    val root = SparkTestSession.tmp("nw-conform")
+    val c = Collection.create(spark, root,
+      org.apache.spark.sql.types.StructType.fromDDL("ts TIMESTAMP, user_id BIGINT, v DOUBLE"),
+      "ts", graft.core.DatePartitioning("ts", "D"))
+    val src = spark.range(60).selectExpr(
+      "timestampadd(HOUR, CAST(id AS INT), TIMESTAMP'2024-01-01 00:00:00') AS ts",
+      "CAST(id AS INT) AS user_id", "CAST(id * 1.5 AS DECIMAL(10, 1)) AS v")
+    c.insert(src)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.selectExpr("user_id", "v").orderBy("user_id").collect().map(_.toString).toSeq
+    assert(rows(c.query()) == rows(src.selectExpr("CAST(user_id AS BIGINT) AS user_id",
+      "CAST(v AS DOUBLE) AS v")))
+
+    def tree(): Set[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.map(_.toString).toSet finally walk.close()
+    }
+    val (gen, before) = (c.generation, tree())
+    val strings = src.selectExpr("ts", "user_id", "CAST(v AS STRING) AS v")
+    for (write <- Seq(() => c.insert(strings), () => c.overwrite(strings))) {
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("'v' of type STRING") && e.getMessage.contains("DOUBLE"),
+        e.getMessage)
+    }
+    assert(c.generation == gen && tree() == before, "a refused write must leave the root as it was")
   }
 
   test("INSERT INTO ... REPLACE WHERE: partition-aligned overwrite-by-expression (r10)") {
