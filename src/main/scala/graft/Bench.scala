@@ -22,6 +22,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** A suite's timed entries (seconds) and its evidence counters (byte
+    * and file counts), which the bench line reports in separate maps. */
+  private final case class SuiteResult(seconds: Seq[(String, Double)],
+                                       counters: Seq[(String, Double)])
+
   /** Headline set: relational, custom operators, pipeline ops, collection
     * round-trips, streaming. */
   val Headline: Seq[String] = Seq(
@@ -263,12 +268,17 @@ object Bench {
     val qs = (Seq("overhead_floor" -> floorSec,
       "zc_build" -> buildSec, "zc_build_skip" -> buildSkipSec) ++ results) ++
       Seq("view_query" -> viewSec, "clone_fork" -> cloneSec) ++ refResults ++
-      spjDppResults ++ dvResults
+      spjDppResults.seconds ++ dvResults.seconds
+    // byte and file counts, kept apart from the seconds so no geomean or
+    // regression check reads them as times
+    val counters = spjDppResults.counters ++ dvResults.counters
     // Locale-pinned (r15, BenchOne advice applied here too): a
     // comma-decimal default locale would make the artifact unparseable.
     def num3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def num2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val qsJson = qs.map { case (k, v) => "\"" + k + "\":" + num3(v) }.mkString("{", ",", "}")
+    def jsonMap(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + num3(v) }.mkString("{", ",", "}")
+    val qsJson = jsonMap(qs)
     val total = buildSec + buildSkipSec + results.map(_._2).sum +
       refResults.filterNot(_._1.startsWith("insert_")).map(_._2).sum +
       refResults.collect { case ("insert_full_dataset", v) => v }.sum
@@ -295,7 +305,7 @@ object Bench {
         s"{$body}"
       }
     }
-    val line = s"""{"metric":"total","value":${num3(total)},"unit":"sec","reps":$reps,"loadavg_start":${num2(loadStart)},"loadavg_end":${num2(loadEnd)},"queries":$qsJson,"duckdb_sec":$duckJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${num3(total)},"unit":"sec","reps":$reps,"loadavg_start":${num2(loadStart)},"loadavg_end":${num2(loadEnd)},"queries":$qsJson,"counters":${jsonMap(counters)},"duckdb_sec":$duckJson,"sf":"$sfDir"}"""
     println(line)
     // r13 (the r12 verdict's #3): the driver keeps only a bounded TAIL
     // of stdout, which truncated r12's entire Spark time map out of
@@ -319,7 +329,7 @@ object Bench {
     * `delete_rewrite_bytes_written` — the replacement parquet bytes of
     * the classic path. The ratio is the feature's claim: delete cost
     * proportional to deleted rows, not rewritten files. */
-  private def dvSuite(spark: SparkSession, sfDir: String, reps: Int): Seq[(String, Double)] = {
+  private def dvSuite(spark: SparkSession, sfDir: String, reps: Int): SuiteResult = {
     import graft.core.{Collection, DatePartitioning}
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
@@ -365,9 +375,9 @@ object Bench {
       catch { case _: Exception => () }
     }
     ev.unpersist()
-    Seq("delete_dv" -> dvSec, "delete_rewrite" -> rwSec,
-      "delete_dv_bytes_written" -> dvBytes,
-      "delete_rewrite_bytes_written" -> rwBytes)
+    SuiteResult(Seq("delete_dv" -> dvSec, "delete_rewrite" -> rwSec),
+      Seq("delete_dv_bytes_written" -> dvBytes,
+        "delete_rewrite_bytes_written" -> rwBytes))
   }
 
   /** r10: storage-partitioned-join and dynamic-file-pruning entries.
@@ -382,7 +392,7 @@ object Bench {
     * list at execution start; `dpp_files_pruned` / `dpp_files_full`
     * record the planned file counts (counts, not seconds — the direct
     * evidence the runtime filter reached the skip layers). */
-  private def spjDppSuite(spark: SparkSession, sfDir: String, reps: Int): Seq[(String, Double)] = {
+  private def spjDppSuite(spark: SparkSession, sfDir: String, reps: Int): SuiteResult = {
     import org.apache.spark.sql.functions._
     import graft.core.{Collection, SequencePartitioning}
     def time(body: => Unit): Double = {
@@ -465,12 +475,12 @@ object Bench {
     if (prunedFiles >= fullFiles)
       System.err.println(s"[bench] WARNING: DPP did not prune files ($prunedFiles vs $fullFiles)")
 
-    Seq("spj_join_colocated" -> spjNative,
-      "spj_join_shuffled" -> spjShuffled,
-      "dpp_join_pruned" -> dppSec,
-      "dpp_scan_full" -> fullSec,
-      "dpp_files_pruned" -> prunedFiles.toDouble,
-      "dpp_files_full" -> fullFiles.toDouble)
+    SuiteResult(Seq("spj_join_colocated" -> spjNative,
+        "spj_join_shuffled" -> spjShuffled,
+        "dpp_join_pruned" -> dppSec,
+        "dpp_scan_full" -> fullSec),
+      Seq("dpp_files_pruned" -> prunedFiles.toDouble,
+        "dpp_files_full" -> fullFiles.toDouble))
   }
 
   private def refSuite(spark: SparkSession, reps: Int): Seq[(String, Double)] = {

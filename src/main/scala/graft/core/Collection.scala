@@ -355,7 +355,11 @@ final class Collection private (
   /** The last micro-batch id committed by streaming query `queryName`
     * (None if it never committed) — see [[insertStreamBatch]]. */
   def streamHighWaterMark(queryName: String): Option[Long] =
-    currentManifest().streams.get(queryName)
+    streamMarks().get(queryName)
+
+  /** Every streaming query's committed high-water mark (stream name ->
+    * last committed micro-batch id), as the head manifest records it. */
+  def streamMarks(): Map[String, Long] = currentManifest().streams
 
   /** Idempotent micro-batch insert for streaming ingestion
     * ([[graft.streaming.StreamOps.insertStream]]): the batch id is
@@ -503,15 +507,7 @@ final class Collection private (
     // the write returns its exact file set: crash orphans and
     // concurrent writers' files in the same partitions are structurally
     // excluded from this commit (no directory-diff discovery)
-    val prepared = prepareForWrite(checked, cluster)
-    // COLUMN RENAMES (r11): files always carry PHYSICAL names — new
-    // writes of a renamed column land under its pinned original name,
-    // so every file of every generation shares one physical schema
-    val physical =
-      if (man.renames.isEmpty) prepared
-      else prepared.select(prepared.columns.toSeq.map(c =>
-        col(c).as(man.renames.getOrElse(c, c))): _*)
-    val newFiles = physicalWrite(physical, man)
+    val newFiles = physicalWrite(prepareForWrite(checked, cluster), man)
     commitWrittenFiles(man, newFiles, replaced, streamMark, rewrite,
       replacedFiles, newPartSpec, op, dvUpdates)
   }
@@ -2198,11 +2194,10 @@ final class Collection private (
   /** [[changes]] from `gen` to the current head. */
   def changesSince(gen: Long): DataFrame = changes(gen, generation)
 
-  /** Pruned scan for the batch DataSource ([[graft.sources.GraftRelation]]):
-    * data + partition-derived columns (row id dropped), all skip layers
-    * plus the compiled row predicate applied. `asOfGen` pins a committed
-    * snapshot (the `versionAsOf` read option) — pruning then runs
-    * against that snapshot's own stats. */
+  /** Pruned scan of a snapshot ([[rebaseBranch]]'s range read): data +
+    * partition-derived columns (row id dropped), all skip layers plus
+    * the compiled row predicate applied. `asOfGen` pins a committed
+    * snapshot — pruning then runs against that snapshot's own stats. */
   private[graft] def scanWithAst(ast: FilterExpr.Ast,
                                  asOfGen: Option[Long] = None): DataFrame = {
     val pinned = asOfGen.map { g =>
@@ -2839,7 +2834,9 @@ final class Collection private (
 
   /** What the task writer needs from a pinned snapshot: the generation
     * to commit against, the row-id task base, the partition layout, the
-    * codec/bloom configuration and the CHECK constraints. */
+    * codec/bloom configuration, the CHECK constraints and the column
+    * renames (the writer names each renamed column's file column by its
+    * physical name). */
   private def writeSpec(man: Manifest): Collection.NativeWriteSpec =
     Collection.NativeWriteSpec(
       generation = man.generation,
@@ -2850,31 +2847,19 @@ final class Collection private (
       zstdLevel = profile.zstdLevel,
       bloomCols = bloomColumns,
       bloomNdv = bloomNdv,
-      constraints = man.constraints.toSeq.sortBy(_._1))
-
-  /** Read-only-safe eligibility probe for [[nativeWriteSpec]] — what
-    * [[graft.sources.GraftTable.capabilities]] consults to decide
-    * whether to advertise `V1_BATCH_WRITE` (Spark's write strategy
-    * REQUIRES the capability set and the built Write to agree, so the
-    * decision is made once at table level and the builder follows it).
-    * Renamed columns (r11) keep the V1 face: files carry PHYSICAL names,
-    * and only [[writeAndCommit]] applies the mapping. */
-  private[graft] def nativeWriteCompatible: Boolean =
-    currentManifest().renames.isEmpty
+      constraints = man.constraints.toSeq.sortBy(_._1),
+      renames = man.renames)
 
   /** Plan a NATIVE DSv2 batch write (the write-side mirror of
-    * [[nativeScanPlan]]) against the head snapshot; `None` when the
-    * table must take the V1 face ([[nativeWriteCompatible]]). CHECK
-    * constraints stopped being a fallback in r10b: the spec carries
-    * them and the native tasks enforce the [[constraintGuard]]
-    * NULL-passes/raise semantics per row, so constrained tables keep
-    * dynamic overwrite, REPLACE WHERE, and streaming writes. A
-    * constraint added CONCURRENTLY with the write still refuses in the
-    * rebase guard (constraints are pinned at planning). */
-  private[graft] def nativeWriteSpec(): Option[Collection.NativeWriteSpec] = {
+    * [[nativeScanPlan]]) against the head snapshot. CHECK constraints
+    * ride the spec and the native tasks enforce the [[constraintGuard]]
+    * NULL-passes/raise semantics per row; renamed columns ride it too.
+    * A constraint added or a column renamed CONCURRENTLY with the write
+    * still refuses in the rebase guard (the spec is pinned at
+    * planning). */
+  private[graft] def nativeWriteSpec(): Collection.NativeWriteSpec = {
     requireWritable()
-    val man = currentManifest()
-    if (man.renames.nonEmpty) None else Some(writeSpec(man))
+    writeSpec(currentManifest())
   }
 
   /** Publish a native batch write's task-committed files as one atomic
@@ -4739,14 +4724,16 @@ object Collection extends CollectionManifestLayer {
     * base, the partition columns (in directory order) and which of them
     * are identity columns, the parquet codec/bloom configuration, and
     * the CHECK constraints (name -> predicate SQL, name-sorted) the SQL
-    * face's tasks enforce per row. */
+    * face's tasks enforce per row, and the logical -> physical column
+    * renames. */
   private[graft] final case class NativeWriteSpec(
       generation: Long, taskBase: Long,
       partCols: Seq[String],
       identityCols: Seq[String],
       compression: String, zstdLevel: Int,
       bloomCols: Seq[String], bloomNdv: Map[String, Long],
-      constraints: Seq[(String, String)])
+      constraints: Seq[(String, String)],
+      renames: Map[String, String])
 
   /** Partition-key types whose decoded directory values
     * ([[Collection#decodePath]]) compare exactly as the keys do —

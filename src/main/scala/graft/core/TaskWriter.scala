@@ -44,8 +44,9 @@ object GraftNativeCommit {
   * ([[graft.sources.GraftNativeWrite]], whose input rows carry only the
   * table's columns) and [[Collection]]'s own writes (whose frames already
   * carry every partition column). Row ids are
-  * `(taskBase + partitionId) << 33 + rowIndex`; file names, directory
-  * format and row ids are decided here and nowhere else.
+  * `(taskBase + partitionId) << 33 + rowIndex`; file names, file column
+  * names (a renamed column's physical name), directory format and row
+  * ids are decided here and nowhere else.
   *
   * Reference behavior: zcollection's insert writes Zarr chunks then
   * commits an Icechunk snapshot referencing exactly those chunk keys
@@ -103,11 +104,14 @@ object GraftWriterFactory {
                     input: StructType, partExprs: Seq[Expression], moved: Seq[String],
                     constraints: Seq[(String, String)]): GraftWriterFactory = {
     // file content = input columns minus the ones moved into the
-    // directory name (like partitionBy), plus the row id
+    // directory name (like partitionBy), plus the row id; a renamed
+    // column is written under its PHYSICAL name, so every file of every
+    // generation shares one physical schema
     val kept = input.fields.toSeq.zipWithIndex.filterNot { case (f, _) => moved.contains(f.name) }
     val outExprs = kept.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) }
     val fileSchema = StructType(
-      kept.map(_._1) :+ StructField(Collection.RowIdCol, LongType, nullable = false))
+      kept.map { case (f, _) => f.copy(name = spec.renames.getOrElse(f.name, f.name)) } :+
+        StructField(Collection.RowIdCol, LongType, nullable = false))
     val conf = ParquetWriteBridge.writeConf(spark, fileSchema,
       spec.compression, spec.zstdLevel, spec.bloomCols, spec.bloomNdv)
     // the Hive path value of each key: the `Cast(key, StringType,

@@ -56,7 +56,7 @@ object LakehouseOps {
     spark.sql("""UPDATE events_dml SET value = value * 2
                  WHERE event_type = 'view' AND day <= 2""")
     spark.sql("DELETE FROM events_dml WHERE event_type LIKE 'err%' AND value < 0.1")
-    // note: the V1 face exposes derived partition columns in its schema,
+    // note: the path face exposes derived partition columns in its schema,
     // so SET */INSERT * expansion expects them in the source too (their
     // values are recomputed from the axis on write regardless)
     spark.table("events_dml").limit(2)

@@ -326,7 +326,7 @@ final class GraftBatchScan(spark: SparkSession,
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
       java.util.TimeZone.getDefault.getID))
     val v1 = predicates.flatMap(p => Bridge.predicateToV1(p))
-    val rf = GraftRelation.toAst(v1, partColSet, zone)
+    val rf = SourceFilters.toAst(v1, partColSet, zone)
     if (rf != FilterExpr.True) synchronized {
       runtimeAst = if (runtimeAst == FilterExpr.True) rf
                    else FilterExpr.And(runtimeAst, rf)

@@ -31,12 +31,11 @@ import graft.core.{Collection, GraftNativeCommit, GraftWriterFactory}
   * Hive directory into one contiguous run and each task holds ONE open
   * parquet writer at a time — bounded memory at any partition fan-out).
   *
-  * Tables with renamed columns keep the V1 `InsertableRelation` face, which ends in [[Collection.insert]]
-  * and so in the same task writer. CHECK constraints are NOT a fallback
-  * (r10b): the tasks evaluate the constraint guard's exact NULL-passes
-  * boolean per row, codegen'd, and raise naming the constraint — which
-  * keeps dynamic overwrite, REPLACE WHERE, and streaming writes
-  * available on constrained tables. */
+  * Every catalog table writes here, renamed columns and CHECK
+  * constraints included: the task writer names a renamed column's file
+  * column by its physical name, and the tasks evaluate the constraint
+  * guard's exact NULL-passes boolean per row, codegen'd, and raise
+  * naming the constraint. */
 class GraftNativeWrite(spark: SparkSession, collection: Collection,
                        spec: Collection.NativeWriteSpec, mode: String,
                        inputSchema: StructType,
@@ -94,6 +93,17 @@ class GraftNativeWrite(spark: SparkSession, collection: Collection,
   }
 }
 
+object GraftNativeWrite {
+  /** The input's columns must be the snapshot's logical columns, in
+    * order: a table whose schema changed since the query was analyzed
+    * (a column renamed, added or dropped) refuses, naming both. */
+  private[sources] def requireTableSchema(c: Collection, input: StructType): Unit =
+    require(input.fieldNames.toSeq == c.schema.fieldNames.toSeq,
+      s"write schema ${input.fieldNames.mkString(",")} does not match the " +
+      s"schema ${c.schema.fieldNames.mkString(",")} of ${c.root} — re-read the " +
+      "table and restart the write against its current columns")
+}
+
 /** The streaming half of [[GraftNativeWrite]]. One instance serves the
   * whole query run; Spark calls `createStreamingWriterFactory` then
   * `commit(epochId, ...)` strictly in sequence per micro-batch, so the
@@ -111,11 +121,11 @@ class GraftNativeStreamingWrite(spark: SparkSession, reopen: () => Collection,
     // per-EPOCH snapshot: generation + row-id task base advance with the
     // collection, so epoch N+1's ids never collide with epoch N's rows
     val c = reopen()
-    // NOTE: a CHECK constraint added mid-stream is picked up here — the
-    // NEXT epoch's tasks enforce the new set (constraints ride the spec)
-    val spec = c.nativeWriteSpec().getOrElse(throw new IllegalStateException(
-      s"collection ${c.root} stopped being natively writable mid-stream " +
-      "(a column was renamed concurrently?) — restart the query"))
+    // a column renamed, added or dropped mid-stream refuses here; a
+    // CHECK constraint added mid-stream is picked up — the NEXT epoch's
+    // tasks enforce the new set (constraints ride the spec)
+    GraftNativeWrite.requireTableSchema(c, inputSchema)
+    val spec = c.nativeWriteSpec()
     epoch = (c, spec)
     val f = GraftWriterFactory.forTable(spark, c, spec, inputSchema)
     new StreamingDataWriterFactory {

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -17,26 +16,21 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.core.{Collection, FilterExpr, WhenMatched, WhenNotMatchedBySource}
 
-/** The resolved DML target: a graft collection behind either SQL face —
-  * the DSv2 catalog table ([[GraftTable]], `graft.db.t`) or the V1
-  * relation ([[GraftRelation]], `CREATE TABLE ... USING graft` and
-  * temp views over `spark.read.format("graft")`). `output` covers data
-  * AND derived partition columns (`day`...), so predicates over either
-  * bind; assignments to derived columns are refused downstream. */
+/** The resolved DML target: a graft collection behind a [[GraftTable]] —
+  * the catalog face (`graft.db.t`) or the path face (`CREATE TABLE ...
+  * USING graft` and temp views over `spark.read.format("graft")`).
+  * `output` covers data AND derived partition columns (`day`...), so
+  * predicates over either bind; assignments to derived columns are
+  * refused downstream. */
 private[sources] final case class DmlTarget(root: String, pinned: Boolean,
-                                            attrs: Seq[Attribute], v2: Boolean)
+                                            attrs: Seq[Attribute])
 
 private[sources] object DmlTarget {
   def unapply(plan: LogicalPlan): Option[DmlTarget] =
     EliminateSubqueryAliases(plan) match {
       case r: DataSourceV2Relation => r.table match {
         case gt: GraftTable =>
-          Some(DmlTarget(gt.root, gt.pinned, r.output ++ r.metadataOutput, v2 = true))
-        case _ => None
-      }
-      case lr: LogicalRelation => lr.relation match {
-        case gr: GraftRelation =>
-          Some(DmlTarget(gr.collRoot, gr.pinned, lr.output, v2 = false))
+          Some(DmlTarget(gt.root, gt.pinned, r.output ++ r.metadataOutput))
         case _ => None
       }
       case _ => None
@@ -102,11 +96,9 @@ case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       GraftUpdateCommand(t.root, sets, condCol, pruneFilters(condition), subs)
 
     // exactly-translatable deletes keep Spark's native SupportsDeleteV2
-    // path ONLY on the V2 catalog face — the V1 face has no native DML
-    // at all (CheckAnalysis rejects DELETE on non-v2 tables), so every
-    // V1-face DELETE takes the row-level fallback here
+    // path; every other DELETE takes the row-level fallback here
     case d @ DeleteFromTable(DmlTarget(t), condition) if d.resolved &&
-        (!t.v2 || !exactlyTranslatable(spark, t, condition)) =>
+        !exactlyTranslatable(spark, t, condition) =>
       requireWritable(t, "DELETE")
       val (cond2, _, subs) = extractSubqueries(Some(condition), t, "DELETE")
       GraftDeleteCommand(t.root, selfCol(cond2.get, t, "DELETE"),
@@ -777,7 +769,7 @@ object GraftDmlRule {
     if (filters.contains(None)) return false
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
       java.util.TimeZone.getDefault.getID))
-    GraftRelation.toAstExact(filters.flatten.toArray, t.attrs.map(_.name).toSet, zone)
+    SourceFilters.toAstExact(filters.flatten.toArray, t.attrs.map(_.name).toSet, zone)
       .isDefined
   }
 }
@@ -808,7 +800,7 @@ private[sources] object GraftDmlCommands {
   def pruneAst(session: SparkSession, c: Collection, prune: Seq[SFilter]): FilterExpr.Ast = {
     val zone = java.time.ZoneId.of(session.conf.get("spark.sql.session.timeZone",
       java.util.TimeZone.getDefault.getID))
-    GraftRelation.toAst(prune.toArray,
+    SourceFilters.toAst(prune.toArray,
       c.readSchema.fieldNames.toSet, zone)
   }
 

@@ -2,12 +2,10 @@ package graft.sources
 
 import java.util.{Map => JMap, Set => JSet}
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
-import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -27,8 +25,9 @@ import graft.core.Collection
   *
   * Each resolves in [[GraftCatalog.loadTable]] when `db.t` is a
   * collection and the trailing name part is one of [[GraftMetaTable
-  * .Kinds]]; the scan re-reads the CURRENT manifest at execution, so a
-  * metadata query is always fresh. The reference exposes the same
+  * .Kinds]]; the scan is a [[GraftLocalScan]] whose rows are read from
+  * the CURRENT manifest when the query is planned, so a metadata query
+  * is always fresh. The reference exposes the same
   * information only through Python introspection calls; this is the
   * SQL-native face a monitoring dashboard actually queries. */
 class GraftMetaTable(spark: SparkSession, root: String, identName: String,
@@ -59,20 +58,8 @@ class GraftMetaTable(spark: SparkSession, root: String, identName: String,
     JSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new V1Scan {
-      override def readSchema(): StructType = schema
-      override def description(): String = s"graft $root metadata-table $kind"
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T = {
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = GraftMetaTable.this.schema
-          override def needConversion: Boolean = false
-          override def buildScan(): RDD[Row] =
-            df().queryExecution.toRdd.asInstanceOf[RDD[Row]]
-        }.asInstanceOf[T]
-      }
-    }
+    () => new GraftLocalScan(schema, () => df().collect().toSeq,
+      s"graft $root metadata-table $kind")
 }
 
 object GraftMetaTable {

@@ -23,13 +23,14 @@ import graft.core.{Collection, DatePartitioning, FilterExpr, GroupedSequencePart
   * [[GraftCatalog]] hands the analyzer for `graft.<ns>.<table>`
   * identifiers, and (as the path face) for `spark.read.format("graft")`.
   * Every read plans the native [[GraftBatchScan]] over Spark's parquet
-  * reader, or a [[GraftAggregateScan]] when manifest metadata answers an
+  * reader, or a [[GraftLocalScan]] when manifest metadata answers an
   * aggregate; `readStream.table` streams through the same reader
-  * ([[graft.streaming.GraftMicroBatchStream]]). Writes plan the native
-  * [[GraftNativeWrite]], except on tables with renamed columns, which
-  * write through [[org.apache.spark.sql.connector.write.V1Write]] into
-  * [[Collection.insert]]/[[Collection.overwrite]]. What V2 adds on top
-  * of the V1 relation:
+  * ([[graft.streaming.GraftMicroBatchStream]]). Catalog-table writes
+  * (`INSERT`, `INSERT OVERWRITE`, `REPLACE WHERE`, `writeStream.toTable`)
+  * plan the native [[GraftNativeWrite]]; the path face's writes plan a
+  * [[org.apache.spark.sql.connector.write.V1Write]] into
+  * [[Collection.insert]]/[[Collection.overwrite]] (see [[capabilities]]).
+  * What the table face offers:
   *
   *  - catalog identity: `CREATE/DROP/ALTER TABLE graft.db.t`, INSERT,
   *    `DESCRIBE`, `SHOW TABLES` — no temp-view registration step;
@@ -61,13 +62,13 @@ import graft.core.{Collection, DatePartitioning, FilterExpr, GroupedSequencePart
   */
 class GraftTable(spark: SparkSession, val root: String, identName: String,
                  asOfGen: Option[Long] = None,
-                 /** r10: the PATH face (`spark.read.format("graft")`) —
-                   * advertises BATCH_READ only, so reads plan through the
-                   * native DSv2 scan while writes and streaming keep
-                   * falling back to the proven V1 provider faces
-                   * (dynamic partition overwrite, change feeds, the
-                   * exactly-once sink), whose semantics the V2 write
-                   * protocol does not cover for anonymous tables. */
+                 /** The PATH face (`spark.read.format("graft")`, and
+                   * session-catalog `USING graft` tables): reads plan the
+                   * native DSv2 scan; writes advertise `V1_BATCH_WRITE`,
+                   * `TRUNCATE` and `OVERWRITE_BY_FILTER` but no
+                   * `BATCH_WRITE` or streaming capability, so
+                   * `DataFrameWriter.save` and `writeStream.format`
+                   * keep the provider's V1 faces (see [[capabilities]]). */
                  pathFace: Boolean = false)
     extends Table with SupportsRead with SupportsWrite with SupportsDeleteV2
     with SupportsMetadataColumns {
@@ -94,7 +95,7 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
     * derived partition columns ride as metadata columns instead. The
     * PATH face keeps its historical V1 contract: derived partition
     * columns are REAL schema columns (`WHERE day = 3` is first-class
-    * and `SELECT *` includes them — GraftRelation.scala:63). */
+    * and `SELECT *` includes them). */
   override def schema(): StructType =
     if (pathFace) StructType(collection.schema.fields ++
       partStrategy.derivedCols.map(c =>
@@ -139,74 +140,24 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
   override def version(): String =
     asOfGen.getOrElse(collection.generation).toString
 
-  /** Does this table's SQL write face plan as a native DSv2 write (r10:
-    * one atomic manifest publish in `BatchWrite.commit`) or through the
-    * V1 `InsertableRelation` bridge? Both end in the same task writer
-    * ([[graft.core.GraftWriterFactory]]); the bridge reaches it through
-    * [[Collection.insert]]. Decided HERE, once, because Spark's write
-    * strategy requires the capability set and the built `Write` to
-    * agree: a table advertising `V1_BATCH_WRITE` must build a
-    * `V1Write`; one that doesn't must build a `toBatch`-capable Write.
-    * The bridge serves tables with renamed columns (CHECK constraints
-    * stopped being a fallback in r10b — the native tasks enforce them
-    * per row).
+  /** Every catalog table advertises one constant set: the native scan
+    * and micro-batch reader, and the native write with append,
+    * truncate, overwrite-by-filter (`REPLACE WHERE`), dynamic overwrite
+    * and streaming (`writeStream.toTable`). No IO.
     *
-    * CACHED (lazy val) and NON-THROWING: `capabilities()` consults this
-    * on every `Table.supports()` probe during analysis and planning —
-    * a `def` would pay a manifest head probe (remote `fs.exists`) per
-    * probe, and a concurrently-repartitioned or manifest-less handle
-    * would throw `IllegalStateException` out of `capabilities()`,
-    * failing analysis of a plain SELECT before the scan path's own
-    * guarded handling could produce its clear error. An undecidable
-    * probe falls back to the V1 bridge (always-correct side); a
-    * snapshot whose eligibility genuinely changed between table load
-    * and write planning still fails loudly in
-    * [[GraftWriteBuilder.build]]. */
-  private[sources] lazy val nativeWriteEligible: Boolean =
-    try collection.nativeWriteCompatible
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  /** OVERWRITE_DYNAMIC rides the native write only (r10): the V1 write
-    * bridge covers append and overwrite-by-filter (`V1FallbackWriters`),
-    * so on a V1-fallback table dynamic `INSERT OVERWRITE` still refuses
-    * at analysis — there, partition-replace writes go through
-    * `df.write.format("graft").mode("overwrite")` with
-    * `partitionOverwriteMode=dynamic`, or [[Collection.insert]] with
-    * `MergeStrategy.Replace`, which land on the same atomic commit.
-    * Every catalog table streams (MICRO_BATCH_READ): the micro-batch
-    * reader applies fills, renames and every partition-key type like
-    * the batch scan. */
+    * The path face reads natively but keeps its writes on the V1
+    * bridge: `V1_BATCH_WRITE` serves session-catalog `USING graft`
+    * tables' INSERT / INSERT OVERWRITE, while `DataFrameWriter.save`
+    * sees no `BATCH_WRITE` and falls back to the provider's
+    * `CreatableRelationProvider`. Spark's V2 `save` leg plans only a
+    * full overwrite and refuses `ignore` and `errorifexists`, so
+    * advertising `BATCH_WRITE` there would lose those modes and
+    * dynamic overwrite through `save`. */
   override def capabilities(): JSet[TableCapability] = {
-    // the path face reads natively but keeps EVERY write on the V1
-    // bridge: V1_BATCH_WRITE serves session-catalog `USING graft`
-    // tables' INSERT/INSERT OVERWRITE, while DataFrameWriter.save sees
-    // no BATCH_WRITE and falls back to the CreatableRelationProvider
-    // (preserving dynamic partition overwrite, which the V2 protocol
-    // only covers via OVERWRITE_DYNAMIC + a native writer)
-    if (pathFace) return JSet.of(
-      TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_BY_FILTER)
-    val base = new java.util.HashSet[TableCapability](JSet.of(
-      TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_BY_FILTER))
-    if (nativeWriteEligible) {
-      // r10: the native BatchWrite expresses dynamic partition replace
-      // (commit with replaced = touched partitions), so dynamic INSERT
-      // OVERWRITE stops refusing — on natively-writable tables only
-      // (the V1 bridge still has no dynamic exec). STREAMING_WRITE
-      // rides the same eligibility: `writeStream.toTable` plans the
-      // native exactly-once epoch sink (CHECK constraints enforce
-      // in-task since r10b, so constrained tables stream too; only
-      // tables with renamed columns remain on the V1 bridge)
-      base.add(TableCapability.OVERWRITE_DYNAMIC)
-      base.add(TableCapability.STREAMING_WRITE)
-    } else base.add(TableCapability.V1_BATCH_WRITE)
-    base
+    import TableCapability._
+    if (pathFace) JSet.of(BATCH_READ, V1_BATCH_WRITE, TRUNCATE, OVERWRITE_BY_FILTER)
+    else JSet.of(BATCH_READ, MICRO_BATCH_READ, BATCH_WRITE, STREAMING_WRITE, TRUNCATE,
+      OVERWRITE_BY_FILTER, OVERWRITE_DYNAMIC)
   }
 
   // --- read ---------------------------------------------------------
@@ -227,8 +178,7 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(spark, () => writable(), identName, info,
-      native = nativeWriteEligible && !pathFace,
-      translate = deleteAst)
+      native = !pathFace, translate = deleteAst)
 
   // --- DELETE FROM --------------------------------------------------
 
@@ -241,7 +191,7 @@ class GraftTable(spark: SparkSession, val root: String, identName: String,
     if (v1.contains(None)) None
     else {
       val known = (collection.schema.fieldNames ++ partStrategy.axis).toSet
-      GraftRelation.toAstExact(v1.flatten, known, sessionZone)
+      SourceFilters.toAstExact(v1.flatten, known, sessionZone)
     }
   }
 
@@ -314,7 +264,7 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
       java.util.TimeZone.getDefault.getID))
     pushed = filters
-    GraftRelation.toAstExact(filters, fullSchema.fieldNames.toSet, zone) match {
+    SourceFilters.toAstExact(filters, fullSchema.fieldNames.toSet, zone) match {
       case Some(exact) if collection.canClaimStrict(exact, Some(pin)) =>
         // partition-only + strictly decidable on every partition key:
         // file-level pruning IS exact row-level filtering (every row of
@@ -331,7 +281,7 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
         ast = exact; exactPush = false
         filters
       case None =>
-        ast = GraftRelation.toAst(filters, fullSchema.fieldNames.toSet, zone)
+        ast = SourceFilters.toAst(filters, fullSchema.fieldNames.toSet, zone)
         exactPush = false
         filters // engine re-applies everything — pruning-only weakening
     }
@@ -527,34 +477,36 @@ class GraftScanBuilder(spark: SparkSession, collection: Collection,
     * other read is the native [[GraftBatchScan]] over the pinned
     * generation. */
   override def build(): Scan = aggResult match {
-    case Some((s, rows)) => new GraftAggregateScan(collection.root, s, rows)
+    case Some((s, rows)) => new GraftLocalScan(s, () => rows,
+      s"graft ${collection.root} metadata-agg ${s.fieldNames.mkString(", ")}")
     case None =>
       new GraftBatchScan(spark, collection, tableSchema, requiredSchema, ast, asOfGen,
         limit.map(_.toLong), pushed, scanOptions, pin, claimed = exactPush)
   }
 }
 
-/** A metadata aggregate answer ([[GraftScanBuilder]]'s `COUNT`/`MIN`/
-  * `MAX` pushdown) as a DSv2 local scan of its rows. */
-final class GraftAggregateScan(root: String, schema: StructType, answer: Seq[Row])
+/** Rows graft answers from metadata as a DSv2 local scan (Spark plans a
+  * `LocalTableScanExec`): a [[GraftScanBuilder]] `COUNT`/`MIN`/`MAX`
+  * pushdown answer, or a [[GraftMetaTable]]'s rows. `answer` runs when
+  * Spark plans the scan. */
+final class GraftLocalScan(schema: StructType, answer: () => Seq[Row], desc: String)
     extends LocalScan {
   override def readSchema(): StructType = schema
   override def rows(): Array[InternalRow] = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-    answer.map(r => toCatalyst(r).asInstanceOf[InternalRow]).toArray
+    answer().map(r => toCatalyst(r).asInstanceOf[InternalRow]).toArray
   }
-  override def description(): String =
-    s"graft $root metadata-agg ${schema.fieldNames.mkString(", ")}"
+  override def description(): String = desc
 }
 
 /** INSERT INTO (append), static INSERT OVERWRITE (truncate-and-write),
-  * and TRUNCATE, all landing on the atomic manifest-commit write paths
-  * through Spark's V1 write bridge. Partial `INSERT OVERWRITE ...
+  * TRUNCATE, and on catalog tables (`native`) dynamic INSERT OVERWRITE
+  * and `REPLACE WHERE`, each landing as one atomic manifest commit.
+  * Catalog tables build a [[GraftNativeWrite]]; the path face builds a
+  * `V1Write` into [[Collection.insert]]/[[Collection.overwrite]] (see
+  * [[GraftTable.capabilities]]). Partial `INSERT OVERWRITE ...
   * PARTITION (k=v)` would need delete+insert in ONE commit and is
-  * refused at analysis rather than done non-atomically; dynamic
-  * partition replace goes through the V1 writer or
-  * [[Collection.insert]] with `MergeStrategy.Replace` (see
-  * [[GraftTable.capabilities]]). */
+  * refused at analysis rather than done non-atomically. */
 class GraftWriteBuilder(spark: SparkSession, open: () => Collection,
                         tableName: String, info: LogicalWriteInfo,
                         native: Boolean,
@@ -567,10 +519,9 @@ class GraftWriteBuilder(spark: SparkSession, open: () => Collection,
 
   override def truncate(): WriteBuilder = { mode = "truncate"; this }
 
-  /** Dynamic partition overwrite — native-only (the OVERWRITE_DYNAMIC
-    * capability is advertised exactly when [[GraftTable
-    * .nativeWriteEligible]], so this is unreachable on V1-fallback
-    * tables; the guard keeps a capability/builder drift loud). */
+  /** Dynamic partition overwrite — native-only (the path face does not
+    * advertise OVERWRITE_DYNAMIC, so this is unreachable there; the
+    * guard keeps a capability/builder drift loud). */
   override def overwriteDynamicPartitions(): WriteBuilder = {
     require(native, s"dynamic overwrite of $tableName requires the native write path")
     mode = "dynamic"
@@ -604,22 +555,13 @@ class GraftWriteBuilder(spark: SparkSession, open: () => Collection,
     this
   }
 
-  /** FOLLOWS the table-level native/V1 decision
-    * ([[GraftTable.nativeWriteEligible]] — the capability set and the
-    * Write instance must agree for Spark's write strategy). A snapshot
-    * whose eligibility changed between table load and write planning
-    * (a column renamed concurrently) fails loudly here rather than
-    * writing logical names into the files. */
+  /** FOLLOWS the table face (the capability set and the Write instance
+    * must agree for Spark's write strategy): a native write on catalog
+    * tables, a `V1Write` on the path face. */
   override def build(): Write = {
     val c = open()
     if (native) {
-      val spec = c.nativeWriteSpec().getOrElse(throw new IllegalStateException(
-        s"table $tableName was loaded native-writable but the current " +
-        "snapshot is not (a column was renamed concurrently?) — " +
-        "re-read the table and retry"))
-      require(info.schema().fieldNames.toSeq == c.schema.fieldNames.toSeq,
-        s"INSERT schema ${info.schema().fieldNames.mkString(",")} does not " +
-        s"match table schema ${c.schema.fieldNames.mkString(",")}")
+      GraftNativeWrite.requireTableSchema(c, info.schema())
       // the streaming leg's exactly-once idempotence key: an explicit
       // streamName beats the checkpoint location beats the query id —
       // the same precedence as the V1 path sink (several streams feeding
@@ -630,8 +572,7 @@ class GraftWriteBuilder(spark: SparkSession, open: () => Collection,
       val streamName = Option(info.options.get("streamName"))
         .orElse(Option(info.options.get("checkpointLocation")))
         .getOrElse(info.queryId())
-      GraftWriteBuilder.lastStreamName = streamName
-      new GraftNativeWrite(spark, c, spec, mode, info.schema(), replaceAst,
+      new GraftNativeWrite(spark, c, c.nativeWriteSpec(), mode, info.schema(), replaceAst,
         reopen = () => open(), streamName = streamName)
     } else new V1Write {
       override def toInsertableRelation: InsertableRelation =
@@ -643,11 +584,4 @@ class GraftWriteBuilder(spark: SparkSession, open: () => Collection,
         }
     }
   }
-}
-
-object GraftWriteBuilder {
-  /** Test observability: the idempotence key the last streaming write
-    * build resolved — lets specs prove the queryId fallback is stable
-    * across checkpoint restarts without reaching into Spark internals. */
-  @volatile private[graft] var lastStreamName: String = null
 }

@@ -654,17 +654,20 @@ class GraftCollectionSource(spark: SparkSession, root: String,
   *   df.write.format("graft").mode("append").save(root)     // Concat insert
   *   spark.readStream.format("graft").option("root", root)  // streaming
   * }}}
-  * Batch reads go through [[graft.sources.GraftRelation]] (data-source
-  * filters prune via the skip layers); batch writes insert into an
-  * EXISTING collection (`Collection.create` declares schema, axis and
-  * partitioning — a bare parquet path can't): `append` = Concat;
-  * `overwrite` honors `spark.sql.sources.partitionOverwriteMode` —
-  * STATIC (the session default) truncates the whole collection in one
-  * atomic commit, DYNAMIC replaces only colliding partitions (writer
-  * option `partitionOverwriteMode` overrides the conf per write);
-  * `ignore` = no-op, `errorifexists` = refuse. */
+  * Batch reads resolve through the [[org.apache.spark.sql.connector
+  * .catalog.TableProvider]] face to the path-face
+  * [[graft.sources.GraftTable]] (data-source filters prune via the skip
+  * layers); batch writes insert into an EXISTING collection
+  * (`Collection.create` declares schema, axis and partitioning — a bare
+  * parquet path can't): `append` = Concat; `overwrite` honors
+  * `spark.sql.sources.partitionOverwriteMode` — STATIC (the session
+  * default) truncates the whole collection in one atomic commit,
+  * DYNAMIC replaces only colliding partitions (writer option
+  * `partitionOverwriteMode` overrides the conf per write); `ignore` =
+  * no-op, `errorifexists` = refuse. There is no V1 read relation: a
+  * session that lists graft in `spark.sql.sources.useV1SourceList`
+  * cannot read graft. */
 class GraftCollectionSourceProvider extends StreamSourceProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.RelationProvider
     with org.apache.spark.sql.sources.CreatableRelationProvider
     with org.apache.spark.sql.sources.StreamSinkProvider
     with org.apache.spark.sql.connector.catalog.TableProvider {
@@ -675,13 +678,13 @@ class GraftCollectionSourceProvider extends StreamSourceProvider with DataSource
   // handing the analyzer the same GraftTable the catalog face uses —
   // so path-based reads get the native vectorized BatchScan (fills,
   // renames and AS OF included), filtered metadata-aggregate pushdown,
-  // and exact statistics. The table advertises BATCH_READ ONLY
-  // (GraftTable.pathFace): DataFrameWriter sees no BATCH_WRITE and
-  // falls back to this class's CreatableRelationProvider (preserving
-  // dynamic partition overwrite), and DataStreamReader/Writer see no
-  // streaming capability and keep the V1 change-feed source and
-  // exactly-once sink. Time travel arrives as read options
-  // (versionAsOf / timestampAsOf / tagAsOf), like the V1 relation.
+  // and exact statistics. The path face (GraftTable.pathFace)
+  // advertises no BATCH_WRITE: DataFrameWriter falls back to this
+  // class's CreatableRelationProvider (preserving `ignore`,
+  // `errorifexists` and dynamic partition overwrite), and
+  // DataStreamReader/Writer see no streaming capability and keep the
+  // V1 change-feed source and exactly-once sink. Time travel arrives
+  // as read options (versionAsOf / timestampAsOf / tagAsOf).
 
   /** TRUE so a user-supplied `.schema(s)` reaches [[getTable]] instead
     * of throwing in `DataSourceV2Utils.getTableFromProvider` — the
@@ -767,27 +770,6 @@ class GraftCollectionSourceProvider extends StreamSourceProvider with DataSource
 
   override def createRelation(
       sqlContext: SQLContext,
-      parameters: Map[String, String]): org.apache.spark.sql.sources.BaseRelation = {
-    val root = rootOf(parameters)
-    // batch change-feed reads on the V1 face too (sessions that pin
-    // graft onto spark.sql.sources.useV1SourceList see this path)
-    graft.sources.GraftChangesTable
-      .resolveRange(sqlContext.sparkSession, root, parameters.get)
-      .foreach { case (f, t) =>
-        val tbl = new graft.sources.GraftChangesTable(sqlContext.sparkSession, root, f, t)
-        return tbl.newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty)
-          .build().asInstanceOf[org.apache.spark.sql.connector.read.V1Scan]
-          .toV1TableScan(sqlContext)
-      }
-    // time travel via read options (Delta's versionAsOf/timestampAsOf,
-    // plus tagAsOf — a named snapshot, r8)
-    val asOf = GraftCollectionSourceProvider.resolveAsOf(
-      sqlContext.sparkSession, root, parameters.get)
-    new graft.sources.GraftRelation(sqlContext, root, asOf)
-  }
-
-  override def createRelation(
-      sqlContext: SQLContext,
       mode: org.apache.spark.sql.SaveMode,
       parameters: Map[String, String],
       data: DataFrame): org.apache.spark.sql.sources.BaseRelation = {
@@ -812,7 +794,14 @@ class GraftCollectionSourceProvider extends StreamSourceProvider with DataSource
         s"collection at $root already exists (mode=ErrorIfExists); " +
         "use append or overwrite")
     }
-    new graft.sources.GraftRelation(sqlContext, root)
+    // Spark reads only the schema of the returned relation (to re-cache
+    // plans over it after an overwrite)
+    val ctx = sqlContext
+    new org.apache.spark.sql.sources.BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType =
+        StructType(c.readSchema.fields.filterNot(_.name == Collection.RowIdCol))
+    }
   }
 
   override def shortName(): String = "graft"
@@ -867,11 +856,8 @@ class GraftCollectionSourceProvider extends StreamSourceProvider with DataSource
 object GraftCollectionSourceProvider {
   /** Resolve the Delta-style time-travel read options
     * (`versionAsOf` | `timestampAsOf` (epoch-millis or ISO instant) |
-    * `tagAsOf`) to a pinned generation — ONE parser shared by the V1
-    * relation face ([[GraftCollectionSourceProvider.createRelation]])
-    * and the DSv2 path face
-    * ([[GraftCollectionSourceProvider.getTable]]), so the two faces
-    * can never drift in accepted formats or error text. */
+    * `tagAsOf`) to a pinned generation for the DSv2 path face
+    * ([[GraftCollectionSourceProvider.getTable]]). */
   private[graft] def resolveAsOf(spark: org.apache.spark.sql.SparkSession,
                                  root: String,
                                  opt: String => Option[String]): Option[Long] =

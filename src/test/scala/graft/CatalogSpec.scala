@@ -55,7 +55,7 @@ class CatalogSpec extends AnyFunSuite {
     val got = filtered.collect().map(_.getDouble(0)).sorted.toSeq
     assert(got == Seq(1.0, 4.0))
     assert(ScanPlans.graftScans(filtered).map(_.report.pushedAst) != Seq(FilterExpr.True),
-      "catalog scans must push filters like the V1 relation does")
+      "catalog scans must push filters into the skip stack")
 
     // derived partition components are METADATA columns: queryable +
     // pruning, but never demanded by INSERT
@@ -319,6 +319,13 @@ class CatalogSpec extends AnyFunSuite {
       .collect()
     assert(hist.nonEmpty && hist.exists(_.getString(1) == "insert"),
       s"history must list the insert commit: ${hist.mkString(", ")}")
+    // the rows are a local scan planned from the manifest, not a V1 scan
+    val histDf = sql("SELECT * FROM graft.db11.meta.history")
+    histDf.collect()
+    val histPlan = histDf.queryExecution.executedPlan
+    assert(ScanPlans.localScans(histDf) == 1 && histPlan.collect {
+      case r: org.apache.spark.sql.execution.RowDataSourceScanExec => r }.isEmpty,
+      s"history must plan a LocalTableScanExec and no V1 scan:\n$histPlan")
     val parts = sql("SELECT partition, n_files, n_rows FROM graft.db11.meta.partitions")
       .collect()
     assert(parts.length == 3, s"three day partitions: ${parts.mkString(", ")}")

@@ -11,8 +11,8 @@ import graft.core.{Collection, DatePartitioning, GroupedSequencePartitioning,
   * schemas, partitionings, and data (nulls everywhere, null axis rows,
   * empty strings in identity keys, arrays/structs/decimals/dates in
   * the payload, and identity keys of timestamp, boolean, decimal and
-  * date type), a native `INSERT INTO` and a V1-bridge `INSERT INTO`
-  * (which runs `Collection.insert`) of the same rows must produce
+  * date type, and renamed columns), a native `INSERT INTO` and a
+  * [[Collection.insert]] of the same rows must produce
   * collections with IDENTICAL query results, and both must lay out
   * exactly the Hive partition directories plain Spark's `partitionBy`
   * writes for the assigned rows — the write-side twin of
@@ -123,26 +123,29 @@ class NativeWritePropertySpec extends AnyFunSuite {
     (schema, "seq", SequencePartitioning(Seq("e"), "seq"), rows)
   }
 
-  /** The partition directories (root-relative) holding `root`'s
-    * parquet files. */
-  private def dataDirs(root: String): Set[String] = {
+  /** `root`'s parquet data files, with the partition directory
+    * (root-relative) holding each. */
+  private def dataFiles(root: String): Seq[(org.apache.hadoop.fs.Path, String)] = {
     val fs = Collection.fileSystem(spark, root)
     val base = fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toUri.getPath
       .stripSuffix("/")
     val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
-    val out = Set.newBuilder[String]
+    val out = Seq.newBuilder[(org.apache.hadoop.fs.Path, String)]
     while (it.hasNext) {
       val p = it.next().getPath
       val rel = p.getParent.toUri.getPath.stripPrefix(base).stripPrefix("/")
-      if (p.getName.endsWith(".parquet") && !rel.startsWith("_")) out += rel
+      if (p.getName.endsWith(".parquet") && !rel.startsWith("_")) out += p -> rel
     }
     out.result()
   }
 
-  /** Write `rows` natively, through [[Collection.insert]] (the call the
-    * V1 bridge ends in), and with plain Spark's `partitionBy`; assert the
-    * three layouts and the two collections' rows agree. Returns plain
-    * Spark's layout. */
+  /** The partition directories (root-relative) holding `root`'s
+    * parquet files. */
+  private def dataDirs(root: String): Set[String] = dataFiles(root).map(_._2).toSet
+
+  /** Write `rows` natively, through [[Collection.insert]], and with
+    * plain Spark's `partitionBy`; assert the three layouts and the two
+    * collections' rows agree. Returns plain Spark's layout. */
   private def checkCase(name: String, schema: StructType, axis: String,
                         part: graft.core.Partitioning, rows: Seq[Row]): String = {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
@@ -217,6 +220,99 @@ class NativeWritePropertySpec extends AnyFunSuite {
       rows.foreach { r =>
         assert(got(r.getLong(1)) == Option(r.get(0)), s"seed $seed: key of seq ${r.getLong(1)}")
       }
+    }
+  }
+
+  /** A renamed-column collection: identity key `k` (also the axis), a
+    * stats + bloom column `p0` renamed to `score`, and a random payload
+    * `p1` renamed to `extra`, both renamed before the first write. */
+  private def mkRenamedCase(seed: Int): (StructType, Seq[Row]) = {
+    val rng = new scala.util.Random(seed)
+    val payload = payloadTypes(rng.nextInt(payloadTypes.length))
+    val schema = StructType(Seq(StructField("k", LongType), StructField("p0", LongType),
+      StructField("p1", payload)))
+    val rows = (1 to 200).map { _ =>
+      val k: Any = if (rng.nextInt(25) == 0) null else rng.nextInt(5).toLong
+      // even values only, so an odd probe inside the zone map is absent
+      Row(k, 2L * rng.nextInt(1000), randValue(rng, payload))
+    }
+    (schema, rows)
+  }
+
+  test("seeded fuzz: renamed columns write natively under their physical names") {
+    val renames = Seq("p0" -> "score", "p1" -> "extra")
+    for (seed <- 201 to 204) {
+      val (schema, rows) = mkRenamedCase(seed)
+      val logical = StructType(schema.fields.map(f =>
+        renames.toMap.get(f.name).fold(f)(n => f.copy(name = n))))
+      val (nName, vName) = (s"nr$seed", s"vr$seed")
+      val cs = Seq(nName, vName).map { n =>
+        val c = Collection.create(spark, s"${CatalogSpec.warehouse}/nwfuzz/$n", schema, "k",
+          SequencePartitioning(Seq("k"), "k"), catalogEnabled = true,
+          statsColumns = Seq("p0"), bloomColumns = Seq("p0"))
+        renames.foreach { case (o, n) => c.renameVariable(o, n) }
+        c
+      }
+      val cV = cs(1)
+      def frame(rs: Seq[Row]): DataFrame =
+        spark.createDataFrame(spark.sparkContext.parallelize(rs, 4), logical)
+      def sqlWrite(stmt: String, rs: Seq[Row]): Unit = {
+        frame(rs).createOrReplaceTempView("nw_ren_src")
+        val plan = spark.sql(stmt).queryExecution.executedPlan.toString
+        assert(plan.contains("GraftNativeWrite") && !plan.contains("ExecV1"),
+          s"seed $seed: expected a native write for $stmt:\n$plan")
+      }
+      def check(step: String): Unit = {
+        val n = Collection.open(spark, cs.head.root, readOnly = true)
+        val v = Collection.open(spark, cV.root, readOnly = true)
+        assert(n.schema == logical && v.schema == logical)
+        assert(dataDirs(n.root) == dataDirs(v.root),
+          s"seed $seed, $step: partition directories diverged")
+        val a = n.query().collect().map(_.toString).sorted.toSeq
+        val b = v.query().collect().map(_.toString).sorted.toSeq
+        assert(a.nonEmpty && a == b, s"seed $seed, $step: rows diverged")
+      }
+      val (first, rest) = rows.splitAt(120)
+      // INSERT (the reference's initial load) ...
+      sqlWrite(s"INSERT INTO graft.nwfuzz.$nName SELECT * FROM nw_ren_src", first)
+      cV.insert(frame(first), graft.core.MergeStrategy.Concat)
+      check("insert")
+      // ... dynamic INSERT OVERWRITE of the partitions `rest` touches ...
+      val touched = rest.filter(r => r.get(0) != null && r.getLong(0) <= 2)
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try sqlWrite(s"INSERT OVERWRITE graft.nwfuzz.$nName SELECT * FROM nw_ren_src", touched)
+      finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      cV.insert(frame(touched), graft.core.MergeStrategy.Replace)
+      check("dynamic overwrite")
+      // ... and REPLACE WHERE on the integral key
+      val k3 = rest.filter(r => r.get(0) == 3L)
+      sqlWrite(s"INSERT INTO graft.nwfuzz.$nName REPLACE WHERE k = 3 SELECT * FROM nw_ren_src", k3)
+      cV.insert(frame(k3), graft.core.MergeStrategy.Replace)
+      check("replace where")
+
+      // every native file carries the PHYSICAL names, p0 with min/max stats
+      val conf = spark.sparkContext.hadoopConfiguration
+      dataFiles(cs.head.root).map(_._1).foreach { file =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+        try {
+          val names = reader.getFooter.getFileMetaData.getSchema.getFields.toArray
+            .map(_.asInstanceOf[org.apache.parquet.schema.Type].getName).toSet
+          assert(names("p0") && names("p1") && !names("score") && !names("extra"),
+            s"seed $seed, $file: file columns $names")
+          val p0 = reader.getFooter.getBlocks.get(0).getColumns.toArray
+            .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+            .find(_.getPath.toDotString == "p0").get
+          assert(p0.getStatistics.hasNonNullValue && p0.getStatistics.genericGetMin != null,
+            s"seed $seed, $file: p0 has no min/max")
+        } finally reader.close()
+      }
+      // the renamed bloom column written through SQL prunes an absent
+      // value the zone maps keep
+      val rep = Collection.open(spark, cs.head.root, readOnly = true)
+        .explainPruning("score == 1001")
+      assert(rep.filesAfterStats > 0 && rep.filesAfterBloom < rep.filesAfterStats,
+        s"seed $seed: a renamed bloom column must prune: $rep")
     }
   }
 }

@@ -10,9 +10,8 @@ import graft.core.Collection
 /** r10 native DSv2 batch write: `INSERT INTO graft.db.t` runs as a real
   * `AppendData` — executor tasks write final parquet files directly
   * (zero renames), `commit()` publishes one atomic manifest generation —
-  * with row-identical results to [[Collection.insert]], the call the V1
-  * bridge ends in (CHECK-constrained tables write natively since r10b;
-  * only tables with renamed columns keep the bridge). */
+  * with row-identical results to [[Collection.insert]] (CHECK-constrained
+  * tables and tables with renamed columns write natively too). */
 class NativeWriteSpec extends AnyFunSuite {
   lazy val spark = {
     val s = SparkTestSession.spark
@@ -41,8 +40,8 @@ class NativeWriteSpec extends AnyFunSuite {
     assert(plan.contains("AppendData") && !plan.contains("AppendDataExecV1"),
       s"expected a native AppendData plan:\n$plan")
 
-    // the reference: the frame the V1 face hands Collection.insert — the
-    // analyzer has cast the query to the table schema (v is a decimal)
+    // the reference: Collection.insert of the frame cast to the table
+    // schema, as the analyzer casts the query (v is a decimal)
     cV1.insert(sql("SELECT ts, user_id, CAST(v AS DOUBLE) AS v FROM nw_src"),
       graft.core.MergeStrategy.Concat)
 
@@ -283,27 +282,37 @@ class NativeWriteSpec extends AnyFunSuite {
 
   test("capabilities() is IO-free after first probe and never throws on a stale handle") {
     import org.apache.spark.sql.connector.catalog.TableCapability
-    val root = SparkTestSession.tmp("graft-caps")
+    val root = s"${CatalogSpec.warehouse}/nw/caps_t"
     val df = spark.range(3).selectExpr(
       "timestampadd(HOUR, CAST(id AS INT), TIMESTAMP'2024-01-01 00:00:00') AS ts",
       "id AS v")
     val c = graft.core.Collection.create(spark, root, df.schema, "ts",
-      graft.core.DatePartitioning("ts", "D"))
+      graft.core.DatePartitioning("ts", "D"), catalogEnabled = true)
     c.insert(df)
 
     // a handle whose collection was concurrently REPARTITIONED: analysis
     // of a plain SELECT probes capabilities() — it must not throw, and
-    // must fall back to the always-correct V1 write side
-    val table = new graft.sources.GraftTable(spark, root, "caps_t", None)
+    // advertises the same native set as any catalog table
+    val table = new graft.sources.GraftTable(spark, root, "graft.nw.caps_t", None)
     table.schema() // force the handle open BEFORE the concurrent repartition
     graft.core.Collection.open(spark, root)
       .changePartitioning(graft.core.DatePartitioning("ts", "h"))
     val caps = table.capabilities()
-    assert(caps.contains(TableCapability.V1_BATCH_WRITE) &&
-      !caps.contains(TableCapability.OVERWRITE_DYNAMIC),
-      s"a stale handle must advertise the V1 bridge, not throw: $caps")
-    // cached: repeated probes return the same set without re-probing IO
-    assert(table.capabilities() == caps)
+    assert(caps == java.util.Set.of(TableCapability.BATCH_READ,
+      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
+      TableCapability.OVERWRITE_BY_FILTER, TableCapability.OVERWRITE_DYNAMIC),
+      s"a stale handle must advertise the constant native set, not throw: $caps")
+    // an INSERT into that table plans natively and lands under the new
+    // hourly layout
+    val ins = sql("""INSERT INTO graft.nw.caps_t VALUES
+      (TIMESTAMP'2024-01-01 03:00:00', 3), (TIMESTAMP'2024-01-01 04:00:00', 4)""")
+    val plan = ins.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftNativeWrite") && !plan.contains("ExecV1"), plan)
+    val after = graft.core.Collection.open(spark, root, readOnly = true)
+    assert(after.query().select("v").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(0L, 1L, 2L, 3L, 4L))
+    assert(after.partitions().size == 5, s"hourly partitions: ${after.partitions()}")
   }
 
   test("identity (sequence) partition keys: Hive escaping and null sentinel round-trip") {

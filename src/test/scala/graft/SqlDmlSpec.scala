@@ -592,10 +592,8 @@ class SqlDmlSpec extends AnyFunSuite {
       // row-level DELETE fallback (k*2 is untranslatable)
       sql("DELETE FROM dml_v1 WHERE k * 2 >= 8")
       assert(sql("SELECT count(*) FROM dml_v1").collect().head.getLong(0) == 4L)
-      // EXACTLY-translatable delete on the V1 face: there is no native
-      // SupportsDeleteV2 path here (that face is DSv2-only), so the rule
-      // must take the row-level fallback instead of falling through to
-      // CheckAnalysis' "DELETE is only supported with v2 tables"
+      // EXACTLY-translatable delete on the path face: Spark's native
+      // SupportsDeleteV2 path
       sql("DELETE FROM dml_v1 WHERE k = 0")
       assert(sql("SELECT count(*) FROM dml_v1").collect().head.getLong(0) == 3L)
     } finally sql("DROP TABLE IF EXISTS dml_v1")

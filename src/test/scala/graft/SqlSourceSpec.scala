@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Collection, DatePartitioning, FilterExpr, MergeStrategy}
-import graft.sources.GraftRelation
+import graft.sources.SourceFilters
 
 /** The `"graft"` batch format (round 6): plain `spark.read.format` /
   * temp-view SQL over a collection, with data-source filters pushed into
@@ -59,10 +59,9 @@ class SqlSourceSpec extends AnyFunSuite {
     assert(tsAst.size == 1 && tsAst.head.toString.contains("2024-01-02"),
       s"timestamp filter must push: $tsAst")
 
-    // the relation advertises a metadata cardinality for join planning
-    val rel = new GraftRelation(spark.sqlContext, root)
-    assert(rel.sizeInBytes > 0 && rel.sizeInBytes < 1000000,
-      s"sizeInBytes must come from metadata, got ${rel.sizeInBytes}")
+    // the path face's scan reports a metadata size for join planning
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > 0 && size < 1000000, s"sizeInBytes must come from metadata, got $size")
   }
 
   test("path reads resolve through the DSv2 face: native BatchScan (r10)") {
@@ -174,7 +173,7 @@ class SqlSourceSpec extends AnyFunSuite {
   test("filter translation: strictness under Or/Not, conjunct dropping at top level") {
     import org.apache.spark.sql.sources._
     val known = Set("a", "b")
-    def to(fs: Filter*) = GraftRelation.toAst(fs.toArray, known)
+    def to(fs: Filter*) = SourceFilters.toAst(fs.toArray, known)
     // exact translations
     assert(to(EqualTo("a", 5)) ==
       FilterExpr.Cmp("==", FilterExpr.Name("a"), FilterExpr.Lit(5L)))
@@ -223,18 +222,23 @@ class SqlSourceSpec extends AnyFunSuite {
         s"FROM $tbl WHERE id >= 100")
       assert(spark.table(tbl).select("id").as[Long].collect().toSeq == Seq(103L))
 
-      // time-travel relations refuse writes
-      intercept[Exception] {
-        new GraftRelation(spark.sqlContext, root, asOfGen = Some(1L))
-          .insert(spark.table(tbl), overwrite = false)
+      // time-travel tables refuse writes
+      val pinned = new graft.sources.GraftTable(spark, root, "pinned", asOfGen = Some(1L),
+        pathFace = true)
+      val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+        override def options() = org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+        override def queryId(): String = "pinned-write"
+        override def schema() = pinned.schema()
       }
+      val e = intercept[IllegalArgumentException](pinned.newWriteBuilder(info).build())
+      assert(e.getMessage.contains("time-travel"), e.getMessage)
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("polarity-tracked weakening: And drops a conjunct under Or; Not flips the rule") {
     import org.apache.spark.sql.sources._
     val known = Set("a", "b")
-    def to(fs: Filter*) = GraftRelation.toAst(fs.toArray, known)
+    def to(fs: Filter*) = SourceFilters.toAst(fs.toArray, known)
     def cmp(op: String, n: String, v: Long) =
       FilterExpr.Cmp(op, FilterExpr.Name(n), FilterExpr.Lit(v))
     // positive polarity: (a<=1 AND f(zz)) OR b>=4 weakens to a<=1 OR b>=4

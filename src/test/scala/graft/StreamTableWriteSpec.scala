@@ -138,19 +138,25 @@ class StreamTableWriteSpec extends AnyFunSuite {
     val cp = ckpt("stw-qid")
     val prev = spark.conf.getOption("spark.sql.streaming.checkpointLocation")
     spark.conf.set("spark.sql.streaming.checkpointLocation", cp)
-    def run(): String = {
+    // the committed stream marks, as the output collection's manifest
+    // records them
+    def marks(): Map[String, Long] = graft.core.Collection.open(spark,
+      s"${CatalogSpec.warehouse}/stw/qout", readOnly = true).streamMarks()
+    def run(): Map[String, Long] = {
       val q = spark.readStream.table("graft.stw.qsrc")
         .writeStream.queryName("stw_qid_probe").toTable("graft.stw.qout")
       try q.processAllAvailable() finally q.stop()
-      graft.sources.GraftWriteBuilder.lastStreamName
+      marks()
     }
     try {
       val first = run()
       sql("INSERT INTO graft.stw.qsrc VALUES (2, 2.0)")
       val second = run()
-      assert(first != null && first == second,
+      assert(first.size == 1 && second.keySet == first.keySet,
         s"the queryId mark key must survive a checkpoint restart " +
         s"($first vs $second) — otherwise a replayed epoch could land twice")
+      assert(second.head._2 > first.head._2,
+        s"the restarted run's epoch must advance the same mark: $first -> $second")
       val got = sql("SELECT cargo FROM graft.stw.qout ORDER BY cargo")
         .collect().map(_.getLong(0)).toSeq
       assert(got == Seq(1L, 2L), s"exactly-once across the restart: $got")
@@ -187,5 +193,49 @@ class StreamTableWriteSpec extends AnyFunSuite {
       s"the stream failure must name the constraint: ${messages(err)}")
     assert(sql("SELECT count(*) FROM graft.stw.guarded").collect().head.getLong(0) == 2,
       "a violating epoch must not commit any of its rows")
+  }
+
+  test("toTable into a renamed table streams; a rename mid-run fails the next epoch; a restart streams on") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.stw")
+    sql("CREATE TABLE graft.stw.rsrc (cargo BIGINT, v DOUBLE) PARTITIONED BY (cargo)")
+    sql("CREATE TABLE graft.stw.rout (cargo BIGINT, v DOUBLE) PARTITIONED BY (cargo)")
+    val outRoot = s"${CatalogSpec.warehouse}/stw/rout"
+    graft.core.Collection.open(spark, outRoot).renameVariable("v", "score")
+    sql("INSERT INTO graft.stw.rsrc VALUES (1, 1.0), (2, 2.0)")
+
+    val cp = ckpt("stw-rename")
+    def start(as: String) = spark.readStream.table("graft.stw.rsrc")
+      .withColumnRenamed("v", as)
+      .writeStream.option("checkpointLocation", cp)
+      .toTable("graft.stw.rout")
+    def got(col: String): Seq[(Long, Double)] = sql(s"SELECT cargo, $col FROM graft.stw.rout")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+
+    val q1 = start("score")
+    try q1.processAllAvailable() finally q1.stop()
+    assert(got("score") == Seq((1L, 1.0), (2L, 2.0)), "rows read back under the new name")
+    // the files carry the physical name
+    val files = spark.read.parquet(outRoot + "/cargo=1").columns
+    assert(files.contains("v") && !files.contains("score"), files.mkString(","))
+
+    // a rename while the query runs refuses the next epoch, naming both
+    // schemas, and commits nothing
+    val q2 = start("score")
+    val err = try {
+      q2.processAllAvailable()
+      graft.core.Collection.open(spark, outRoot).renameVariable("score", "weight")
+      sql("INSERT INTO graft.stw.rsrc VALUES (3, 3.0)")
+      intercept[Exception](q2.processAllAvailable())
+    } finally q2.stop()
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "\n" + messages(t.getCause)
+    assert(messages(err).contains("cargo,score") && messages(err).contains("cargo,weight"),
+      s"the refusal must name both schemas: ${messages(err)}")
+    assert(got("weight") == Seq((1L, 1.0), (2L, 2.0)))
+
+    // a restart against the current columns streams on, exactly once
+    val q3 = start("weight")
+    try q3.processAllAvailable() finally q3.stop()
+    assert(got("weight") == Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
   }
 }

@@ -106,9 +106,9 @@ class RenameColumnSpec extends AnyFunSuite {
     val df = spark.read.format("graft").load(root)
     assert(df.columns.contains("weight"))
     assert(df.where("user_id >= 100").count() == 50)
-    // a SQL INSERT into a renamed CATALOG table plans the V1 write (only
-    // Collection.insert maps logical names to the files' physical ones),
-    // and its rows read back under the new name
+    // a SQL INSERT into a renamed CATALOG table plans the native write
+    // (the task writer names the file column physically), and its rows
+    // read back under the new name
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", graft.CatalogSpec.warehouse)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ren")
@@ -117,8 +117,9 @@ class RenameColumnSpec extends AnyFunSuite {
     Collection.open(spark, s"${graft.CatalogSpec.warehouse}/ren/t")
       .renameVariable("value", "score")
     val ins = spark.sql("INSERT INTO graft.ren.t VALUES (2, 2.0)")
-    assert(ins.queryExecution.executedPlan.toString.contains("AppendDataExecV1"),
-      s"a renamed table writes through the V1 face:\n${ins.queryExecution.executedPlan}")
+    val insPlan = ins.queryExecution.executedPlan.toString
+    assert(insPlan.contains("AppendData") && !insPlan.contains("ExecV1"),
+      s"a renamed table writes natively:\n$insPlan")
     assert(spark.sql("SELECT k, score FROM graft.ren.t").as[(Long, Double)]
       .collect().sorted.toSeq == Seq((1L, 1.0), (2L, 2.0)))
     // dropping a renamed column retires its PHYSICAL name too
@@ -126,6 +127,22 @@ class RenameColumnSpec extends AnyFunSuite {
     c.dropVariable("score")
     assert(c.currentManifest().droppedEver.contains("value"),
       "the physical name must join droppedEver")
+  }
+
+  test("a column renamed before the first insert is written under its physical name") {
+    val root = SparkTestSession.tmp("graft-ren5")
+    val b = mk(0, 10, 1)
+    val c = Collection.create(spark, root, b.schema, "ts",
+      DatePartitioning("ts", "D"), statsColumns = Seq("value"))
+    c.renameVariable("value", "score")
+    // the initial load (nothing to collide with) takes the same writer
+    c.insert(b.withColumnRenamed("value", "score"), MergeStrategy.Concat)
+    assert(c.query().agg(sum(col("score"))).as[Double].collect()(0) == (0L until 10L).sum)
+    c.currentManifest().files.foreach { f =>
+      val cols = spark.read.parquet(s"$root/$f").columns
+      assert(cols.contains("value") && !cols.contains("score"), s"$f: ${cols.mkString(",")}")
+    }
+    assert(c.columnBounds("score").contains((0.0, 9.0)))
   }
 
   test("a concurrent rename conflicts a stale handle's commit") {
