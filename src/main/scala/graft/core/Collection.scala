@@ -195,23 +195,6 @@ final class Collection private (
   }
   private val schemaCache = scala.collection.concurrent.TrieMap.empty[Long, StructType]
 
-  private def commitManifest(m: Manifest): Unit = {
-    // A manifest descended from a legacy inline-`files` root may carry
-    // shard entries whose lists exist only in this handle's memory —
-    // materialize them BEFORE the root rename so any fresh handle can
-    // resolve every referenced shard (one-time cost on the first commit
-    // over a migrated tree; content-addressed, so repeats are no-ops).
-    if (m.inline.nonEmpty)
-      m.shards.foreach { e =>
-        m.inline.get(e.file).foreach(writeShardIfAbsent(fs, manifestDir, e.file, _))
-      }
-    val ts = System.currentTimeMillis()
-    writeManifest(fs, manifestDir, m, ts)
-    // cache what a re-read would parse — including the publish stamp
-    manifestCache.put(m.generation, m.withCommitStamp(ts))
-    if (m.generation > knownMaxGen) knownMaxGen = m.generation
-  }
-
   // --- insert ------------------------------------------------------
 
   /** Insert `df`, splitting it by the partitioning. Default (`Replace`)
@@ -233,8 +216,8 @@ final class Collection private (
     requireWritable()
     val assigned = partitioning.assign(conformTypes(df))
     val man0 = currentManifest()
-    writeAndCommit(assigned, replaced = man0.partitionPaths.toSet,
-      base = man0, op = "overwrite")
+    writeAndCommit(assigned, Commit("overwrite", man0,
+      removedPartitions = man0.partitionPaths.toSet))
     currentManifest().partitionPaths.sorted
   }
 
@@ -244,7 +227,7 @@ final class Collection private (
     val assigned = partitioning.assign(conformTypes(df))
     // one manifest read serves collision detection, the merge's read of
     // existing rows, AND (for read-modify-write merges) the commit base —
-    // see writeAndCommit's `base` contract
+    // see Commit's `base` contract
     val man0 = currentManifest()
     val existing = man0.partitionPaths.toSet
 
@@ -252,12 +235,8 @@ final class Collection private (
       // Initial-load fast path: nothing can collide, so skip the
       // distinct-keys pass entirely — the write reports exactly the
       // files its tasks created (crash orphans are never adopted).
-      // CHECK constraints still guard (they can predate the first row).
-      val checked =
-        if (man0.constraints.isEmpty) assigned
-        else constraintGuard(assigned, man0.constraints)
-      val newFiles = physicalWrite(prepareForWrite(checked), man0)
-      commitDelta(man0, newFiles, Set.empty, writeTasks, streamMark, op = "insert")
+      val newFiles = writeAndCommit(assigned,
+        Commit("insert", man0, streamMark = streamMark))
       return newFiles.map(parentRel).distinct.sorted
     }
 
@@ -313,10 +292,9 @@ final class Collection private (
     // read-modify-write merges pin their snapshot as the commit base so a
     // commit racing into the same partitions conflicts instead of being
     // erased; blind writes (Replace/Concat) keep the late base read
-    writeAndCommit(toWrite, replaced = replacedPaths.toSet,
-      streamMark = streamMark, base = if (mergeRead) man0 else null,
-      op = "insert")
-    if (catalogEnabled) () // the manifest IS the catalog; kept for API parity
+    writeAndCommit(toWrite, Commit("insert",
+      if (mergeRead) man0 else currentManifest(),
+      removedPartitions = replacedPaths.toSet, streamMark = streamMark))
     maybeAutoCompact(incomingPaths)
     incomingPaths.sorted
   }
@@ -343,8 +321,8 @@ final class Collection private (
     // rewrite). Pinned, that race hits rebaseGuard's overlap check.
     val out = readManifestFiles(man, man.filesForPartitions(paths))
       .select(schema.fieldNames.toSeq.map(col): _*)
-    try writeAndCommit(partitioning.assign(out), replaced = paths, base = man,
-      rewrite = true, op = "auto-compact")
+    try writeAndCommit(partitioning.assign(out), Commit("auto-compact", man,
+      removedPartitions = paths, rewrite = true))
     catch { case _: java.util.ConcurrentModificationException =>
       // auto-compaction is opportunistic: losing the race leaves the
       // partition fragmented-but-correct; the next insert retries
@@ -374,15 +352,6 @@ final class Collection private (
     requireWritable()
     if (currentManifest().streams.get(queryName).exists(_ >= batchId)) return Nil
     insertInternal(df, merge, Some(queryName -> batchId))
-  }
-
-  /** TESTING ONLY (crash injection): run the physical file write of an
-    * insert but die before the manifest commit — models a writer crash.
-    * Readers must keep seeing the previous snapshot; [[vacuum]] reclaims
-    * the orphans. */
-  private[graft] def insertUncommitted(df: DataFrame): Unit = {
-    requireWritable()
-    physicalWrite(prepareForWrite(partitioning.assign(conformTypes(df))), currentManifest())
   }
 
   /** `df` with each declared column it carries at its declared type, as
@@ -475,94 +444,113 @@ final class Collection private (
       dropUncommittedFiles(GraftNativeCommit.files(committed)))).sorted
   }
 
-  /** The commit protocol: write the data files (the task commits report
-    * the exact new-file set), commit `prev - replaced + new` as
-    * the next generation, then GC the replaced files (readers on the old
-    * snapshot may still be streaming them — deletion is best-effort and
-    * deferred-safe, like Icechunk's expiration). */
-  private def writeAndCommit(
-      df: DataFrame,
-      replaced: Set[String],
-      streamMark: Option[(String, Long)] = None,
-      base: Manifest = null,
-      rewrite: Boolean = false,
-      cluster: Seq[Column] = null,
-      replacedFiles: Set[String] = Set.empty,
-      newPartSpec: Option[String] = None,
-      op: String = "write",
-      dvUpdates: Map[String, DvRef] = Map.empty,
-  ): Unit = {
-    // Read-modify-write callers PIN the manifest their read resolved
-    // against and pass it as `base`: a concurrent commit to the same
-    // partitions then forces the rebaseGuard conflict path instead of
-    // being silently erased (its files dropped via `replaced` while its
-    // rows are absent from a rewrite computed off the older snapshot).
-    val man = if (base != null) base else currentManifest()
-    // CHECK constraints ride the write job itself; content-preserving
-    // rewrites (compact / z-order / repartition) skip the guard — their
-    // rows already live in a validated snapshot
+  /** The write half of a data commit: CHECK-guard `df` against the
+    * commit base's constraints (content-preserving rewrites skip the
+    * guard — their rows already live in a validated snapshot), write it
+    * (the task commits report the exact new-file set, so crash orphans
+    * and a concurrent writer's files in the same partitions are
+    * structurally excluded), then [[publish]] `c` with those files.
+    * Returns the files published. */
+  private def writeAndCommit(df: DataFrame, c: Commit,
+                             cluster: Seq[Column] = null): Seq[String] = {
     val checked =
-      if (rewrite || man.constraints.isEmpty) df
-      else constraintGuard(df, man.constraints)
-    // the write returns its exact file set: crash orphans and
-    // concurrent writers' files in the same partitions are structurally
-    // excluded from this commit (no directory-diff discovery)
-    val newFiles = physicalWrite(prepareForWrite(checked, cluster), man)
-    commitWrittenFiles(man, newFiles, replaced, streamMark, rewrite,
-      replacedFiles, newPartSpec, op, dvUpdates)
+      if (c.rewrite || c.base.constraints.isEmpty) df
+      else constraintGuard(df, c.base.constraints)
+    val files = physicalWrite(prepareForWrite(checked, cluster), c.base)
+    publish(c.copy(added = files, taskBump = writeTasks))
+    files
   }
 
-  /** The commit tail of [[writeAndCommit]], shared with the NATIVE DSv2
-    * batch write (whose data files arrive through the DSv2 `BatchWrite`
-    * instead of [[physicalWrite]]): resolve the doomed files, publish
-    * the delta (with the conflict-cleanup contract), GC the replaced
-    * files honoring tag/branch pins. `newFiles` are root-relative. */
-  private[core] def commitWrittenFiles(man: Manifest, newFiles: Seq[String],
-      replaced: Set[String], streamMark: Option[(String, Long)],
-      rewrite: Boolean, replacedFiles: Set[String],
-      newPartSpec: Option[String], op: String,
-      dvUpdates: Map[String, DvRef] = Map.empty): Unit = {
-    // resolve the doomed files from the PREVIOUS snapshot before the
-    // commit swaps the shard table (loads only the replaced partitions'
-    // shards)
-    val doomed =
-      if (retainGenerations == 0) man.filesForPartitions(replaced) ++ replacedFiles
-      else Nil
-    try commitDelta(man, newFiles, replaced, writeTasks, streamMark, rewrite, replacedFiles, newPartSpec, op, dvUpdates)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // a CONFLICT proves the commit did not land (the publish is
-        // exclusive and rebaseGuard refused): the just-written files are
-        // invisible to every reader — remove them rather than leaving
-        // orphans. Any other failure is AMBIGUOUS (an IO error after the
-        // claim could mean the manifest IS durably published referencing
-        // these files) — leave them for vacuum's liveness check.
-        (newFiles ++ dvUpdates.values.map(_.path).toSeq.distinct).foreach(f =>
-          try fs.delete(new Path(s"$root/$f"), false) catch { case _: Exception => () })
-        throw e
-    }
-    // GC the files this commit replaced — unless a retention window keeps
-    // past snapshots readable (then vacuum() expires them later).
-    // EXTERNAL references (shallow clones) are dropped, never deleted:
-    // the physical file belongs to the clone's source collection. Files
-    // still referenced by a TAGGED snapshot are equally off-limits —
-    // the tag pins them until it's deleted (only the affected
-    // partitions' shards of each tagged generation load here) — as are
-    // files a live in-tree BRANCH head still references (a branch
-    // forked before this rewrite keeps reading its fork-point files;
-    // standalone clones can't be discovered and rely on tags instead).
-    val gcable = doomed.filterNot(isExternal)
-    val pinned: Set[String] =
-      if (gcable.isEmpty) Set.empty
-      else {
-        val affected = (replaced ++ replacedFiles.map(parentRel)).toSet
-        val byTag = tags().values.toSet.flatMap { g: Long =>
-          try manifestAt(g).filesForPartitions(affected) catch { case _: Exception => Nil }
+  /** The ONE writer of this collection's next manifest generation: every
+    * mutation builds a [[Commit]] and lands it here, the Icechunk
+    * session→write→commit story. `publish` alone numbers the generation
+    * (`base.generation + 1`), labels it `c.op`, and:
+    *
+    *  - EDIT commits (`c.edit`: metadata and whole-table rewrites of the
+    *    base) publish `edit(base)` once. A lost race throws and deletes
+    *    nothing — an adopting edit's copies may be exactly the files the
+    *    winner committed ([[fastForwardPromote]]);
+    *  - DELTA commits rebuild only the touched shards of the base and, on
+    *    a lost race, REBASE onto the winner when the two commits touched
+    *    disjoint partitions ([[rebaseGuard]]) — the Icechunk
+    *    session-rebase model, no data IO (data files are on disk and
+    *    named collision-free; the rebased task base advances past both
+    *    writers). A conflict that survives [[MaxCommitRebases]] rebases
+    *    proves the commit did not land (the publish is exclusive), so
+    *    the just-written data and DV files are deleted; any other failure
+    *    is AMBIGUOUS (an IO error after the claim may mean the manifest
+    *    IS published) and leaves them for [[vacuum]]'s liveness check;
+    *  - then GC: with `retainGenerations == 0` the files of the removed
+    *    partitions and the removed files are deleted — except EXTERNAL
+    *    references (a shallow clone's source owns them) and files a
+    *    TAGGED snapshot or a live in-tree BRANCH head still references
+    *    (a branch forked before this commit keeps reading its fork-point
+    *    files; standalone clones can't be discovered and rely on tags).
+    *    Readers on the old snapshot may still be streaming them, so the
+    *    delete is best-effort. A retention window defers all of it to
+    *    [[vacuum]]. */
+  private[core] def publish(c: Commit): Unit = {
+    def land(next: Manifest, base: Manifest): Unit = {
+      val m = next.stamped(base.generation + 1, Some(c.op))
+      // A manifest descended from a legacy inline-`files` root may carry
+      // shard entries whose lists exist only in this handle's memory —
+      // materialize them BEFORE the root rename so any fresh handle can
+      // resolve every referenced shard (one-time cost on the first commit
+      // over a migrated tree; content-addressed, so repeats are no-ops).
+      if (m.inline.nonEmpty)
+        m.shards.foreach { e =>
+          m.inline.get(e.file).foreach(writeShardIfAbsent(fs, manifestDir, e.file, _))
         }
-        byTag ++ branchPinnedRels(Some(affected))
+      val ts = System.currentTimeMillis()
+      writeManifest(fs, manifestDir, m, ts)
+      // cache what a re-read would parse — including the publish stamp
+      manifestCache.put(m.generation, m.stamped(m.generation, m.op, Some(ts)))
+      if (m.generation > knownMaxGen) knownMaxGen = m.generation
+    }
+    c.edit match {
+      case Some(edit) => land(edit(c.base), c.base)
+      case None =>
+        val (stats, rows, bytes) = fileStats(c.added, c.base.renames) // once — rebases reuse it
+        var base = c.base
+        var attempts = 0
+        var landed = false
+        try while (!landed) {
+          try { land(deltaManifest(base, c, stats, rows, bytes), base); landed = true }
+          catch {
+            case e: java.util.ConcurrentModificationException =>
+              attempts += 1
+              if (attempts > MaxCommitRebases) throw e
+              val head = currentManifest() // probes forward past the winner(s)
+              rebaseGuard(base, head, c.added, c.removedPartitions ++
+                (c.removedFiles ++ c.dvEdits.keys).map(parentRel), c.streamMark, e)
+              // a DV computed against `base` names rowids of `base`'s files;
+              // rebasing is sound only if the head carries those files AND
+              // their DV state unchanged (the guard above admits only
+              // non-overlapping partition deltas, which implies it)
+              base = head
+          }
+        } catch {
+          case e: java.util.ConcurrentModificationException =>
+            dropUncommittedFiles((c.added ++ c.dvEdits.values.map(_.path)).distinct)
+            throw e
+        }
+    }
+    // the files this commit replaced, resolved from the base (a rebase
+    // only ever admits disjoint partitions, so the head lists the same)
+    val doomed =
+      if (retainGenerations != 0) Nil
+      else (c.base.filesForPartitions(c.removedPartitions) ++ c.removedFiles)
+        .filterNot(isExternal)
+    if (doomed.nonEmpty) {
+      // only the affected partitions' shards of each pinning head load
+      val affected = c.removedPartitions ++ c.removedFiles.map(parentRel)
+      val byTag = tags().values.toSet.flatMap { g: Long =>
+        try manifestAt(g).filesForPartitions(affected) catch { case _: Exception => Nil }
       }
-    gcable.filterNot(pinned.contains)
-      .foreach(f => try fs.delete(new Path(s"$root/$f"), false) catch { case _: Exception => () })
+      val pinned = byTag ++ branchPinnedRels(Some(affected))
+      doomed.filterNot(pinned.contains)
+        .foreach(f => try fs.delete(new Path(s"$root/$f"), false) catch { case _: Exception => () })
+    }
   }
 
   /** OUR rel paths that live in-tree branch heads still reference
@@ -631,9 +619,9 @@ final class Collection private (
       .select(schema.fieldNames.toSeq.map(col): _*)
     // the NEW handle performs the write: its partition columns drive the
     // physical layout, its spec stamps the manifest
-    next.writeAndCommit(newPartitioning.assign(rows),
-      replaced = man.partitionPaths.toSet, base = man, rewrite = true,
-      newPartSpec = Some(next.partSpecJson), op = "repartition")
+    next.writeAndCommit(newPartitioning.assign(rows), Commit("repartition", man,
+      removedPartitions = man.partitionPaths.toSet, rewrite = true,
+      partSpec = Some(next.partSpecJson)))
     // repair the root config LAST (cosmetic once the manifest is
     // stamped; open() trusts the manifest over the config)
     try {
@@ -647,46 +635,6 @@ final class Collection private (
       writeJson(fs, cfg, doc)
     } catch { case _: Exception => () }
     next
-  }
-
-  /** Commit the delta with optimistic RETRY: when another writer claims
-    * our target generation first, re-read the new head, verify the two
-    * commits touched DISJOINT partitions (and neither evolved the schema
-    * nor raced the same stream batch), and re-derive the delta on top of
-    * the winner — the Icechunk session-rebase model. Data files are
-    * already on disk and named collision-free (row-id ranges of both
-    * writers start from the same task base but land in disjoint
-    * partitions; the rebased task base advances past BOTH), so a rebase
-    * rebuilds only the touched shards and the root JSON — no data IO.
-    * A genuine overlap propagates the conflict to the caller. */
-  private[core] def commitDelta(prev: Manifest, newFiles: Seq[String],
-                                dropped: Set[String], taskBump: Long,
-                                streamMark: Option[(String, Long)] = None,
-                                rewrite: Boolean = false,
-                                droppedFiles: Set[String] = Set.empty,
-                                newPartSpec: Option[String] = None,
-                                op: String = "write",
-                                dvUpdates: Map[String, DvRef] = Map.empty): Unit = {
-    var base = prev
-    var attempts = 0
-    val (newStats, newRows, newBytes) = fileStats(newFiles, prev.renames) // once — retries reuse it
-    while (true) {
-      try { commitDeltaOnce(base, newFiles, newStats, newRows, newBytes, dropped, taskBump, streamMark, rewrite, droppedFiles, newPartSpec, op, dvUpdates); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts > MaxCommitRebases) throw e
-          val head = currentManifest() // probes forward past the winner(s)
-          rebaseGuard(base, head, newFiles,
-            dropped ++ droppedFiles.map(parentRel) ++ dvUpdates.keys.map(parentRel),
-            streamMark, e)
-          // a DV computed against `base` names rowids of `base`'s files;
-          // rebasing is sound only if the head carries those files AND
-          // their DV state unchanged (the guard above admits only
-          // non-overlapping partition deltas, which implies it)
-          base = head
-      }
-    }
   }
 
   /** Refuse a rebase that would change semantics: overlapping partition
@@ -737,33 +685,26 @@ final class Collection private (
       conflict(s"both writers touched partition(s) ${overlap.toSeq.sorted.take(3).mkString(", ")}")
   }
 
-  /** Build + commit the next generation at SHARD granularity: subtrees
-    * that gained no files and dropped no partitions carry their entry
-    * over BY NAME — zero IO; only affected subtrees load and rewrite.
+  /** [[publish]]'s next manifest for delta commit `c` over `prev`, built
+    * at SHARD granularity: subtrees that gained no files and dropped no
+    * partitions carry their entry over BY NAME — zero IO; only affected
+    * subtrees load and rewrite.
     * A commit touching one partition of a 10^7-file collection writes
     * one shard + the root, regardless of collection size. */
-  private def commitDeltaOnce(prev: Manifest, newFiles: Seq[String],
-                              newStats: Map[String, Map[String, ColStat]],
-                              newRows: Map[String, Long],
-                              newBytes: Map[String, Long],
-                              dropped: Set[String], taskBump: Long,
-                              streamMark: Option[(String, Long)] = None,
-                              rewrite: Boolean = false,
-                              droppedFiles: Set[String] = Set.empty,
-                              newPartSpec: Option[String] = None,
-                              op: String = "write",
-                              dvUpdates: Map[String, DvRef] = Map.empty): Unit = {
-    val newByPrefix = newFiles.groupBy(f => prefixOf(parentRel(f)))
-    val affected = newByPrefix.keySet ++ dropped.map(prefixOf) ++
-      droppedFiles.map(f => prefixOf(parentRel(f))) ++
-      dvUpdates.keySet.map(f => prefixOf(parentRel(f)))
+  private def deltaManifest(prev: Manifest, c: Commit,
+                            newStats: Map[String, Map[String, ColStat]],
+                            newRows: Map[String, Long],
+                            newBytes: Map[String, Long]): Manifest = {
+    val newByPrefix = c.added.groupBy(f => prefixOf(parentRel(f)))
+    val affected = newByPrefix.keySet ++ c.removedPartitions.map(prefixOf) ++
+      (c.removedFiles ++ c.dvEdits.keySet).map(f => prefixOf(parentRel(f)))
     val kept = prev.shards.filterNot(e => affected(e.prefix))
     val prevByPrefix = prev.shards.map(e => e.prefix -> e).toMap
     val rebuilt = affected.toSeq.sorted.flatMap { pfx =>
       val oldData = prevByPrefix.get(pfx).map(prev.shardData)
         .getOrElse(ShardData(Nil))
       val files = (oldData.files
-        .filterNot(f => dropped.contains(parentRel(f)) || droppedFiles.contains(f)) ++
+        .filterNot(f => c.removedPartitions(parentRel(f)) || c.removedFiles(f)) ++
         newByPrefix.getOrElse(pfx, Nil)).sorted
       if (files.isEmpty) None
       else {
@@ -787,7 +728,7 @@ final class Collection private (
         // updates override (pre-merged rowid unions), refs of dropped /
         // rewritten files fall away with the file — compaction
         // materializes a DV simply by replacing its file
-        val dvs = (oldData.dvs ++ dvUpdates).filter { case (f, _) => fileSet(f) }
+        val dvs = (oldData.dvs ++ c.dvEdits).filter { case (f, _) => fileSet(f) }
         val name = shardName(files, stats, rows, gens, bytes, dvs)
         writeShardIfAbsent(fs, manifestDir, name, files, stats, rows, gens, bytes, dvs)
         Some(ShardEntry(pfx,
@@ -801,12 +742,11 @@ final class Collection private (
           dvCount = dvs.values.map(_.count).sum))
       }
     }
-    commitManifest(prev.withShards(
-      prev.generation + 1, prev.taskBase + taskBump,
+    prev.withShards(prev.taskBase + c.taskBump,
       (kept ++ rebuilt).sortBy(_.prefix),
-      streamMark.fold(prev.streams)(prev.streams + _),
-      newRewrites = if (rewrite) dropped else Set.empty,
-      newPartSpec = newPartSpec, newOp = Some(op)))
+      c.streamMark.fold(prev.streams)(prev.streams + _),
+      newRewrites = if (c.rewrite) c.removedPartitions else Set.empty,
+      newPartSpec = c.partSpec)
   }
 
   /** Reclaim unreachable data files: crash leftovers of writers that
@@ -1068,11 +1008,10 @@ final class Collection private (
     val since =
       if (man.droppedEver.contains(name)) man.columnSince
       else man.columnSince + (name -> (man.generation + 1))
-    commitManifest(man.withMeta(
-      generation = man.generation + 1,
+    publish(Commit("add-column", man, edit = Some(_.withMeta(
       schemaDdl = StructType(s.fields :+ StructField(name, dataType)).toDDL,
       fills = man.fills ++ fill.map(name -> _),
-      columnSince = since, op = Some("add-column")))
+      columnSince = since))))
   }
 
   /** CHECK constraint (Delta `ALTER TABLE ADD CONSTRAINT` shape): a
@@ -1090,8 +1029,8 @@ final class Collection private (
     val bad = query().where(coalesce(expr(sql).cast("boolean"), lit(true)) === false).count()
     if (bad > 0) throw new IllegalStateException(
       s"cannot add CHECK constraint '$name' ($sql): $bad existing row(s) violate it")
-    commitManifest(man.withMeta(generation = man.generation + 1,
-      constraints = man.constraints + (name -> sql), op = Some("add-constraint")))
+    publish(Commit("add-constraint", man,
+      edit = Some(_.withMeta(constraints = man.constraints + (name -> sql)))))
   }
 
   /** Remove a CHECK constraint (metadata-only commit). */
@@ -1099,8 +1038,8 @@ final class Collection private (
     requireWritable()
     val man = currentManifest()
     require(man.constraints.contains(name), s"no constraint '$name'")
-    commitManifest(man.withMeta(generation = man.generation + 1,
-      constraints = man.constraints - name, op = Some("drop-constraint")))
+    publish(Commit("drop-constraint", man,
+      edit = Some(_.withMeta(constraints = man.constraints - name))))
   }
 
   /** Declared CHECK constraints of the current snapshot. */
@@ -1128,8 +1067,7 @@ final class Collection private (
     require(s.fieldNames.contains(name), s"no variable '$name'")
     require(name != axis, "cannot drop the partition axis")
     require(!partitioning.inputCols.contains(name), "cannot drop a partitioning input")
-    commitManifest(man.withMeta(
-      generation = man.generation + 1,
+    publish(Commit("drop-column", man, edit = Some(_.withMeta(
       schemaDdl = StructType(s.fields.filterNot(_.name == name)).toDDL,
       fills = man.fills - name,
       columnSince = man.columnSince - name,
@@ -1137,8 +1075,7 @@ final class Collection private (
       // keep those bytes, so the schema-generation proof must stay off
       // for any future same-named column (the droppedEver contract)
       droppedEver = man.droppedEver + name + man.physName(name),
-      op = Some("drop-column"),
-      renames = man.renames - name))
+      renames = man.renames - name))))
   }
 
   /** RENAME a data variable (r11, the last schema-evolution verb):
@@ -1181,17 +1118,15 @@ final class Collection private (
         s"CHECK constraint '$n' ($sql) references '$oldName' — " +
         "drop the constraint, rename, then re-add it under the new name")
     }
-    commitManifest(man.withMeta(
-      generation = man.generation + 1,
+    publish(Commit("rename-column", man, edit = Some(_.withMeta(
       schemaDdl = StructType(s.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f)).toDDL,
       fills = (man.fills - oldName) ++ man.fills.get(oldName).map(newName -> _),
       columnSince = (man.columnSince - oldName) ++
         man.columnSince.get(oldName).map(newName -> _),
-      op = Some("rename-column"),
       // rename-back to the physical name leaves no entry (identity)
       renames = (man.renames - oldName) ++
-        (if (phys == newName) Map.empty[String, String] else Map(newName -> phys))))
+        (if (phys == newName) Map.empty[String, String] else Map(newName -> phys))))))
   }
 
   // --- read --------------------------------------------------------
@@ -1550,8 +1485,8 @@ final class Collection private (
         ShardEntry(e.prefix, e.partitions, name, e.rollup, e.rowTotal, e.byteTotal, e.dvCount)
       }
     }
-    commitManifest(man.withShards(man.generation + 1, man.taskBase, entries,
-      newRewrites = rewritten.toSet, newOp = Some("materialize")))
+    publish(Commit("materialize", man,
+      edit = Some(_.withShards(man.taskBase, entries, newRewrites = rewritten.toSet))))
     ext.sorted
   }
 
@@ -1699,19 +1634,17 @@ final class Collection private (
       }
     }
     if (touched.isEmpty) return Some(Nil) // state-identical branch head
-    // ---- publish. A lost race LEAVES the copies in place for [[vacuum]]
-    // (the documented materialize crash contract) — it must NOT delete
-    // them (r16 advice, medium): adopted destinations are deterministic
-    // (the branch's own rel names), so when two drivers promote the SAME
-    // branch concurrently the loser's "invisible" copies are the exact
-    // files the winner's committed manifest now references — deleting
-    // them would be silent data loss. (The diff path stays self-cleaning
-    // because it writes fresh writer-unique UUID files.)
-    commitManifest(man.withShards(newGen,
-      math.max(man.taskBase, bm.taskBase),
-      entries.sortBy(_.prefix),
-      newRewrites = rewrites.toSet,
-      newOp = Some("promote")))
+    // ---- publish as an EDIT commit: a lost race LEAVES the copies in
+    // place for [[vacuum]] (the documented materialize crash contract) —
+    // it must NOT delete them (r16 advice, medium): adopted destinations
+    // are deterministic (the branch's own rel names), so when two drivers
+    // promote the SAME branch concurrently the loser's "invisible" copies
+    // are the exact files the winner's committed manifest now references
+    // — deleting them would be silent data loss. (The diff path stays
+    // self-cleaning because it writes fresh writer-unique UUID files.)
+    publish(Commit("promote", man, edit = Some(_.withShards(
+      math.max(man.taskBase, bm.taskBase), entries.sortBy(_.prefix),
+      newRewrites = rewrites.toSet))))
     Some(touched.toSeq.sorted)
   }
 
@@ -1987,7 +1920,7 @@ final class Collection private (
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val touchedA = distinctKeys(assigned).map(keyPath)
-        writeAndCommit(assigned, replaced = Set.empty, base = man, op = op)
+        writeAndCommit(assigned, Commit(op, man))
         return touchedA.sorted
       } finally {
         assigned.unpersist(blocking = false)
@@ -2041,8 +1974,7 @@ final class Collection private (
     val existingRows = readManifestFiles(man, man.filesForPartitions(replaced))
       .select(cols.map(col): _*)
     val out = existingRows.exceptAll(deletes).unionAll(inserts)
-    try writeAndCommit(partitioning.assign(out), replaced = replaced, base = man,
-      op = op)
+    try writeAndCommit(partitioning.assign(out), Commit(op, man, removedPartitions = replaced))
     finally cachedConflicts.foreach(_.unpersist(blocking = false))
     touched.sorted
   }
@@ -2073,26 +2005,25 @@ final class Collection private (
     }
     require(sameLayout,
       "cannot restore across a partition-layout change — repartition back first")
-    commitManifest(new Manifest(
-      head.generation + 1,
-      head.taskBase, // ids only ever grow
+    publish(Commit("restore", head, edit = Some(h => new Manifest(
+      h.generation,
+      h.taskBase, // ids only ever grow
       old.schemaDdl, old.fills, old.shards,
       // a legacy inline-format snapshot's synthetic shard lists may exist
-      // only in the old handle's memory: carry them (commitManifest
-      // materializes them to disk before the root publishes) and resolve
+      // only in the old handle's memory: carry them (publish
+      // materializes them to disk before the root lands) and resolve
       // reads through them until then — without this, a restored head
       // could reference shard JSONs no handle can load
       rel => old.inline.get(rel).map(ShardData(_))
         .getOrElse(readShard(fs, manifestDir, rel)),
-      head.streams, // exactly-once stream marks never roll back
+      h.streams, // exactly-once stream marks never roll back
       columnSince = old.columnSince,
       // droppedEver is MONOTONE: a name dropped after `gen` stays
       // poisoned for the all-null proof even once restored
-      droppedEver = head.droppedEver ++ old.droppedEver,
-      partSpec = head.partSpec,
+      droppedEver = h.droppedEver ++ old.droppedEver,
+      partSpec = h.partSpec,
       constraints = old.constraints,
-      op = Some("restore"),
-      inline = old.inline))
+      inline = old.inline))))
   }
 
   /** CHANGE FEED (CDC): the exact row-level difference between two
@@ -2634,7 +2565,7 @@ final class Collection private (
           dvCount = d.dvs.values.map(_.count).sum)
       }
     }
-    commitManifest(man.withShards(man.generation + 1, man.taskBase, entries))
+    publish(Commit("backfill-stats", man, edit = Some(_.withShards(man.taskBase, entries))))
     missing.size
   }
 
@@ -2863,7 +2794,7 @@ final class Collection private (
   }
 
   /** Publish a native batch write's task-committed files as one atomic
-    * manifest commit — [[writeAndCommit]]'s tail with the data files
+    * manifest commit — [[writeAndCommit]]'s [[publish]] with the data files
     * already on disk (the [[GraftWriterFactory]] tasks reported the
     * exact set; crash/abort leftovers are unreferenced and
     * vacuum-reclaimed, the same contract as [[physicalWrite]]). Modes:
@@ -2891,36 +2822,24 @@ final class Collection private (
     requireWritable()
     val base =
       if (generation == pinnedGen) currentManifest() else manifestAt(pinnedGen)
-    mode match {
-      case "truncate" =>
-        commitWrittenFiles(base, newFiles, replaced = base.partitionPaths.toSet,
-          streamMark = streamMark, rewrite = false, replacedFiles = Set.empty,
-          newPartSpec = None, op = "overwrite")
-      case "dynamic" =>
-        // `replaced` lists the incoming dirs; pre-existing files there
-        // are dropped (and GC'd), non-existent ones are a no-op — the
-        // incoming files themselves are in `newFiles`, never doomed
-        commitWrittenFiles(base, newFiles,
-          replaced = newFiles.map(parentRel).toSet,
-          streamMark = streamMark, rewrite = false, replacedFiles = Set.empty,
-          newPartSpec = None, op = "overwrite-dynamic")
-      case "replace-where" =>
-        // ANSI overwrite-by-expression: delete the rows matching the
-        // predicate, insert the new rows, atomically. Sound here ONLY
-        // because every partition key STRICTLY decides the predicate
-        // (re-proven against the commit base — a racing commit that
-        // added an undecidable partition fails loudly, never partially)
-        commitWrittenFiles(base, newFiles,
-          replaced = replaceWherePartitions(base, replaceAst).toSet,
-          streamMark = streamMark, rewrite = false, replacedFiles = Set.empty,
-          newPartSpec = None, op = "replace-where")
-      case "append" =>
-        commitWrittenFiles(base, newFiles, replaced = Set.empty,
-          streamMark = streamMark, rewrite = false, replacedFiles = Set.empty,
-          newPartSpec = None, op = "insert")
-        maybeAutoCompact(newFiles.map(parentRel).distinct)
+    val (removed, op) = mode match {
+      case "truncate"      => (base.partitionPaths.toSet, "overwrite")
+      // the incoming dirs: pre-existing files there are dropped (and
+      // GC'd), non-existent ones are a no-op — the incoming files
+      // themselves are in `newFiles`, never doomed
+      case "dynamic"       => (newFiles.map(parentRel).toSet, "overwrite-dynamic")
+      // ANSI overwrite-by-expression: delete the rows matching the
+      // predicate, insert the new rows, atomically. Sound here ONLY
+      // because every partition key STRICTLY decides the predicate
+      // (re-proven against the commit base — a racing commit that
+      // added an undecidable partition fails loudly, never partially)
+      case "replace-where" => (replaceWherePartitions(base, replaceAst).toSet, "replace-where")
+      case "append"        => (Set.empty[String], "insert")
       case other => throw new IllegalArgumentException(s"unknown write mode '$other'")
     }
+    publish(Commit(op, base, added = newFiles, removedPartitions = removed,
+      streamMark = streamMark, taskBump = writeTasks))
+    if (mode == "append") maybeAutoCompact(newFiles.map(parentRel).distinct)
   }
 
   /** Partitions whose every row the REPLACE WHERE predicate selects —
@@ -3416,28 +3335,23 @@ final class Collection private (
         if (m.isNullAt(0)) 0L else (m.getLong(0) >> 33) + 1
       }
     val entries = shardify(fs, manifestDir, walked)
-    val man =
-      if (haveManifest) {
-        val prev = currentManifest()
-        prev.withShards(
-          prev.generation + 1,
-          math.max(prev.taskBase, observedBase),
-          entries)
-      } else new Manifest(
-        generation = 1L,
-        taskBase = observedBase,
-        schemaDdl = baseSchema.toDDL,
-        fills = Map.empty,
-        shards = entries,
-        loader = rel => readShard(fs, manifestDir, rel))
-    commitManifest(man)
+    // no manifest: bootstrap over the empty generation 0 `create` writes
+    val base =
+      if (haveManifest) currentManifest()
+      else new Manifest(0L, 0L, baseSchema.toDDL, Map.empty, Nil,
+        rel => readShard(fs, manifestDir, rel))
+    publish(Commit("repair", base, edit = Some(_.withShards(
+      math.max(base.taskBase, observedBase), entries))))
     walked.map(parentRel).distinct.sorted
   }
 
   // --- drop --------------------------------------------------------
 
   /** Drop matching partitions: the manifest commit makes them invisible
-    * atomically; the physical delete follows (reference base.py:599-634). */
+    * atomically (reference base.py:599-634); their files are GC'd like
+    * any commit's replaced files — honouring the retention window, tags
+    * and live branches — and a partition directory left empty is
+    * removed. */
   def dropPartitions(filters: String = null): Seq[String] = {
     requireWritable()
     // PIN one snapshot for both the selection and the commit base: a
@@ -3456,8 +3370,8 @@ final class Collection private (
     * the "expire data older than X" shape when the partitioning derives
     * no key the cutoff could filter on (e.g. Sequence-partitioned
     * telemetry with a time axis). Conservative: a partition with any
-    * stat-less or undecodable file is KEPT. Same atomic commit +
-    * physical delete semantics as [[dropPartitions]]. */
+    * stat-less or undecodable file is KEPT. Same atomic commit and GC
+    * as [[dropPartitions]]. */
   def expirePartitions(olderThan: Any): Seq[String] = {
     requireWritable()
     val dom = axisDomain.getOrElse(throw new IllegalArgumentException(
@@ -3490,20 +3404,18 @@ final class Collection private (
 
   private def dropPartitionPaths(doomed: Seq[String], man: Manifest): Seq[String] = {
     if (doomed.isEmpty) return doomed
-    val doomedSet = doomed.toSet
-    commitDelta(man, Nil, doomedSet, taskBump = 0L, op = "drop-partitions")
-    // under a retention window, dropped partitions stay on disk (and
-    // time-travelable) until vacuum() expires them
+    publish(Commit("drop-partitions", man, removedPartitions = doomed.toSet))
+    // prune the directories the GC emptied, up to the root; pinned files
+    // and unlisted ones (crash orphans, left to vacuum's grace-gated
+    // sweep) keep theirs. Under a retention window nothing was deleted.
+    val rootPath = new Path(root)
     if (retainGenerations == 0) doomed.foreach { rel =>
-      fs.delete(new Path(s"$root/$rel"), true)
-      // prune now-empty parent directories up to the root
-      var parent = new Path(s"$root/$rel").getParent
-      val rootPath = new Path(root)
-      while (parent != null && parent != rootPath && fs.exists(parent) &&
-             fs.listStatus(parent).isEmpty) {
-        fs.delete(parent, false)
-        parent = parent.getParent
-      }
+      var dir = new Path(s"$root/$rel")
+      try while (dir != null && dir != rootPath && fs.exists(dir) &&
+                 fs.listStatus(dir).isEmpty) {
+        fs.delete(dir, false)
+        dir = dir.getParent
+      } catch { case _: Exception => () } // cosmetic: the commit has landed
     }
     doomed
   }
@@ -3596,8 +3508,8 @@ final class Collection private (
         rest.join(updated, keyCols)
           .select(schema.fieldNames.toSeq.map(col): _*)
       }
-    writeAndCommit(partitioning.assign(out), replaced = touched.toSet, base = man,
-      rewrite = rewrite, op = if (rewrite) "compact" else "update")
+    writeAndCommit(partitioning.assign(out), Commit(if (rewrite) "compact" else "update",
+      man, removedPartitions = touched.toSet, rewrite = rewrite))
     touched
   }
 
@@ -3679,18 +3591,17 @@ final class Collection private (
           val keep = augment(readManifestFiles(man, heavy))
             .where(!(cond <=> lit(true)))
             .select(schema.fieldNames.toSeq.map(col): _*)
-          writeAndCommit(partitioning.assign(keep), replaced = Set.empty,
-            base = man, replacedFiles = heavy.toSet, op = "delete",
-            dvUpdates = dvRefs)
-        } else commitDvOnly(man, dvRefs, op = "delete")
+          writeAndCommit(partitioning.assign(keep), Commit("delete", man,
+            removedFiles = heavy.toSet, dvEdits = dvRefs))
+        } else publish(Commit("delete", man, dvEdits = dvRefs))
         return (light.map(_._1) ++ heavy).sorted
       case None => () // over the collect budget: full rewrite below
     }
     val keep = augment(readManifestFiles(man, affected))
       .where(!(cond <=> lit(true)))
       .select(schema.fieldNames.toSeq.map(col): _*)
-    writeAndCommit(partitioning.assign(keep), replaced = Set.empty,
-      base = man, replacedFiles = affected.toSet, op = "delete")
+    writeAndCommit(partitioning.assign(keep),
+      Commit("delete", man, removedFiles = affected.toSet))
     affected
   }
 
@@ -3850,19 +3761,6 @@ final class Collection private (
     (light.result(), heavy.result())
   }
 
-  /** Commit a pure DV delta (no data files touched). A conflict that
-    * exhausts the rebase loop deletes the just-written (unreferenced)
-    * DV file, mirroring [[commitWrittenFiles]]'s cleanup contract. */
-  private def commitDvOnly(man: Manifest, dvRefs: Map[String, DvRef],
-                           op: String): Unit =
-    try commitDelta(man, Nil, Set.empty, 0L, op = op, dvUpdates = dvRefs)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        dvRefs.values.map(_.path).toSeq.distinct.foreach(f =>
-          try fs.delete(new Path(s"$root/$f"), false) catch { case _: Exception => () })
-        throw e
-    }
-
   /** Row-level UPDATE (SQL `UPDATE ... SET ... WHERE` semantics): rows
     * where the predicate is TRUE get `assignments` applied (column →
     * SQL expression over the row's columns); FALSE and NULL rows — and
@@ -3941,14 +3839,13 @@ final class Collection private (
           else Some(rewriteAll(augment(readManifestFiles(man, heavy))))
         ).flatten
         writeAndCommit(partitioning.assign(legs.reduce(_ union _)),
-          replaced = Set.empty, base = man, replacedFiles = heavy.toSet,
-          op = "update", dvUpdates = dvRefs)
+          Commit("update", man, removedFiles = heavy.toSet, dvEdits = dvRefs))
         return (light.map(_._1) ++ heavy).sorted
       case None => () // over the collect budget: full rewrite below
     }
     val out = rewriteAll(augment(readManifestFiles(man, affected)))
-    writeAndCommit(partitioning.assign(out), replaced = Set.empty,
-      base = man, replacedFiles = affected.toSet, op = "update")
+    writeAndCommit(partitioning.assign(out),
+      Commit("update", man, removedFiles = affected.toSet))
     affected
   }
 
@@ -4111,9 +4008,8 @@ final class Collection private (
       }
       else classicMergeOut(man, src, on, whenMatched, insertUnmatched,
         bySource, affected, insertGate, insertProjection)
-    writeAndCommit(partitioning.assign(out), replaced = Set.empty,
-      base = man, replacedFiles = affected.toSet, op = "merge",
-      streamMark = streamMark)
+    writeAndCommit(partitioning.assign(out), Commit("merge", man,
+      removedFiles = affected.toSet, streamMark = streamMark))
     affected
   }
 
@@ -4313,15 +4209,14 @@ final class Collection private (
     if (legs.isEmpty && dvRefs.isEmpty && streamMark.isEmpty)
       return Some(Nil) // nothing changed: no commit
     if (legs.isEmpty && streamMark.isEmpty) {
-      commitDvOnly(man, dvRefs, op = "merge")
+      publish(Commit("merge", man, dvEdits = dvRefs))
       return Some(light.map(_._1).sorted)
     }
     val out = legs.reduceOption(_ union _).getOrElse(
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(schema.fields)))
-    writeAndCommit(partitioning.assign(out), replaced = Set.empty,
-      base = man, replacedFiles = heavy.toSet, op = "merge",
-      streamMark = streamMark, dvUpdates = dvRefs)
+    writeAndCommit(partitioning.assign(out), Commit("merge", man,
+      removedFiles = heavy.toSet, streamMark = streamMark, dvEdits = dvRefs))
     Some((light.map(_._1) ++ heavy).sorted)
   }
 
@@ -4481,8 +4376,8 @@ final class Collection private (
       }
     val out = readManifestFiles(man, man.filesForPartitions(targets.toSet))
       .select(schema.fieldNames.toSeq.map(col): _*)
-    writeAndCommit(partitioning.assign(out), replaced = targets.toSet,
-      base = man, rewrite = true, cluster = cluster, op = "compact")
+    writeAndCommit(partitioning.assign(out), Commit("compact", man,
+      removedPartitions = targets.toSet, rewrite = true), cluster)
     targets
   }
 
@@ -4773,6 +4668,37 @@ object Collection extends CollectionManifestLayer {
     * caller (each retry re-reads the head and re-verifies disjointness —
     * under heavy same-partition contention giving up is correct). */
   val MaxCommitRebases: Int = 5
+
+  /** One mutation's next manifest generation, as [[Collection.publish]]
+    * lands it. `base` is the snapshot the commit derives from:
+    * read-modify-write callers PIN the manifest their read resolved
+    * against, so a concurrent commit to the same partitions forces the
+    * rebase-guard conflict instead of being silently erased (its files
+    * dropped via `removedPartitions` while its rows are absent from a
+    * rewrite computed off the older snapshot); blind writes pass the
+    * head they read last.
+    *
+    * A DELTA commit (no `edit`) says what changed: `added` root-relative
+    * files this commit wrote, whole `removedPartitions`, single
+    * `removedFiles`, deletion-vector edits (`dvEdits`, pre-merged per
+    * file), a streaming `(query, batch)` high-water mark committed
+    * atomically with the files, `rewrite` (content-preserving: the
+    * removed partitions are marked for tailing streams to skip), the
+    * row-id `taskBump` and a new partition layout stamp (`partSpec`).
+    * An EDIT commit instead maps the base to the next manifest whole
+    * (metadata and whole-table edits); it is never rebased. */
+  private[core] final case class Commit(
+      op: String,
+      base: Manifest,
+      added: Seq[String] = Nil,
+      removedPartitions: Set[String] = Set.empty,
+      removedFiles: Set[String] = Set.empty,
+      dvEdits: Map[String, DvRef] = Map.empty,
+      streamMark: Option[(String, Long)] = None,
+      rewrite: Boolean = false,
+      taskBump: Long = 0L,
+      partSpec: Option[String] = None,
+      edit: Option[Manifest => Manifest] = None)
 
 
   /** Create a new collection rooted at `root` (reference base.py:161-234). */

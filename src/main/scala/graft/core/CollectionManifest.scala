@@ -593,7 +593,7 @@ private[graft] trait CollectionManifestLayer extends Serializable {
       /** Shard lists synthesized from a legacy inline-`files` root that
         * exist only in this handle's memory. The first commit descending
         * from such a snapshot must materialize them to disk
-        * (`Collection.commitManifest`) or the new root would reference
+        * (`Collection.publish`) or the new root would reference
         * shard names no other handle can resolve. */
       private[core] val inline: Map[String, Seq[String]] = Map.empty,
       /** Generation at which each EVOLVED column first existed
@@ -656,12 +656,15 @@ private[graft] trait CollectionManifestLayer extends Serializable {
     /** Physical (file-resident) name of a logical column. */
     def physName(logical: String): String = renames.getOrElse(logical, logical)
 
-    /** This snapshot with its publish stamp — what a re-read of the
+    /** This snapshot as `generation`, labelled `op`, with publish stamp
+      * `committedAtMs` — `Collection.publish` stamps every commit with
+      * the first two and caches the third, what a re-read of the
       * just-written JSON would parse. */
-    private[core] def withCommitStamp(ts: Long): Manifest =
+    private[core] def stamped(generation: Long, op: Option[String],
+                              committedAtMs: Option[Long] = None): Manifest =
       new Manifest(generation, taskBase, schemaDdl, fills, shards, loader,
-        streams, inline, columnSince, droppedEver, rewrites, partSpec, Some(ts),
-        constraints, op, renames)
+        streams, inline, columnSince, droppedEver, rewrites, partSpec,
+        committedAtMs, constraints, op, renames)
 
     /** All partition paths — served from the root manifest, zero shard IO. */
     def partitionPaths: Seq[String] =
@@ -748,13 +751,11 @@ private[graft] trait CollectionManifestLayer extends Serializable {
 
     /** Same shards + loader, new metadata — the zero-IO commit shape for
       * schema evolution. */
-    def withMeta(generation: Long = generation, taskBase: Long = taskBase,
-                 schemaDdl: String = schemaDdl,
+    def withMeta(schemaDdl: String = schemaDdl,
                  fills: Map[String, String] = fills,
                  columnSince: Map[String, Long] = columnSince,
                  droppedEver: Set[String] = droppedEver,
                  constraints: Map[String, String] = constraints,
-                 op: Option[String] = None,
                  renames: Map[String, String] = renames): Manifest =
       new Manifest(generation, taskBase, schemaDdl, fills, shards, loader,
         streams, inline, columnSince, droppedEver, partSpec = partSpec,
@@ -763,14 +764,13 @@ private[graft] trait CollectionManifestLayer extends Serializable {
     /** New shard table, same loader. `newRewrites` marks THIS commit's
       * content-preserving rewrites — deliberately not inherited;
       * `newPartSpec` (a repartitioning commit) IS inherited onward. */
-    def withShards(generation: Long, taskBase: Long, newShards: Seq[ShardEntry],
+    def withShards(taskBase: Long, newShards: Seq[ShardEntry],
                    newStreams: Map[String, Long] = streams,
                    newRewrites: Set[String] = Set.empty,
-                   newPartSpec: Option[String] = None,
-                   newOp: Option[String] = None): Manifest =
+                   newPartSpec: Option[String] = None): Manifest =
       new Manifest(generation, taskBase, schemaDdl, fills, newShards, loader,
         newStreams, inline, columnSince, droppedEver, newRewrites,
-        newPartSpec.orElse(partSpec), constraints = constraints, op = newOp,
+        newPartSpec.orElse(partSpec), constraints = constraints, op = op,
         renames = renames)
   }
 
@@ -986,7 +986,7 @@ private[graft] trait CollectionManifestLayer extends Serializable {
 
   /** Group a full file list into shard entries, writing any missing shard
     * files. Used by bootstrap paths (create/repair); incremental commits
-    * go through `Collection.commitDelta` and only rewrite touched shards. */
+    * go through `Collection.publish` and only rewrite touched shards. */
   private[core] def shardify(fs: FileSystem, manifestDir: Path,
                              files: Seq[String]): Seq[ShardEntry] =
     files.groupBy(f => prefixOf(parentRel(f))).toSeq.sortBy(_._1).map {

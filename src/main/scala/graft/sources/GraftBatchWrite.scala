@@ -18,9 +18,9 @@ import graft.core.{Collection, GraftNativeCommit, GraftWriterFactory}
   * [[Collection]] write runs): they stream [[InternalRow]]s into their
   * FINAL files under the collection root and report the exact file set
   * in their task commits, and `commit()` publishes ONE atomic manifest
-  * generation via the same commit/conflict/GC path every other writer
-  * uses. This file holds only the DSv2 `Write`, `BatchWrite` and
-  * `StreamingWrite` wrappers around that writer.
+  * generation through `Collection.publish`, the commit/conflict/GC path
+  * every other writer uses. This file holds only the DSv2 `Write`,
+  * `BatchWrite` and `StreamingWrite` wrappers around that writer.
   *
   * Layout parity with [[Collection]]'s writes:
   * [[RequiresDistributionAndOrdering]] demands a RANGE distribution +

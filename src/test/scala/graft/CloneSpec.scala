@@ -178,28 +178,36 @@ class CloneSpec extends AnyFunSuite {
   }
 
   test("tags pin generations against commit-time GC and vacuum") {
-    val root = SparkTestSession.tmp("tag-pin")
-    val c = fresh(root) // retainGenerations = 0: immediate GC on rewrite
-    c.tag("v1")
-    assert(c.tags() == Map("v1" -> c.generation))
-    val taggedGen = c.generation
+    // each commit replaces day 1's file; retainGenerations = 0 would GC
+    // it at commit — with the tag, the tagged snapshot must stay whole
+    val ops: Seq[(String, Collection => Unit)] = Seq(
+      "updateWhere" -> (_.updateWhere("id == 1", Map("v" -> "100.0"))),
+      "dropPartitions" -> (_.dropPartitions("day == 1")),
+      "expirePartitions" -> (_.expirePartitions("2024-01-02 00:00:00")))
+    for ((opName, op) <- ops) {
+      val root = SparkTestSession.tmp("tag-pin")
+      val c = fresh(root) // retainGenerations = 0: immediate GC on rewrite
+      c.tag("v1")
+      assert(c.tags() == Map("v1" -> c.generation))
+      val taggedGen = c.generation
 
-    c.updateWhere("id == 1", Map("v" -> "100.0"))
-    // without the tag, the replaced file would be GC'd at commit;
-    // with it, the tagged snapshot must stay fully readable
-    val v1 = c.snapshotAtTag("v1").select("id", "v").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    assert(v1 == Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)),
-      s"tagged snapshot must survive a rewriting commit: $v1")
-    assert(c.vacuum(graceMs = 0L).isEmpty,
-      "vacuum must not reclaim a tagged generation's files")
+      op(c)
+      // without the tag, the replaced file would be GC'd at commit;
+      // with it, the tagged snapshot must stay fully readable
+      val v1 = c.snapshotAtTag("v1").select("id", "v").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+      assert(v1 == Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)),
+        s"$opName: tagged snapshot must survive the commit: $v1")
+      assert(c.vacuum(graceMs = 0L).isEmpty,
+        s"$opName: vacuum must not reclaim a tagged generation's files")
 
-    // dropping the tag releases the pin
-    c.deleteTag(name = "v1")
-    assert(c.tags().isEmpty)
-    val reclaimed = c.vacuum(graceMs = 0L)
-    assert(reclaimed.nonEmpty, "after deleteTag the old file becomes reclaimable")
-    intercept[Exception] { c.snapshotAt(taggedGen).collect() }
+      // dropping the tag releases the pin
+      c.deleteTag(name = "v1")
+      assert(c.tags().isEmpty)
+      val reclaimed = c.vacuum(graceMs = 0L)
+      assert(reclaimed.nonEmpty, s"$opName: after deleteTag the old file becomes reclaimable")
+      intercept[Exception] { c.snapshotAt(taggedGen).collect() }
+    }
   }
 
   test("tag API contract: immutability, names, unknown lookups") {
@@ -285,23 +293,28 @@ class CloneSpec extends AnyFunSuite {
   }
 
   test("parent rewrites and vacuum pin a live branch's fork-point files") {
-    val c = fresh(SparkTestSession.tmp("branch-pin"))
-    val dev = c.branch("dev")
-    // parent rewrites a partition the branch still references at its
-    // fork point (retainGenerations=0: immediate GC — without the
-    // branch pin this deletes the file out from under the branch)
-    c.updateWhere("id == 1", Map("v" -> "100.0"))
-    assert(rows(c.openBranch("dev", readOnly = true)) ==
-      Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)),
-      "the branch must keep reading its fork-point state")
-    // vacuum honors the same pin and the orphan report agrees
-    assert(c.vacuum(graceMs = 0L).isEmpty)
-    assert(c.fsck().orphanFiles.isEmpty)
-    assert(rows(c.openBranch("dev", readOnly = true)).contains((1L, 1.0)))
-    // dropping the branch releases the pin
-    c.dropBranch("dev")
-    assert(c.vacuum(graceMs = 0L).nonEmpty,
-      "after dropBranch the fork-point file becomes reclaimable")
+    // each parent commit replaces day 1's file, which the branch still
+    // references at its fork point (retainGenerations=0: immediate GC —
+    // without the branch pin this deletes the file out from under it)
+    val ops: Seq[(String, Collection => Unit)] = Seq(
+      "updateWhere" -> (_.updateWhere("id == 1", Map("v" -> "100.0"))),
+      "dropPartitions" -> (_.dropPartitions("day == 1")))
+    for ((opName, op) <- ops) {
+      val c = fresh(SparkTestSession.tmp("branch-pin"))
+      c.branch("dev")
+      op(c)
+      assert(rows(c.openBranch("dev", readOnly = true)) ==
+        Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)),
+        s"$opName: the branch must keep reading its fork-point state")
+      // vacuum honors the same pin and the orphan report agrees
+      assert(c.vacuum(graceMs = 0L).isEmpty, opName)
+      assert(c.fsck().orphanFiles.isEmpty, opName)
+      assert(rows(c.openBranch("dev", readOnly = true)).contains((1L, 1.0)), opName)
+      // dropping the branch releases the pin
+      c.dropBranch("dev")
+      assert(c.vacuum(graceMs = 0L).nonEmpty,
+        s"$opName: after dropBranch the fork-point file becomes reclaimable")
+    }
   }
 
   test("fast-forward promote adopts the branch state: DVs survive dropBranch, " +

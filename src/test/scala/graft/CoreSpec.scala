@@ -460,7 +460,7 @@ class CollectionSpec extends AnyFunSuite {
     val before = c.query().orderBy("id").collect().map(_.getLong(0)).toSeq
 
     // the writer dies after appending its data files, before the commit
-    c.insertUncommitted(df.where(col("id") >= 3))
+    CrashAtPublish(root)(c.insert(df.where(col("id") >= 3)))
 
     assert(c.generation == genBefore, "no manifest was committed")
     assert(c.query().orderBy("id").collect().map(_.getLong(0)).toSeq == before,

@@ -78,7 +78,7 @@ class StreamMultimodalSpec extends AnyFunSuite {
     // replace day 1 wholesale: old day-1 files stay on disk (retention)
     c.insert(mk(Seq((5L, "2024-01-01 10:10:00", 16.0))), MergeStrategy.Replace)
     // crash a writer mid-insert: orphan files, no manifest commit
-    c.insertUncommitted(mk(Seq((9L, "2024-01-03 10:00:00", 64.0))))
+    CrashAtPublish(root)(c.insert(mk(Seq((9L, "2024-01-03 10:00:00", 64.0)))))
 
     // the trap exists: the directory tree holds MORE parquet than the
     // committed snapshot (retained day-1 copy + the orphan)

@@ -431,7 +431,7 @@ class ColumnSkipSpec extends AnyFunSuite {
       e.copy(file = name, rollup = Map.empty, rowTotal = None)
     }
     Collection.writeManifest(fs, mdir,
-      man.withShards(man.generation + 1, man.taskBase, stripped))
+      man.withShards(man.taskBase, stripped).stamped(man.generation + 1, None))
 
     val c2 = Collection.open(spark, root)
     assert(c2.backfillStats() == man.files.size, "all files need backfill")

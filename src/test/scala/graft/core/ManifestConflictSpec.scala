@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{CrashAtPublish, SparkTestSession}
 
 /** The commit protocol's optimistic-concurrency guard: a writer whose
   * target generation was claimed by someone else between its head read
@@ -25,7 +25,7 @@ class ManifestConflictSpec extends AnyFunSuite {
     val fs = Collection.fileSystem(spark, root)
     val dir = new Path(s"$root/${Collection.ManifestDir}")
     val head = c.currentManifest()
-    val losing = head.withShards(head.generation, head.taskBase, Nil)
+    val losing = head.withShards(head.taskBase, Nil) // same generation as the head
     val ex = intercept[java.util.ConcurrentModificationException] {
       Collection.writeManifest(fs, dir, losing) // generation already committed
     }
@@ -44,7 +44,7 @@ class ManifestConflictSpec extends AnyFunSuite {
     val stale = c.currentManifest()
 
     // writer B gets as far as its physical write (partition a=2)...
-    c.insertUncommitted(Seq((2L, 3L, 3.0)).toDF("a", "seq", "v"))
+    CrashAtPublish(root)(c.insert(Seq((2L, 3L, 3.0)).toDF("a", "seq", "v")))
     val fs = Collection.fileSystem(spark, root)
     val bFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/a=2")).toSeq
       .filter(st => Collection.isDataFile(st.getPath.getName))
@@ -58,7 +58,7 @@ class ManifestConflictSpec extends AnyFunSuite {
     // B's commit from the STALE base targets the claimed generation,
     // conflicts, and rebases onto A's head — disjoint partitions, so it
     // lands as generation 3 with BOTH writers' data visible
-    c.commitDelta(stale, bFiles, Set.empty, taskBump = 1L)
+    c.publish(Collection.Commit("write", stale, added = bFiles, taskBump = 1L))
     assert(c.generation == stale.generation + 2)
     assert(c.query().count() == 4)
     assert(c.query("a == 2").count() == 1)
@@ -69,15 +69,40 @@ class ManifestConflictSpec extends AnyFunSuite {
     // rebase: a=3 was touched by A's winning commit
     val aFiles = c.currentManifest().files.filter(_.startsWith("a=3/"))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      c.commitDelta(stale, aFiles, Set.empty, taskBump = 1L)
+      c.publish(Collection.Commit("write", stale, added = aFiles, taskBump = 1L))
     }
     assert(ex.getMessage.contains("both writers touched"), ex.getMessage)
     // and a concurrent schema evolution blocks any rebase
     c.addVariable("w", org.apache.spark.sql.types.DoubleType, fill = Some("0.0"))
     val ex2 = intercept[java.util.ConcurrentModificationException] {
-      c.commitDelta(stale, bFiles, Set.empty, taskBump = 1L)
+      c.publish(Collection.Commit("write", stale, added = bFiles, taskBump = 1L))
     }
     assert(ex2.getMessage.contains("schema evolved"), ex2.getMessage)
+  }
+
+  test("a first-load insert that loses its publish race leaves no data file behind") {
+    val root = SparkTestSession.tmp("graft-first-load-race")
+    val df = Seq((0L, 1L, 1.0), (1L, 2L, 2.0)).toDF("a", "seq", "v")
+    val c = Collection.create(spark, root, df.schema, "seq",
+      SequencePartitioning(Seq("a"), "seq"))
+    val fs = Collection.fileSystem(spark, root)
+    val dir = fs.makeQualified(new Path(s"$root/${Collection.ManifestDir}")).toString + "/"
+    // every claim of this root's next generation is lost, as if another
+    // writer always got there first; other targets publish as usual
+    Collection.registerCommitArbiter("file", new Collection.CommitArbiter {
+      def publish(f: org.apache.hadoop.fs.FileSystem, tmp: Path, tgt: Path): Boolean =
+        if (f.makeQualified(tgt).toString.startsWith(dir)) {
+          try f.delete(tmp, false) catch { case _: Exception => () }
+          false
+        } else Collection.UnsafeSingleWriterArbiter.publish(f, tmp, tgt)
+    })
+    try intercept[java.util.ConcurrentModificationException](c.insert(df))
+    finally Collection.unregisterCommitArbiter("file")
+    val it = fs.listFiles(new Path(root), true)
+    val left = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => Collection.isDataFile(p.getName)).toSeq
+    assert(left.isEmpty, s"the losing insert left its files: $left")
+    assert(c.generation == 0L)
   }
 
   test("TRULY concurrent same-generation writers: exactly one publish wins") {
@@ -104,7 +129,7 @@ class ManifestConflictSpec extends AnyFunSuite {
       val outcome = new Array[Option[Throwable]](2)
       val threads = tags.zipWithIndex.map { case (tag, i) =>
         new Thread(() => {
-          val m = head.withMeta(generation = gen, fills = Map("winner" -> tag))
+          val m = head.withMeta(fills = Map("winner" -> tag)).stamped(gen, None)
           barrier.await()
           outcome(i) =
             try { Collection.writeManifest(fs, dir, m); None }
@@ -201,7 +226,7 @@ class ManifestConflictSpec extends AnyFunSuite {
 
   test("concurrent END-TO-END inserts to disjoint partitions: both land, loser rebases") {
     // full-path race: two handles, two threads, each running insert()
-    // through its own staged write and commitDelta. The hard-link claim
+    // through its own task write and publish. The hard-link claim
     // decides each generation; the loser must rebase (disjoint
     // partitions) and BOTH commits' rows must be visible.
     val root = SparkTestSession.tmp("graft-race-e2e")

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{CrashAtPublish, SparkTestSession}
 
 /** The sharded manifest (r2 verdict #2): the root manifest holds the
   * partition table (O(partitions)); per-subtree FILE lists live in
@@ -161,8 +161,8 @@ class ManifestShardSpec extends AnyFunSuite {
       SequencePartitioning(Seq("a"), "seq"))
     c.insert(df)
     // another writer mid-commit: data + shard files written, root rename
-    // not yet executed (insertUncommitted stops exactly there)
-    c.insertUncommitted(Seq((5L, 7L, 7.0)).toDF("a", "seq", "v"))
+    // not yet executed (a crash at the publish stops exactly there)
+    CrashAtPublish(root)(c.insert(Seq((5L, 7L, 7.0)).toDF("a", "seq", "v")))
     val fs = Collection.fileSystem(spark, root)
     def orphans(): Seq[org.apache.hadoop.fs.Path] = {
       val live = c.currentManifest().files.toSet

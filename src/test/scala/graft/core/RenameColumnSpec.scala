@@ -157,7 +157,8 @@ class RenameColumnSpec extends AnyFunSuite {
     // a genuinely stale base (pre-rename) refuses in the rebase guard
     val pre = c1.manifestAt(c2.generation - 1)
     val e = intercept[java.util.ConcurrentModificationException] {
-      c1.commitDelta(pre, Nil, Set("year=2024/month=1/day=1"), 0L)
+      c1.publish(Collection.Commit("write", pre,
+        removedPartitions = Set("year=2024/month=1/day=1")))
     }
     assert(e.getMessage.contains("schema evolved"))
   }
