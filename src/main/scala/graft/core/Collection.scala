@@ -1636,7 +1636,7 @@ final class Collection private (
     if (touched.isEmpty) return Some(Nil) // state-identical branch head
     // ---- publish as an EDIT commit: a lost race LEAVES the copies in
     // place for [[vacuum]] (the documented materialize crash contract) —
-    // it must NOT delete them (r16 advice, medium): adopted destinations
+    // it must NOT delete them: adopted destinations
     // are deterministic (the branch's own rel names), so when two drivers
     // promote the SAME branch concurrently the loser's "invisible" copies
     // are the exact files the winner's committed manifest now references
